@@ -209,7 +209,7 @@ def _task_time_probe(spark):
     if not base:
         return lambda: None
     try:
-        with urllib.request.urlopen(base + "/api/v1/applications") as r:
+        with urllib.request.urlopen(base + "/api/v1/applications", timeout=5) as r:
             app_id = _json.load(r)[0]["id"]
     except Exception:  # noqa: BLE001 — UI disabled or not ready
         return lambda: None
@@ -218,7 +218,7 @@ def _task_time_probe(spark):
 
     def delta():
         try:
-            with urllib.request.urlopen(url) as r:
+            with urllib.request.urlopen(url, timeout=5) as r:
                 stages = _json.load(r)
         except Exception:  # noqa: BLE001
             return None

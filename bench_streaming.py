@@ -17,6 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+PHASES = ("latestOffset", "getBatch", "queryPlanning", "addBatch", "walCommit")
+
 
 def measure_streaming(spark, sf_dir: str) -> dict:
     """Drain the synthesized syslog stream and report wall time,
@@ -38,7 +40,10 @@ def measure_streaming(spark, sf_dir: str) -> dict:
     watermark has closed, so windows inside the final watermark hour
     are never flushed. That is fine here — the throughput headline
     (``rows_per_sec``) is input-row based; output_rows is reported
-    only as a sanity signal, not a window count."""
+    only as a sanity signal, not a window count.
+
+    ``phase_ms`` splits the headline drain by micro-batch phase: each
+    ``durationMs`` phase summed over the drain's progress reports."""
     from bigdata_logs_spark.registry import _stream_source_dir
     from bigdata_logs_spark.streaming import (
         read_ssh_stream,
@@ -49,17 +54,20 @@ def measure_streaming(spark, sf_dir: str) -> dict:
     src = _stream_source_dir(spark, sf_dir)
     n_rows = spark.read.text(src).count()
 
-    def drain(sink: str) -> float:
+    def drain(sink: str) -> tuple[float, list]:
         parsed = read_ssh_stream(spark, src)
         counts = windowed_event_counts(
             parsed, window="1 hour", watermark="1 hour"
         )
         t0 = time.perf_counter()
-        run_stream_to_memory(counts, sink, output_mode="append")
-        return time.perf_counter() - t0
+        progress = run_stream_to_memory(counts, sink, output_mode="append")
+        return time.perf_counter() - t0, progress
 
-    cold = drain("bench_stream_warmup")
-    wall = min(drain("bench_stream_counts"), drain("bench_stream_counts2"))
+    cold, _ = drain("bench_stream_warmup")
+    wall, progress = min(
+        drain("bench_stream_counts"), drain("bench_stream_counts2"),
+        key=lambda r: r[0],
+    )
     out_rows = spark.table("bench_stream_counts").count()
     return {
         "input_rows": n_rows,
@@ -67,6 +75,10 @@ def measure_streaming(spark, sf_dir: str) -> dict:
         "wall_sec": round(wall, 4),
         "cold_wall_sec": round(cold, 4),
         "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
+        "phase_ms": {
+            ph: sum(p["durationMs"].get(ph, 0) for p in progress)
+            for ph in PHASES
+        },
     }
 
 

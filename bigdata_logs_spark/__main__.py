@@ -91,6 +91,7 @@ def cmd_dashboard(args) -> int:
         streaming_latest_per_ip,
         windowed_event_counts,
     )
+    from bigdata_logs_spark.streaming.ingest import _drain
 
     spark = _spark("dashboard")
     parsed = read_ssh_stream(spark, args.input)
@@ -201,19 +202,18 @@ def cmd_dashboard(args) -> int:
             bar_chart(flat, labels, metric)
 
     if args.once:
-        drained = True
-        for q in queries:
-            drained = q.awaitTermination(args.timeout) and drained
-        stragglers = [q for q in queries if q.isActive]
-        for q in stragglers:
-            q.stop()
+        timed_out = None
+        try:
+            for q in queries:
+                _drain(q)
+        except TimeoutError as e:
+            timed_out = e
+        finally:
+            for q in queries:
+                q.stop()
         render()
-        if not drained or stragglers:
-            print(
-                f"warning: drain timed out after {args.timeout}s; "
-                "panels above are partial",
-                file=sys.stderr,
-            )
+        if timed_out:
+            print(f"warning: {timed_out}; panels above are partial", file=sys.stderr)
             return 1
         return 0
     deadline = time.monotonic() + args.duration if args.duration else None
@@ -400,7 +400,6 @@ def main(argv: list[str] | None = None) -> int:
     pd.add_argument("--duration", type=float, default=0.0, help="stop after N seconds (0 = until Ctrl-C)")
     pd.add_argument("--threshold", type=int, default=5, help="brute-force fail threshold")
     pd.add_argument("--rows", type=int, default=15)
-    pd.add_argument("--timeout", type=int, default=120, help="--once drain timeout (sec)")
     pd.add_argument(
         "--once",
         action="store_true",

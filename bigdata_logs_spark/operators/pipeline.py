@@ -826,9 +826,14 @@ def corpus_dedup_funnel(docs: DataFrame) -> DataFrame:
         comp = DD.near_dup_components(docs, threshold=0.5).select(
             "doc_id", "component"
         )
+    except BaseException as e:  # noqa: BLE001 — re-raised below
+        errors.insert(0, e)
     finally:
         for w in workers:
             w.join()
+    # every failure surfaces: the main path's first, then the workers'
+    if len(errors) > 1:
+        raise BaseExceptionGroup("corpus_dedup_funnel failed", errors)
     if errors:
         raise errors[0]
     s3 = (

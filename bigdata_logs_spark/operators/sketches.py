@@ -29,7 +29,7 @@ batches; the batch shape here is the calibration harness.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_logs_spark.operators.textops import with_tokens
@@ -51,6 +51,13 @@ def _poly_hash_expr(col: str) -> str:
         f"aggregate(split({col}, ''), 0L, "
         f"(acc, ch) -> (acc * 31 + ascii(ch)) % {CMS_P})"
     )
+
+
+def cms_cells(h: Column) -> Column:
+    """The d (row, bucket) counter cells of hash ``h``, one per row:
+    ``posexplode`` into columns ``row`` and ``bucket``."""
+    rows = [(h * F.lit(a) + F.lit(b)) % CMS_P % CMS_W for a, b in zip(CMS_A, CMS_B)]
+    return F.posexplode(F.array(*rows)).alias("row", "bucket")
 
 
 def cms_heavy_hitters(docs: DataFrame, top_n: int = 20) -> DataFrame:
@@ -76,18 +83,7 @@ def cms_heavy_hitters(docs: DataFrame, top_n: int = 20) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("exact_count"))
     )
     hashed = counts.withColumn("h", F.expr(_poly_hash_expr("token")))
-    cells = hashed.select(
-        "token",
-        "exact_count",
-        F.posexplode(
-            F.array(
-                *[
-                    ((F.col("h") * F.lit(a) + F.lit(b)) % CMS_P % CMS_W)
-                    for a, b in zip(CMS_A, CMS_B)
-                ]
-            )
-        ).alias("row", "bucket"),
-    )
+    cells = hashed.select("token", "exact_count", cms_cells(F.col("h")))
     counters = cells.groupBy("row", "bucket").agg(
         F.sum("exact_count").alias("counter")
     )
@@ -316,6 +312,13 @@ BLOOM_A = (13, 19, 23, 31)
 BLOOM_B = (7, 61, 97, 131)
 
 
+def bloom_positions(h: Column) -> Column:
+    """The k bit positions of hash ``h``, as an array."""
+    return F.array(
+        *[(h * F.lit(a) + F.lit(b)) % CMS_P % BLOOM_M for a, b in zip(BLOOM_A, BLOOM_B)]
+    )
+
+
 def bloom_membership(
     events: DataFrame, member_type: str = "purchase"
 ) -> DataFrame:
@@ -350,13 +353,7 @@ def bloom_membership(
     probes = keyed.select("user_id").distinct()
 
     def positions(df: DataFrame) -> DataFrame:
-        h = F.expr(kmv_hash_expr("user_id"))
-        pos = F.array(
-            *[
-                ((h * F.lit(a) + F.lit(b)) % CMS_P % BLOOM_M)
-                for a, b in zip(BLOOM_A, BLOOM_B)
-            ]
-        )
+        pos = bloom_positions(F.expr(kmv_hash_expr("user_id")))
         return df.select("user_id", F.explode(pos).alias("bit"))
 
     bits = positions(members).select("bit").distinct()

@@ -8286,13 +8286,7 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     beside the exact batch counts."""
     from pyspark.sql import functions as F
 
-    from bigdata_logs_spark.operators.sketches import (
-        CMS_A,
-        CMS_B,
-        CMS_P,
-        CMS_W,
-        _poly_hash_expr,
-    )
+    from bigdata_logs_spark.operators.sketches import _poly_hash_expr, cms_cells
     from bigdata_logs_spark.streaming.ingest import (
         read_ssh_stream,
         streaming_cms_state,
@@ -8311,16 +8305,7 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("exact_count"))
     )
     cells = exact.withColumn("h", F.expr(_poly_hash_expr("ip"))).select(
-        "ip",
-        "exact_count",
-        F.posexplode(
-            F.array(
-                *[
-                    ((F.col("h") * F.lit(a) + F.lit(b)) % CMS_P % CMS_W)
-                    for a, b in zip(CMS_A, CMS_B)
-                ]
-            )
-        ).alias("row", "bucket"),
+        "ip", "exact_count", cms_cells(F.col("h"))
     )
     return (
         cells.join(F.broadcast(counters), ["row", "bucket"])

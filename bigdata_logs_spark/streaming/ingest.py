@@ -25,8 +25,13 @@ is what makes these operators viable on an unbounded 100 TB/day feed.
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from bigdata_logs_spark.operators.enrich import with_event_time
 from bigdata_logs_spark.operators.parse import parse_ssh_lines
@@ -122,57 +127,65 @@ def event_drift_counts(
     )
 
 
+# One deadline for every drain in the package: a drain still running
+# at this point raises instead of handing back a partial sink.
+DRAIN_DEADLINE_SEC = 180
+_POLL_SEC = 0.1
+
+
+def _drain(q: StreamingQuery) -> list:
+    """Wait for an availableNow query to consume its backlog, stop it,
+    and return its per-trigger progress reports (``q.recentProgress``).
+    This is the only place the package waits on a streaming query.
+
+    The drain ends when the query terminates by itself, or once the
+    last completed batch advanced no source offset (``startOffset ==
+    endOffset`` for every source). Under availableNow such a no-data
+    batch runs only after the backlog is read; a query holding
+    processing-time timeouts (``stateful_alerts``) keeps scheduling
+    them forever, and our stateful operators emit on data, never on
+    timeout, so stopping there loses nothing. Row counts are no stop
+    signal: an empty file in the backlog is a zero-row batch that
+    still advances the offset.
+
+    Raises ``TimeoutError`` at ``DRAIN_DEADLINE_SEC``. The query is
+    stopped on every path."""
+    deadline = time.monotonic() + DRAIN_DEADLINE_SEC
+    try:
+        while not q.awaitTermination(_POLL_SEC):
+            p = q.lastProgress
+            if p is not None and all(
+                s["startOffset"] == s["endOffset"] for s in p["sources"]
+            ):
+                break
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"streaming query {q.name or q.id} did not drain "
+                    f"within {DRAIN_DEADLINE_SEC}s"
+                )
+    finally:
+        q.stop()
+    return q.recentProgress
+
+
 def run_stream_to_memory(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "complete",
-    timeout_sec: int = 120,
-) -> None:
-    """Run a streaming query to a memory sink until all currently
-    available input is processed (availableNow), then stop. The result
-    is readable as ``spark.table(name)``.
-
-    Stateless and watermark-only queries self-terminate under
-    availableNow. Queries holding state with a PROCESSING-TIME
-    timeout (``stateful_alerts``) do not: the engine keeps scheduling
-    empty no-data micro-batches forever so pending timeouts can fire,
-    and the drain would sit at ``awaitTermination(timeout_sec)`` every
-    single call (observed: ~1 empty batch/s for the full 120 s). The
-    poll below stops the query at the first empty batch after data
-    flowed — by then every available row is in the sink, and our
-    stateful operators emit on DATA, never on timeout (timeouts only
-    evict state), so nothing is lost."""
-    import time as _time
-
-    q = (
+    df: DataFrame, name: str, output_mode: str = "complete"
+) -> list:
+    """Drain a streaming query into a memory sink (availableNow); the
+    result is readable as ``spark.table(name)``. Returns the drain's
+    progress reports."""
+    return _drain(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
-    deadline = _time.monotonic() + timeout_sec
-    saw_data = False
-    while q.isActive and _time.monotonic() < deadline:
-        if q.awaitTermination(1):
-            break
-        p = q.lastProgress
-        if p is None:
-            continue
-        if p.get("numInputRows", 0) > 0:
-            saw_data = True
-        elif saw_data or p.get("batchId", 0) > 0:
-            break  # backlog drained; only timeout no-data batches remain
-    if q.isActive:
-        q.stop()
 
 
 def stream_parsed_to_parquet(
-    parsed: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
+    parsed: DataFrame, store_dir: str, checkpoint_dir: str
+) -> list:
     """Exactly-once streaming ETL into a parquet table (ST-11): the
     raw-log stream lands as query-ready columnar files.
 
@@ -190,7 +203,7 @@ def stream_parsed_to_parquet(
     bronze layer; downstream compaction (S-10) and CDC upserts (S-9)
     take it from there.
     """
-    q = (
+    return _drain(
         parsed.writeStream.format("parquet")
         .option("path", store_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -198,9 +211,6 @@ def stream_parsed_to_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
 
 
 def stateful_alerts(
@@ -514,9 +524,53 @@ def repeat_offender_pairs(
     ).select("ip", "first_ts", "repeat_ts")
 
 
-def streaming_kmv_state(
-    parsed: DataFrame, state_dir: str, k: int = 16, timeout_sec: int = 120
-) -> None:
+def _fold_into_state(stream: DataFrame, state_dir: str, increment, merge) -> None:
+    """Drain ``stream`` into a mergeable parquet state table at
+    ``state_dir`` (the streaming sketches ST-13 and ST-15..18).
+
+    Each micro-batch contributes ``increment(batch)``; it is unioned
+    with the current state and ``merge`` collapses the union into the
+    new state. The swap is the S-10 compaction discipline: write-tmp
+    -> validate ``_SUCCESS`` -> rename, so a reader never sees a
+    half-written state. ``merge`` must be associative and commutative
+    over increments, which makes the drained state independent of how
+    the feed splits into micro-batches; that is what earns these
+    streaming queries a full hash-match oracle.
+
+    Every call is a fresh drain: stale state or a stale checkpoint
+    would make availableNow skip already-seen files, and the
+    checkpoint has no replay value afterwards, so only the state dir
+    remains on disk between calls."""
+    spark = stream.sparkSession
+    ckpt, tmp = state_dir + "__ckpt", state_dir + "__tmp"
+    for d in (state_dir, ckpt, tmp):
+        if os.path.exists(d):
+            shutil.rmtree(d)
+
+    def step(batch: DataFrame, _batch_id: int) -> None:
+        upd = increment(batch)
+        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+            upd = spark.read.parquet(state_dir).unionByName(upd)
+        merge(upd).write.mode("overwrite").parquet(tmp)
+        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            raise RuntimeError(f"state write to {state_dir} did not complete")
+        if os.path.exists(state_dir):
+            shutil.rmtree(state_dir)
+        os.rename(tmp, state_dir)
+
+    try:
+        _drain(
+            stream.writeStream.foreachBatch(step)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+    finally:
+        for d in (ckpt, tmp):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def streaming_kmv_state(parsed: DataFrame, state_dir: str, k: int = 16) -> None:
     """ST-13: streaming KMV distinct-count sketch — maintain, per
     event tag, the k smallest 52-bit md5 hashes of the source IPs
     seen so far, merged incrementally by a ``foreachBatch`` job into
@@ -534,73 +588,34 @@ def streaming_kmv_state(
     the bounded-memory property that lets a 100 TB/day feed keep a
     live distinct-cardinality estimate per key without a
     distinct-set blowup. Each micro-batch merge unions the batch's
-    (event, h) pairs with the current state, dedups, keeps the k
-    smallest per event, and swaps the state dir via
-    write-tmp → validate → rename (the S-10 compaction discipline:
-    the reader never sees a half-written state).
+    (event, h) pairs with the current state, dedups, and keeps the k
+    smallest per event (``_fold_into_state``).
     """
-    import os
-    import shutil
+    from pyspark.sql import Window
 
-    spark = parsed.sparkSession
     from bigdata_logs_spark.operators.sketches import kmv_hash_expr
 
     hashed = (
         parsed.where(F.col("ip").isNotNull())
         .select("event", F.expr(kmv_hash_expr("ip")).alias("h"))
     )
-    # Fresh deterministic drain on every call: stale state OR a stale
-    # checkpoint would make availableNow skip already-seen files.
-    for d in (state_dir, state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        upd = batch
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            upd = spark.read.parquet(state_dir).unionByName(upd)
-        rn = F.row_number().over(Window.partitionBy("event").orderBy("h"))
-        # one dedup AFTER the union subsumes a per-batch pre-dedup
-        new_state = (
-            upd.dropDuplicates(["event", "h"])
-            .withColumn("rn", rn)
-            .where(F.col("rn") <= k)
-            .drop("rn")
-        )
-        tmp = state_dir + "__tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError("KMV state write did not complete")
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
-
-    q = (
-        hashed.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", state_dir + "__ckpt"
-        )
-        .start()
+    rn = F.row_number().over(Window.partitionBy("event").orderBy("h"))
+    # one dedup AFTER the union subsumes a per-batch pre-dedup
+    _fold_into_state(
+        hashed,
+        state_dir,
+        lambda batch: batch,
+        lambda upd: upd.dropDuplicates(["event", "h"])
+        .withColumn("rn", rn)
+        .where(F.col("rn") <= k)
+        .drop("rn"),
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    # The checkpoint has no replay value here (every call re-drains
-    # from scratch); drop it so only the registered state dir remains
-    # on disk between calls.
-    for d in (state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def streaming_lsh_dedup_state(
     doc_stream: DataFrame,
     state_dir: str,
     threshold: float = 0.05,
-    timeout_sec: int = 180,
     occupancy_cap: int | None = None,
 ) -> DataFrame:
     """ST-14: streaming incremental MinHash-LSH deduplication — the
@@ -646,9 +661,6 @@ def streaming_lsh_dedup_state(
     append-mode parquet (single writer; the final read happens after
     the drain completes).
     """
-    import os
-    import shutil
-
     spark = doc_stream.sparkSession
     from bigdata_logs_spark.operators.dedup import (
         _minhash_signature_rows,
@@ -744,16 +756,15 @@ def streaming_lsh_dedup_state(
             .parquet(pair_dir)
         )
 
-    q = (
-        doc_stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_dir + "__ckpt")
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    shutil.rmtree(state_dir + "__ckpt", ignore_errors=True)
+    try:
+        _drain(
+            doc_stream.writeStream.foreachBatch(merge)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", state_dir + "__ckpt")
+            .start()
+        )
+    finally:
+        shutil.rmtree(state_dir + "__ckpt", ignore_errors=True)
     if os.path.exists(os.path.join(pair_dir, "_SUCCESS")):
         return spark.read.parquet(pair_dir).orderBy("doc_a", "doc_b")
     return spark.createDataFrame(
@@ -762,10 +773,7 @@ def streaming_lsh_dedup_state(
 
 
 def streaming_lsh_state_occupancy(
-    doc_stream: DataFrame,
-    state_dir: str,
-    timeout_sec: int = 180,
-    cap: int = 64,
+    doc_stream: DataFrame, state_dir: str, cap: int = 64
 ) -> DataFrame:
     """ST-14's operational gauge: drain the feed through the
     (uncapped, hash-certified) LSH dedup, then report the signature
@@ -794,19 +802,16 @@ def streaming_lsh_state_occupancy(
     The report itself is one digest-only aggregation over that state.
     """
     spark = doc_stream.sparkSession
-    streaming_lsh_dedup_state(
-        doc_stream, state_dir, timeout_sec=timeout_sec, occupancy_cap=cap
-    )
-    import os
-
+    streaming_lsh_dedup_state(doc_stream, state_dir, occupancy_cap=cap)
     sig_dir = os.path.join(state_dir, "sigs")
     if os.path.exists(os.path.join(sig_dir, "_SUCCESS")):
         sigs = spark.read.parquet(sig_dir)
     else:
-        # empty feed / timed-out drain: no state was ever written —
+        # empty feed: no batch ran, so no state was ever written —
         # report the deterministic empty-state row (n_buckets=0,
         # NULL extrema) instead of crashing on a missing path (the
-        # same guard the pairs read in streaming_lsh_dedup_state has)
+        # same guard the pairs read in streaming_lsh_dedup_state has).
+        # A drain that misses its deadline raises and never gets here.
         sigs = spark.createDataFrame([], "doc_id bigint, band int, sig string")
     occ = sigs.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("n"))
     # integer DIV, not float /2: exact BIGINT at any occupancy
@@ -823,9 +828,7 @@ def streaming_lsh_state_occupancy(
     )
 
 
-def streaming_cms_state(
-    parsed: DataFrame, state_dir: str, timeout_sec: int = 120
-) -> None:
+def streaming_cms_state(parsed: DataFrame, state_dir: str) -> None:
     """ST-15: streaming Count-Min Sketch maintenance — keep the d x w
     counter table of source-IP frequencies live by summing each
     micro-batch's (row, bucket) increments into a parquet state table.
@@ -841,72 +844,28 @@ def streaming_cms_state(
     State is <= d*w = 4*128 BIGINT cells REGARDLESS of key cardinality
     or feed length — the bounded-memory heavy-hitter counter a
     100 TB/day feed can keep per key family. Merge discipline is the
-    S-10 swap: write-tmp -> validate -> rename, so a reader never
-    sees a half-written counter table.
+    S-10 swap of ``_fold_into_state``.
     """
-    import os
-    import shutil
+    from bigdata_logs_spark.operators.sketches import _poly_hash_expr, cms_cells
 
-    from bigdata_logs_spark.operators.sketches import (
-        CMS_A,
-        CMS_B,
-        CMS_P,
-        CMS_W,
-        _poly_hash_expr,
+    cells = (
+        parsed.where(F.col("ip").isNotNull())
+        .withColumn("h", F.expr(_poly_hash_expr("ip")))
+        .select(cms_cells(F.col("h")))
     )
-
-    spark = parsed.sparkSession
-    hashed = parsed.where(F.col("ip").isNotNull()).withColumn(
-        "h", F.expr(_poly_hash_expr("ip"))
-    )
-    cells = hashed.select(
-        F.posexplode(
-            F.array(
-                *[
-                    ((F.col("h") * F.lit(a) + F.lit(b)) % CMS_P % CMS_W)
-                    for a, b in zip(CMS_A, CMS_B)
-                ]
-            )
-        ).alias("row", "bucket")
-    )
-    for d in (state_dir, state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        inc = batch.groupBy("row", "bucket").agg(
+    _fold_into_state(
+        cells,
+        state_dir,
+        lambda batch: batch.groupBy("row", "bucket").agg(
             F.count(F.lit(1)).alias("counter")
-        )
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            inc = spark.read.parquet(state_dir).unionByName(inc)
-        new_state = inc.groupBy("row", "bucket").agg(
+        ),
+        lambda upd: upd.groupBy("row", "bucket").agg(
             F.sum("counter").alias("counter")
-        )
-        tmp = state_dir + "__tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError("CMS state write did not complete")
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
-
-    q = (
-        cells.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_dir + "__ckpt")
-        .start()
+        ),
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    for d in (state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d, ignore_errors=True)
 
 
-def streaming_hll_state(
-    parsed: DataFrame, state_dir: str, timeout_sec: int = 120
-) -> None:
+def streaming_hll_state(parsed: DataFrame, state_dir: str) -> None:
     """ST-16: streaming HyperLogLog maintenance — keep SK-4's
     64-register distinct-source-IP sketch live by MAX-merging each
     micro-batch's (register, rho) observations into a parquet state
@@ -922,11 +881,8 @@ def streaming_hll_state(
     HLL registers, not raw keys.
 
     State is <= m = 64 BIGINT rows regardless of key cardinality or
-    feed length. Merge discipline is the S-10 swap: write-tmp ->
-    validate -> rename."""
-    import os
-    import shutil
-
+    feed length. Merge discipline is the S-10 swap of
+    ``_fold_into_state``."""
     from bigdata_logs_spark.operators.sketches import (
         HLL_FIELD,
         HLL_FIELD_MASK,
@@ -934,7 +890,6 @@ def streaming_hll_state(
         kmv_hash_expr,
     )
 
-    spark = parsed.sparkSession
     hashed = parsed.where(F.col("ip").isNotNull()).select(
         F.expr(kmv_hash_expr("ip")).alias("h")
     )
@@ -945,41 +900,15 @@ def streaming_hll_state(
         F.expr(f"shiftright(h, {HLL_FIELD})").alias("idx"),
         F.expr(f"h & {HLL_FIELD_MASK}").alias("w"),
     ).select("idx", rho.alias("rho"))
-
-    for d in (state_dir, state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        inc = batch.groupBy("idx").agg(F.max("rho").alias("r"))
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            inc = spark.read.parquet(state_dir).unionByName(inc)
-        new_state = inc.groupBy("idx").agg(F.max("r").alias("r"))
-        tmp = state_dir + "__tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError("HLL state write did not complete")
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
-
-    q = (
-        obs.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_dir + "__ckpt")
-        .start()
+    _fold_into_state(
+        obs,
+        state_dir,
+        lambda batch: batch.groupBy("idx").agg(F.max("rho").alias("r")),
+        lambda upd: upd.groupBy("idx").agg(F.max("r").alias("r")),
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    for d in (state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d, ignore_errors=True)
 
 
-def streaming_length_histogram_state(
-    parsed: DataFrame, state_dir: str, timeout_sec: int = 120
-) -> None:
+def streaming_length_histogram_state(parsed: DataFrame, state_dir: str) -> None:
     """ST-17: streaming message-length histogram maintenance — a
     256-bin fixed-width histogram of parsed SSH message lengths
     (payload-size drift is a classic ops observable: a new log
@@ -998,48 +927,19 @@ def streaming_length_histogram_state(
     like ST-16's MAX registers, which the oracle does not assume).
 
     State is <= 256 BIGINT rows regardless of feed length. Merge
-    discipline is the S-10 swap: write-tmp -> validate -> rename."""
-    import os
-    import shutil
-
-    spark = parsed.sparkSession
+    discipline is the S-10 swap of ``_fold_into_state``."""
     bins = parsed.where(F.col("message").isNotNull()).select(
         F.expr("least(length(message), 1023) div 4").alias("bin")
     )
-    for d in (state_dir, state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        inc = batch.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            inc = spark.read.parquet(state_dir).unionByName(inc)
-        new_state = inc.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
-        tmp = state_dir + "__tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError("histogram state write did not complete")
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
-
-    q = (
-        bins.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_dir + "__ckpt")
-        .start()
+    _fold_into_state(
+        bins,
+        state_dir,
+        lambda batch: batch.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")),
+        lambda upd: upd.groupBy("bin").agg(F.sum("cnt").alias("cnt")),
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    for d in (state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d, ignore_errors=True)
 
 
-def streaming_bloom_state(
-    parsed: DataFrame, state_dir: str, timeout_sec: int = 120
-) -> None:
+def streaming_bloom_state(parsed: DataFrame, state_dir: str) -> None:
     """ST-18: streaming Bloom-filter maintenance — SK-5's m=1024-bit,
     k=4-hash filter over the source IPs seen so far, kept live by
     union-DISTINCT-merging each micro-batch's set-bit positions into a
@@ -1055,56 +955,16 @@ def streaming_bloom_state(
     CMS counters) is safe to maintain under at-least-once delivery.
 
     State is <= m = 1024 one-column rows regardless of key
-    cardinality or feed length. Merge discipline is the S-10 swap:
-    write-tmp -> validate -> rename."""
-    import os
-    import shutil
+    cardinality or feed length. Merge discipline is the S-10 swap of
+    ``_fold_into_state``."""
+    from bigdata_logs_spark.operators.sketches import bloom_positions, kmv_hash_expr
 
-    from bigdata_logs_spark.operators.sketches import (
-        BLOOM_A,
-        BLOOM_B,
-        BLOOM_M,
-        CMS_P,
-        kmv_hash_expr,
-    )
-
-    spark = parsed.sparkSession
-    h = F.expr(kmv_hash_expr("ip"))
-    pos = F.array(
-        *[
-            ((h * F.lit(a) + F.lit(b)) % CMS_P % BLOOM_M)
-            for a, b in zip(BLOOM_A, BLOOM_B)
-        ]
-    )
     bits = parsed.where(F.col("ip").isNotNull()).select(
-        F.explode(pos).alias("bit")
+        F.explode(bloom_positions(F.expr(kmv_hash_expr("ip")))).alias("bit")
     )
-    for d in (state_dir, state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        inc = batch.select("bit").distinct()
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            inc = spark.read.parquet(state_dir).unionByName(inc)
-        new_state = inc.distinct()
-        tmp = state_dir + "__tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError("bloom state write did not complete")
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
-
-    q = (
-        bits.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_dir + "__ckpt")
-        .start()
+    _fold_into_state(
+        bits,
+        state_dir,
+        lambda batch: batch.select("bit").distinct(),
+        lambda upd: upd.distinct(),
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-    for d in (state_dir + "__ckpt", state_dir + "__tmp"):
-        if os.path.exists(d):
-            shutil.rmtree(d, ignore_errors=True)

@@ -106,9 +106,13 @@ def test_explain_prints_formatted_plan(capsys, spark, sf_dir):
     assert main(["explain", "nope"]) == 2
 
 
-def test_dashboard_once_renders_all_panels(capsys, tmp_path, spark, events):
+def test_dashboard_once_renders_all_panels(
+    capsys, monkeypatch, tmp_path, spark, events
+):
     """`dashboard --once` = the reference's Streamlit page as one
-    terminal frame: drain the stream, render every panel, exit 0."""
+    terminal frame: drain the stream, render every panel, exit 0. A
+    drain that misses its deadline still renders, warns that the
+    panels are partial, stops every query and exits 1."""
     from bigdata_logs_spark.operators.ssh_synth import synthesize_ssh_lines
 
     logdir = tmp_path / "dashlogs"
@@ -124,6 +128,18 @@ def test_dashboard_once_renders_all_panels(capsys, tmp_path, spark, events):
     assert "brute-force hits" in out
     # panels actually rendered rows, not empty headers
     assert "only showing top" in out or "|" in out
+
+    from bigdata_logs_spark.streaming import ingest
+
+    def deadline_missed(q):
+        raise TimeoutError(f"streaming query {q.name} did not drain")
+
+    monkeypatch.setattr(ingest, "_drain", deadline_missed)
+    assert main(["dashboard", "--input", str(logdir), "--once"]) == 1
+    captured = capsys.readouterr()
+    assert "event volume per window" in captured.out
+    assert "panels above are partial" in captured.err
+    assert spark.streams.active == []
 
 
 def test_detect_prints_all_four_anomaly_sections(capsys, spark, sf_dir):

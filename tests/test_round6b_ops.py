@@ -406,6 +406,30 @@ class TestCorpusDedupFunnel:
         toks = [out[s].n_tokens for s in sorted(out)]
         assert toks == sorted(toks, reverse=True)
 
+    def test_every_failure_surfaces(self, spark):
+        """The main path and both cache-force threads read one poisoned
+        text column: all three errors are raised together, none is
+        dropped."""
+        import pytest
+        from pyspark.sql.functions import udf
+
+        from bigdata_logs_spark.caching import release_caches
+        from bigdata_logs_spark.operators import pipeline as PL
+
+        @udf("string")
+        def poison(_):
+            raise ValueError("poisoned text")
+
+        docs = spark.range(3).select(
+            F.col("id").alias("doc_id"), poison("id").alias("text")
+        )
+        try:
+            with pytest.raises(ExceptionGroup) as ei:
+                PL.corpus_dedup_funnel(docs)
+        finally:
+            release_caches()
+        assert len(ei.value.exceptions) == 3
+
 
 class TestAmsF2:
     def test_single_key_estimator_is_exact(self, spark):

@@ -26,6 +26,13 @@ from bigdata_logs_spark.streaming import (
 from bigdata_logs_spark.streaming.ingest import SEVERITY_DIM
 
 
+@pytest.fixture(autouse=True)
+def no_leaked_queries(spark):
+    """Every drain stops its query: none outlives the test."""
+    yield
+    assert spark.streams.active == []
+
+
 @pytest.fixture(scope="module")
 def stream_dir(spark, events, tmp_path_factory):
     """Synthesized syslog lines written as TWO file batches (the file
@@ -160,14 +167,7 @@ def test_stateful_alerts_edge_triggered_across_batches(spark, stream_dir):
     # batches in state
     parsed_stream = read_ssh_stream(spark, stream_dir, max_files_per_trigger=1)
     alerts = stateful_alerts(parsed_stream, threshold=5)
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName("t_alerts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_stream_to_memory(alerts, "t_alerts", output_mode="append")
     got = spark.table("t_alerts").collect()
 
     batch = parse_ssh_lines(spark.read.text(stream_dir))
@@ -230,14 +230,7 @@ def test_append_mode_watermark_contract(spark, events, tmp_path):
         window="1 hour",
         watermark="1 hour",
     )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("t_late")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_stream_to_memory(counts, "t_late", output_mode="append")
     rows = spark.table("t_late").collect()
     assert rows
 
@@ -566,7 +559,91 @@ def test_streaming_lsh_occupancy_empty_feed_reports_not_crashes(
         .json(str(src))
     )
     row = streaming_lsh_state_occupancy(
-        stream, str(tmp_path / "state_empty"), timeout_sec=60
+        stream, str(tmp_path / "state_empty")
     ).collect()[0]
     assert row.n_buckets == 0
     assert row.max_occupancy is None
+
+
+def test_empty_files_mid_backlog_drain_every_row(spark, events, tmp_path):
+    """An empty file is a zero-row micro-batch that still advances the
+    source offset; it must not end the drain. One file per trigger,
+    three data files with six empty files between each pair."""
+    lines = [
+        r["value"] for r in synthesize_ssh_lines(events).select("value").collect()
+    ]
+    d = tmp_path / "gappy_src"
+    d.mkdir()
+    names = []
+    for i in range(3):
+        names.append(f"{len(names):02d}_data.log")
+        (d / names[-1]).write_text("\n".join(lines[i::3]) + "\n")
+        if i < 2:
+            for _ in range(6):
+                names.append(f"{len(names):02d}_empty.log")
+                (d / names[-1]).write_text("")
+    # the file source orders its backlog by modification time
+    for i, name in enumerate(names):
+        os.utime(d / name, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    parsed = read_ssh_stream(spark, str(d), max_files_per_trigger=1)
+    progress = run_stream_to_memory(
+        parsed.select("event"), "t_gappy", output_mode="append"
+    )
+    raw = spark.read.text(str(d))
+    assert spark.table("t_gappy").count() == parse_ssh_lines(raw).count()
+    assert sum(p["numInputRows"] for p in progress) == raw.count()
+
+
+def test_drain_past_deadline_raises_and_stops_query(spark, tmp_path, monkeypatch):
+    """A drain that cannot finish by the deadline raises instead of
+    returning a partial sink, and leaves no active query behind."""
+    import time
+
+    from bigdata_logs_spark.streaming import ingest
+
+    src = tmp_path / "slow_src"
+    src.mkdir()
+    (src / "one.log").write_text("x\n")
+
+    @F.udf("string")
+    def slow(v):
+        time.sleep(3)
+        return v
+
+    monkeypatch.setattr(ingest, "DRAIN_DEADLINE_SEC", 0.5)
+    stream = spark.readStream.text(str(src)).select(slow("value").alias("v"))
+    with pytest.raises(TimeoutError):
+        run_stream_to_memory(stream, "t_slow", output_mode="append")
+    assert spark.streams.active == []
+
+
+def test_only_drain_waits_on_streaming_queries():
+    """``ingest._drain`` is the one place that waits on a streaming
+    query, so every drain shares its stop rule, deadline and cleanup."""
+    import ast
+    import glob
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ingest_py = os.path.join(root, "bigdata_logs_spark", "streaming", "ingest.py")
+    with open(ingest_py) as f:
+        tree = ast.parse(f.read())
+    (drain,) = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_drain"
+    ]
+    allowed = range(drain.lineno, drain.end_lineno + 1)
+    wait = re.compile(r"awaitTermination\(")
+    hits = []
+    for pattern in (
+        "bigdata_logs_spark/**/*.py",
+        "tests/**/*.py",
+        "tools/**/*.py",
+        "bench*.py",
+    ):
+        for path in glob.glob(os.path.join(root, pattern), recursive=True):
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if wait.search(line) and not (path == ingest_py and i in allowed):
+                        hits.append(f"{os.path.relpath(path, root)}:{i}")
+    assert hits == []
