@@ -1325,6 +1325,16 @@ SHINGLES_EXPR = (
     "i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) END"
 )
 
+# The 8-band MinHash layout of DD._minhash_signature_rows over an
+# ``sh(doc_id, shingles)`` relation: bands 0-3 are 8-hex slices of
+# md5(s), bands 4-7 of md5('#' || s), and a band's signature is the
+# minimum slice over the document's shingles.
+BAND_SIGS_SQL = """SELECT doc_id, r.band::INT AS band,
+           list_min(list_transform(shingles,
+             s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
+                  ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
+    FROM sh CROSS JOIN range(0, 8) AS r(band)"""
+
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
@@ -1486,11 +1496,7 @@ def q_exact_dedup(spark, sf_dir):
     TOKS_CTE
     + f"""
     , sh AS (SELECT doc_id, {SHINGLES_EXPR} AS shingles FROM toks)
-    SELECT doc_id, r.band::INT AS band,
-           list_min(list_transform(shingles,
-             s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                  ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-    FROM sh CROSS JOIN range(0, 8) AS r(band)
+    {BAND_SIGS_SQL}
     ORDER BY doc_id, band
     """,
     tags=("DD-2",),
@@ -1506,11 +1512,7 @@ def q_minhash_signatures(spark, sf_dir):
     + f"""
     , sh AS (SELECT doc_id, {SHINGLES_EXPR} AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     )
     SELECT band, sig, COUNT(*)::BIGINT AS n_docs,
            array_to_string(list_sort(list_distinct(list(doc_id::VARCHAR)))[1:{DD.BUCKET_CAP}], ',') AS members
@@ -1572,11 +1574,7 @@ NDP_PAIRS_CTES = (
     + f"""
     , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     )
     , ok AS (
       SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
@@ -1815,7 +1813,10 @@ def _pca_oracle() -> str:
     Spark op uses, so the two can never drift apart on round count.
     Floor division on possibly-negative integers is written as the
     (x - pmod) / D identity on BOTH sides; ``>>`` / ``shiftright``
-    floor identically on negatives (verified cross-engine)."""
+    floor identically on negatives (verified cross-engine).
+    ``cov`` and every round's ``w{i}``/``v{i}`` are MATERIALIZED: DuckDB
+    otherwise inlines each CTE at every reference, so the unrolled
+    rounds recompute the covariance exponentially often."""
     from bigdata_logs_spark.operators.similarity import (
         PCA_ITERS,
         PCA_SCALE,
@@ -1833,7 +1834,7 @@ def _pca_oracle() -> str:
       FROM comps GROUP BY 1
     ), centered AS (
       SELECT vec_id, dim, qv - m AS x FROM comps JOIN mean USING (dim)
-    ), cov AS (
+    ), cov AS MATERIALIZED (
       SELECT a.dim AS d, b.dim AS e,
              (SUM(a.x * b.x)::BIGINT >> {PCA_SHIFT}) AS c
       FROM centered a JOIN centered b USING (vec_id)
@@ -1844,13 +1845,13 @@ def _pca_oracle() -> str:
     prev = "v0"
     for i in range(1, PCA_ITERS + 1):
         sql += f"""
-    , w{i} AS (
+    , w{i} AS MATERIALIZED (
       SELECT cov.d, SUM(cov.c * {prev}.v)::BIGINT AS w
       FROM cov JOIN {prev} ON {prev}.dim = cov.e GROUP BY 1
     ), m{i} AS (
       SELECT GREATEST(MAX(abs(w)) // {PCA_SCALE}, 1::BIGINT) AS dv
       FROM w{i}
-    ), v{i} AS (
+    ), v{i} AS MATERIALIZED (
       SELECT w{i}.d AS dim, (w - ((w % dv) + dv) % dv) // dv AS v
       FROM w{i}, m{i}
     )"""
@@ -2468,11 +2469,7 @@ ND_PAIRS_CTE = (
     + f"""
     , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     )
     , ok AS (
       SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
@@ -3842,11 +3839,7 @@ def q_ann_recall(spark, sf_dir):
     + f"""
     , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     )
     , ok AS (
       SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
@@ -6842,11 +6835,7 @@ def q_dq_expectations(spark, sf_dir):
     + f"""
     , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     ), cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
@@ -6895,11 +6884,7 @@ def q_streaming_near_dup_pairs(spark, sf_dir):
     + f"""
     , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
     , sigs AS (
-      SELECT doc_id, r.band::INT AS band,
-             list_min(list_transform(shingles,
-               s -> CASE WHEN r.band < 4 THEN substr(md5(s), r.band * 8 + 1, 8)
-                    ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
-      FROM sh CROSS JOIN range(0, 8) AS r(band)
+      {BAND_SIGS_SQL}
     ), occ AS (
       SELECT band, sig, COUNT(*)::BIGINT AS n FROM sigs GROUP BY band, sig
     )
@@ -10897,144 +10882,3 @@ def q_binary_file_roundtrip(spark, sf_dir):
         )
         .orderBy("kind")
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver-certification order
-# ---------------------------------------------------------------------------
-# The grading driver's per-round correctness sweep is capped (each
-# round records rows for only the FIRST ~50 entries of ``queries()``),
-# so presentation order is a certification budget. REGISTRY itself
-# stays in source order (grouped by operator family) so the CLI,
-# bench, and tests see a stable, readable ordering; the driver-facing
-# ``__spark_entry__.queries()`` re-keys by CERTIFICATION_ORDER.
-#
-# Round-13 rotation (the pre-staged catch-up step). CORRECTNESS_r12
-# was 50/50 green and certified exactly the r12 head (the new DD-18
-# query, the 11 changed-code queries, the 29-query r6 remainder, and
-# the 9-query r7 head through ``association_rules``), so the
-# pure-staleness ledger after r12 is: 40 r7-stale queries, then a
-# 48-query r8-stale block (Counter over CORRECTNESS_r01..r12:
-# r7 40, r8 48, r9 48, r10 49, r11 45, r12 50). The r13 window leads
-# with the full 40-query r7 remainder, then the r8-stale block head
-# (10 fit). After r13: max staleness r8 — the steady-state
-# ~2-round-old signature the rotation has been converging to.
-_DRIVER_FIRST = [
-    # Round-14 rotation. Changed-code queries jump the queue (the r12
-    # precedent): this round restructured the dedup family's gram
-    # sharing, the kcore/bfs round aggregations, the iterate-loop
-    # convergence probe (components/clusters consumers), the funnel's
-    # cache overlap, and added the ST-14 occupancy report — all 19
-    # certified first, in dependency order.
-    "streaming_lsh_state_occupancy",  # new this round
-    "minhash_signatures",
-    "minhash_buckets",
-    "near_dup_pairs",
-    "near_dup_survivors",
-    "near_dup_components",
-    "component_size_histogram",
-    "minhash_calibration",
-    "quality_dedup_survivors",
-    "incremental_near_dup",
-    "minhash_containment",
-    "containment_rare_shingle",
-    "corpus_curation",
-    "corpus_dedup_funnel",
-    "dedup_tier_agreement",
-    "token_graph_kcore",
-    "bfs_reachability",
-    "ssh_account_clusters",
-    "streaming_near_dup_pairs",
-    # ...then the r8-stale remainder (ledger order; 31 fit to fill
-    # the ~50-row window — minhash_signatures above already came from
-    # this block). Still r8-stale after r14: embedding_near_dup
-    # ann_ivf_topk media_decode media_stats streaming_hourly_counts
-    # streaming_brute_force_detector — stage those first in r15.
-    "props_key_distribution",
-    "ssh_parse_full",
-    "ssh_event_counts",
-    "ssh_parse_drop_stats",
-    "ssh_events_per_day",
-    "ssh_root_admin_attempts",
-    "ssh_latest_events",
-    "store_roundtrip",
-    "csv_roundtrip",
-    "pricing_summary",
-    "top_revenue_customers",
-    "regional_revenue",
-    "customers_without_orders",
-    "customers_with_open_orders",
-    "part_type_revenue",
-    "top_order_per_customer",
-    "customer_order_stats",
-    "order_priority_counts",
-    "segment_nation_sales",
-    "doc_stats_by_lang",
-    "token_counts",
-    "word_frequencies",
-    "quality_scores",
-    "lang_id",
-    "ssh_parse_rejects",
-    "exact_dedup",
-    "simhash",
-    "embedding_norms",
-    "knn_brute_force",
-    "label_centroids",
-    "lsh_sign_buckets",
-]
-
-# Permanently-uncertifiable tail: ``global_metrics_approx`` is the
-# engine-HLL twin of SK-4 and is rows-only BY DESIGN (approx_count_
-# distinct has no DuckDB-hash-matchable oracle; it is pytest-bounded
-# against the exact count instead). A driver window slot spent on it
-# always records ``no_oracle``, so it lives at the permanent tail of
-# CERTIFICATION_ORDER where it never burns a convertible slot.
-_CERTIFICATION_TAIL = [
-    "global_metrics_approx",
-]
-
-# Pre-staged ROUND-15 rotation (mechanical — do this at the start of
-# r15 once CORRECTNESS_r14 lands green, PROVIDED no operator cores
-# change in r15; changed-code queries always jump the queue): delete
-# the names above that CORRECTNESS_r14 certified, lead with the
-# 6-query r8-stale remainder, then the r9-stale block in ledger
-# order. r8-stale remainder: embedding_near_dup ann_ivf_topk
-# media_decode media_stats streaming_hourly_counts
-# streaming_brute_force_detector. r9-stale block head:
-#   attack_sessions streaming_dedup_counts train_val_test_split
-#   stratified_sample contamination_check simhash_near_dup
-#   json_roundtrip knn_quantized streaming_stateful_alerts
-#   bucketed_order_revenue asof_last_signup_before_error ...
-# (~44 more fit; consult the CORRECTNESS_r01.. ledger for the
-# per-query latest-certified round as r13's rotation did).
-
-
-def certification_order() -> list[str]:
-    """Full registry key list with the priority names first — the
-    order ``__spark_entry__.queries()`` presents to the driver.
-    Separate from REGISTRY so grader concerns never leak into the
-    CLI / bench / test iteration order.
-
-    Fails fast (rather than silently shrinking the ~50-slot driver
-    window) if a mechanical rotation edit introduces a typo or a
-    duplicate into ``_DRIVER_FIRST`` / ``_CERTIFICATION_TAIL``.
-    """
-    for label, block in (
-        ("_DRIVER_FIRST", _DRIVER_FIRST),
-        ("_CERTIFICATION_TAIL", _CERTIFICATION_TAIL),
-    ):
-        unknown = [n for n in block if n not in REGISTRY]
-        if unknown:
-            raise ValueError(f"{label} names not in REGISTRY: {unknown}")
-        if len(set(block)) != len(block):
-            dupes = sorted({n for n in block if block.count(n) > 1})
-            raise ValueError(f"{label} contains duplicates: {dupes}")
-    overlap = set(_DRIVER_FIRST) & set(_CERTIFICATION_TAIL)
-    if overlap:
-        raise ValueError(f"names in both head and tail: {sorted(overlap)}")
-    pinned = set(_DRIVER_FIRST) | set(_CERTIFICATION_TAIL)
-    rest = [n for n in REGISTRY if n not in pinned]
-    return list(_DRIVER_FIRST) + rest + list(_CERTIFICATION_TAIL)
-
-
-CERTIFICATION_ORDER = certification_order()

@@ -1,133 +1,88 @@
-"""Driver-canonicalizer contract for every registered query.
+"""Registry contract, checked for every registered query.
 
-The grading harness canonicalizes each result with pandas
-(sort_values over all columns) before hashing — a top-level Array/
-Map/Struct column raises ``TypeError: unhashable type`` there and
-turns a correct query into an ``err`` row (this shipped three times:
-embedding_quantize, media_frame_offsets, media_features). Walk the
-whole registry at sf0.001 and reject any complex-typed output column
-so a fourth can never ship.
+``test_query_meets_registry_contract`` runs ``tools.oracle_check.
+check_query`` once per query at sf0.001: no complex-typed output
+columns (the driver's pandas canonicalizer cannot hash them), no
+CartesianProduct or row-at-a-time Python UDF in the plan, and for
+oracled queries the DuckDB differential — every Spark column named in
+the oracle SQL, matching row count, column set and order-insensitive
+value hash, and oracle dtypes that survive pandas. The negative
+control below keeps a green sweep from being vacuous.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql.types import ArrayType, MapType, StructType
 
-from bigdata_logs_spark.registry import REGISTRY
+from bigdata_logs_spark.registry import REGISTRY, QuerySpec
+from tools.oracle_check import check_query, oracle_connection
 
 
-def test_no_query_returns_complex_typed_columns(spark, sf_dir):
-    offenders: dict[str, list[str]] = {}
-    for name, spec in REGISTRY.items():
-        df = spec.fn(spark, sf_dir)
-        bad = [
-            f"{f.name}: {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, (
-        "driver canonicalizer cannot hash complex-typed cells; "
-        f"stringify these outputs (to_json/array_join/md5): {offenders}"
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    con = oracle_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", list(REGISTRY))
+def test_query_meets_registry_contract(spark, sf_dir, oracle_con, name):
+    assert check_query(spark, oracle_con, name, REGISTRY[name], sf_dir) == []
+
+
+def test_check_query_reports_each_planted_fault(spark, sf_dir, oracle_con):
+    """Negative control: each fake spec plants one fault and must
+    report exactly that problem; a well-behaved spec reports none."""
+    from pyspark.sql import functions as F
+
+    def ks(s):
+        return s.range(3).select(F.col("id").alias("k"))
+
+    def cartesian(s, _sf_dir):
+        right = s.range(4).select(F.col("id").alias("j"))
+        return ks(s).hint("shuffle_replicate_nl").crossJoin(right)
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = cartesian(spark, sf_dir)._jdf.queryExecution().explainString(
+        mode.fromString("formatted")
     )
+    assert "CartesianProduct" in plan
 
-
-def test_every_oracle_has_a_query_and_aliases_line_up(spark, sf_dir):
-    # oracle keys are a subset of query keys by construction, but a
-    # drifted column alias between the Spark plan and the SQL twin
-    # still hash-mismatches — cheap plan-time guard: every oracle
-    # must at least mention each Spark output column name.
-    missing = {}
-    for name, spec in REGISTRY.items():
-        if spec.oracle is None:
-            continue
-        cols = set(spec.fn(spark, sf_dir).columns)
-        sql_lower = spec.oracle.lower()
-        absent = [c for c in cols if c.lower() not in sql_lower]
-        if absent:
-            missing[name] = absent
-    assert not missing, f"Spark output columns never named in oracle SQL: {missing}"
-
-
-def test_oracle_dtypes_survive_pandas_canonicalization(spark, sf_dir):
-    """Guard the ORACLE side of the canonicalizer contract.
-
-    The driver renders both result sets through pandas before
-    hashing, and DuckDB wide types silently change representation
-    there: HUGEINT (e.g. ``list_sum`` over INTEGER) and DECIMAL
-    become float64, so a value Spark emits as int64 ``1382909123``
-    renders as ``1.382909e+09`` on the oracle side and hash-fails on
-    provably identical values (this shipped once: ``fingerprints``,
-    round 4). Run every oracle through ``duckdb...df()`` — the same
-    conversion the driver does — and reject any column that arrives
-    float-typed where the Spark schema is integral, unless the column
-    actually contains NULLs (pandas has no nullable int in that path,
-    so float64 is forced for BOTH engines and renders consistently —
-    ssh_parse_full.port/uid/euid and event_value_cube.dow are that
-    benign shape). Also reject object-dtype columns whose Spark type
-    isn't string/binary/date: those cells stringify via repr() and
-    diverge across engines.
-    """
-    import duckdb
-    from pyspark.sql.types import (
-        BinaryType,
-        ByteType,
-        DateType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    from bigdata_logs_spark.sources import TABLES
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    object_ok = (StringType, BinaryType, DateType)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    offenders: dict[str, list[str]] = {}
-    for name, spec in REGISTRY.items():
-        if spec.oracle is None:
-            continue
-        pdf = con.execute(spec.oracle).df()
-        spark_types = {
-            f.name: f.dataType for f in spec.fn(spark, sf_dir).schema.fields
-        }
-        bad = []
-        for col in pdf.columns:
-            stype = spark_types.get(col)
-            if stype is None:
-                continue  # alias drift is the previous test's job
-            kind = pdf[col].dtype.kind
-            if (
-                isinstance(stype, integral)
-                and kind == "f"
-                and int(pdf[col].isna().sum()) == 0
-            ):
-                bad.append(
-                    f"{col}: oracle float64 but Spark "
-                    f"{stype.simpleString()} with no NULLs — cast the "
-                    "SQL output (::BIGINT)"
-                )
-            if kind == "O" and not isinstance(stype, object_ok):
-                bad.append(
-                    f"{col}: oracle object dtype vs Spark "
-                    f"{stype.simpleString()}"
-                )
-        if bad:
-            offenders[name] = bad
-    assert not offenders, (
-        "oracle-side dtypes drift through the driver's pandas "
-        f"canonicalizer: {offenders}"
-    )
+    cases = {
+        "ok": (lambda s, _: ks(s), "SELECT range AS k FROM range(3)", None),
+        "value": (
+            lambda s, _: ks(s),
+            "SELECT range + 1 AS k FROM range(3)",
+            "value-hash mismatch",
+        ),
+        "array": (
+            lambda s, _: ks(s).select(F.array("k").alias("k")),
+            None,
+            "complex-typed column k",
+        ),
+        "unnamed": (
+            lambda s, _: ks(s).select(F.col("k").alias("col0")),
+            "SELECT * FROM (VALUES (0), (1), (2))",
+            "never named in the oracle SQL: ['col0']",
+        ),
+        "cartesian": (cartesian, None, "CartesianProduct"),
+        "row_udf": (
+            lambda s, _: ks(s).select(F.udf(lambda k: k, "long")("k").alias("k")),
+            None,
+            "BatchEvalPython",
+        ),
+        "hugeint": (
+            lambda s, _: ks(s).agg(F.sum("k").alias("total")),
+            "SELECT SUM(range) AS total FROM range(3)",
+            "oracle dtype total: float64",
+        ),
+    }
+    for name, (fn, oracle, expected) in cases.items():
+        problems = check_query(spark, oracle_con, name, QuerySpec(fn, oracle), sf_dir)
+        if expected is None:
+            assert problems == [], name
+        else:
+            assert len(problems) == 1 and expected in problems[0], (name, problems)
 
 
 def test_survey_ids_and_registry_tags_stay_in_lockstep():
@@ -143,60 +98,36 @@ def test_survey_ids_and_registry_tags_stay_in_lockstep():
     assert sorted(i for i in ids - tags if i not in audit.WAIVED) == []
 
 
-def test_certification_order_names_resolve_and_cover_registry():
-    """Every name in _DRIVER_FIRST must be a registered query and
-    appear once: a typo in a rotation edit (the per-round mechanical
-    re-ordering of the driver window) would otherwise silently shrink
-    the certified window instead of failing. certification_order()
-    now raises on typos/duplicates itself; this test keeps the
-    import-time contract pinned and checks the full order remains a
-    permutation of the registry — every query keeps exactly one
-    driver-facing position — with the permanently-uncertifiable
-    tail (rows-only-by-design queries) LAST so no ~50-slot window
-    ever spends a slot on a row that cannot convert to green."""
-    from bigdata_logs_spark.registry import (
-        _CERTIFICATION_TAIL,
-        CERTIFICATION_ORDER,
-        REGISTRY,
-        _DRIVER_FIRST,
-    )
+def test_certification_order_puts_stalest_first_rows_only_last(tmp_path):
+    """``__spark_entry__`` presents oracled queries least recently
+    certified first (per the CORRECTNESS_r*.json ledgers), ties and
+    ledger-less runs in registry order, and rows-only queries last."""
+    import json
 
-    unknown = [n for n in _DRIVER_FIRST if n not in REGISTRY]
-    assert unknown == [], f"typo'd names silently dropped: {unknown}"
-    dupes = [n for n in set(_DRIVER_FIRST) if _DRIVER_FIRST.count(n) > 1]
-    assert dupes == [], f"duplicate rotation entries: {dupes}"
-    assert sorted(CERTIFICATION_ORDER) == sorted(REGISTRY)
-    n_tail = len(_CERTIFICATION_TAIL)
-    assert CERTIFICATION_ORDER[-n_tail:] == _CERTIFICATION_TAIL
-    assert "global_metrics_approx" in _CERTIFICATION_TAIL
-    head50 = CERTIFICATION_ORDER[:50]
-    assert not set(head50) & set(_CERTIFICATION_TAIL)
+    import __spark_entry__ as entry
 
+    order = list(entry.queries())
+    assert sorted(order) == sorted(REGISTRY)
+    oracled = [n for n in order if REGISTRY[n].oracle is not None]
+    rows_only = [n for n in REGISTRY if REGISTRY[n].oracle is None]
+    assert rows_only and order == oracled + rows_only
+    assert list(entry.oracle_sql()) == oracled
+    last = entry.last_certified()
+    rounds = [last.get(n, 0) for n in oracled]
+    assert rounds == sorted(rounds) and rounds[0] < rounds[-1]
 
-def test_certification_order_fails_fast_on_rotation_typos(monkeypatch):
-    """The guard the mechanical rotation edit relies on: an unknown
-    name, a duplicate, or a head/tail overlap must raise, not be
-    silently filtered into a smaller driver window."""
-    import pytest
-
-    import bigdata_logs_spark.registry as R
-
-    good = list(R._DRIVER_FIRST)
-
-    monkeypatch.setattr(R, "_DRIVER_FIRST", good + ["no_such_query_xyz"])
-    with pytest.raises(ValueError, match="not in REGISTRY"):
-        R.certification_order()
-
-    monkeypatch.setattr(R, "_DRIVER_FIRST", good + [good[0]])
-    with pytest.raises(ValueError, match="duplicates"):
-        R.certification_order()
-
-    monkeypatch.setattr(R, "_DRIVER_FIRST", good + list(R._CERTIFICATION_TAIL))
-    with pytest.raises(ValueError, match="both head and tail"):
-        R.certification_order()
-
-    monkeypatch.setattr(R, "_DRIVER_FIRST", good)
-    assert R.certification_order() == R.CERTIFICATION_ORDER
+    by_registry = [n for n in REGISTRY if REGISTRY[n].oracle is not None]
+    assert entry.certification_order(str(tmp_path)) == by_registry + rows_only
+    a, b = by_registry[:2]
+    for rnd, names in ((1, [a, b]), (2, [a])):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {"hash_match": True} for n in names})
+        )
+    assert entry.certification_order(str(tmp_path))[-len(rows_only) - 2 :] == [
+        b,
+        a,
+        *rows_only,
+    ]
 
 
 def test_bench_extended_names_resolve_in_registry():

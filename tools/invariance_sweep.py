@@ -33,10 +33,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bigdata_logs_spark.caching import release_caches  # noqa: E402
 from bigdata_logs_spark.registry import REGISTRY  # noqa: E402
 from bigdata_logs_spark.session import get_spark  # noqa: E402
-from tools.oracle_check import table_hash  # noqa: E402
+from tools.oracle_check import collect_released, table_hash  # noqa: E402
 
 # Pass-B perturbation: every knob here is a runtime session conf
 # (settable mid-session via spark.conf.set) that changes physical
@@ -46,19 +45,6 @@ HOSTILE = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.files.maxPartitionBytes": "1048576",
 }
-
-
-def _run(spark, spec, sf_dir):
-    try:
-        sdf = spec.fn(spark, sf_dir)
-        cols = sdf.columns
-        rows = [tuple(r) for r in sdf.collect()]
-        return cols, rows, None
-    except Exception as e:  # noqa: BLE001
-        return None, None, str(e)
-    finally:
-        release_caches()
-        spark.catalog.clearCache()
 
 
 def sweep(spark, sf_dir: str, only=None, registry=None):
@@ -76,23 +62,30 @@ def sweep(spark, sf_dir: str, only=None, registry=None):
         checked += 1
         # try/finally: the sweep runs against a SHARED session (the
         # pytest fixture, or the caller's), so an unexpected exception
-        # anywhere in the body — not just inside _run — must never
-        # leave it in the hostile config and poison later work.
+        # anywhere in the body must never leave it in the hostile
+        # config and poison later work.
+        answers, errs = [], []
         try:
-            for k, v in defaults.items():
-                spark.conf.set(k, v)
-            a_cols, a_rows, a_err = _run(spark, spec, sf_dir)
-            for k, v in HOSTILE.items():
-                spark.conf.set(k, v)
-            b_cols, b_rows, b_err = _run(spark, spec, sf_dir)
+            for conf in (defaults, HOSTILE):
+                for k, v in conf.items():
+                    spark.conf.set(k, v)
+                try:
+                    answers.append(
+                        collect_released(spark, lambda: spec.fn(spark, sf_dir))
+                    )
+                    errs.append(None)
+                except Exception as e:  # noqa: BLE001
+                    errs.append(str(e))
         finally:
             for k, v in defaults.items():
                 spark.conf.set(k, v)
 
+        a_err, b_err = errs
         if a_err or b_err:
             failures.append((name, f"error A={a_err} B={b_err}"))
             print(f"  ✗ {name}: error ({(a_err or b_err)[:120]})")
             continue
+        (a_cols, a_rows), (b_cols, b_rows) = answers
         problems = []
         if a_cols != b_cols:
             problems.append(f"schema A={a_cols} B={b_cols}")

@@ -2,11 +2,15 @@
 
 Runs every registry query on Spark and its oracle SQL on DuckDB over
 the same parquet tables, then compares row-count, column names, and an
-order-insensitive value hash. Usage:
+order-insensitive value hash. ``check_query`` also holds each query to
+the rest of the registry contract (no complex-typed output columns, no
+plan red flags, oracle dtypes that survive the driver's pandas
+canonicalizer); ``tests/test_registry_contract.py`` runs it over the
+whole registry in tier-1. Usage:
 
     python tools/oracle_check.py [sf_dir] [query ...]
 
-Exit code 0 iff everything declared with an oracle matches.
+Exit code 0 iff every query passes every check.
 """
 
 from __future__ import annotations
@@ -18,11 +22,31 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+from pyspark.sql.types import (  # noqa: E402
+    ArrayType,
+    BinaryType,
+    ByteType,
+    DateType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructType,
+)
 
 from bigdata_logs_spark.caching import release_caches  # noqa: E402
 from bigdata_logs_spark.registry import REGISTRY  # noqa: E402
 from bigdata_logs_spark.session import get_spark  # noqa: E402
 from bigdata_logs_spark.sources import TABLES  # noqa: E402
+
+# Declared row-at-a-time Python paths: the U-5 UDTF showcase is the
+# one operator whose POINT is the row-UDTF API, and it is capped to a
+# bounded input in the registry.
+ROW_UDF_ALLOWED = {"doc_ngrams_udtf"}
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+_OBJECT_OK = (StringType, BinaryType, DateType)
 
 
 def _norm_cell(v) -> str:
@@ -44,17 +68,148 @@ def _norm_cell(v) -> str:
     return str(v)
 
 
+def _rendered(cols: list[str], rows: list[tuple]) -> list[str]:
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted("\x1f".join(_norm_cell(r[i]) for i in order) for r in rows)
+
+
 def table_hash(cols: list[str], rows: list[tuple]) -> str:
     """Order-insensitive: sort columns by name, render rows, sort rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rendered = sorted(
-        "\x1f".join(_norm_cell(r[i]) for i in order) for r in rows
-    )
     h = hashlib.sha256()
-    for line in rendered:
+    for line in _rendered(cols, rows):
         h.update(line.encode())
         h.update(b"\x1e")
     return h.hexdigest()
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per input table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def collect_released(spark, build):
+    """``(columns, rows)`` of the DataFrame ``build()`` returns. The
+    caches and checkpoints the query pinned are released afterwards,
+    even on error, so a registry-wide sweep never accumulates pinned
+    executor memory."""
+    try:
+        sdf = build()
+        return sdf.columns, [tuple(r) for r in sdf.collect()]
+    finally:
+        release_caches()
+        spark.catalog.clearCache()
+
+
+def _complex_columns(sdf) -> list[str]:
+    # The driver canonicalizes results with pandas sort_values, which
+    # raises ``unhashable type`` on a top-level Array/Map/Struct cell.
+    return [
+        f"complex-typed column {f.name}: {f.dataType.simpleString()} "
+        "(stringify it: to_json/array_join/md5)"
+        for f in sdf.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+
+
+def _plan_red_flags(spark, name: str, sdf) -> list[str]:
+    # A CartesianProduct pairs every left row with every right row at
+    # scale; BatchEvalPython is a row-at-a-time Python UDF.
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = sdf._jdf.queryExecution().explainString(mode.fromString("formatted"))
+    flags = []
+    if "CartesianProduct" in plan:
+        flags.append("plan has a CartesianProduct")
+    if "BatchEvalPython" in plan and name not in ROW_UDF_ALLOWED:
+        flags.append("plan has a row-at-a-time Python UDF (BatchEvalPython)")
+    return flags
+
+
+def _dtype_drift(pdf, spark_types: dict) -> list[str]:
+    """Oracle columns whose pandas dtype renders differently from the
+    Spark side in the driver's canonicalizer. HUGEINT and DECIMAL
+    arrive as float64, so an integral Spark value ``1382909123``
+    renders as ``1.382909e+09`` on the oracle side; a column with NULLs
+    is float64 on both sides and renders alike. Object-dtype cells
+    stringify via repr() unless the Spark type is string/binary/date."""
+    bad = []
+    for col in pdf.columns:
+        stype = spark_types.get(col)
+        if stype is None:
+            continue
+        kind = pdf[col].dtype.kind
+        if (
+            isinstance(stype, _INTEGRAL)
+            and kind == "f"
+            and int(pdf[col].isna().sum()) == 0
+        ):
+            bad.append(
+                f"oracle dtype {col}: float64 but Spark "
+                f"{stype.simpleString()} with no NULLs — cast the SQL "
+                "output (::BIGINT)"
+            )
+        if kind == "O" and not isinstance(stype, _OBJECT_OK):
+            bad.append(
+                f"oracle dtype {col}: object vs Spark {stype.simpleString()}"
+            )
+    return bad
+
+
+def check_query(spark, con, name: str, spec, sf_dir: str) -> list[str]:
+    """Build the registry query ``spec`` once and return its problems
+    (empty when it passes): complex-typed output columns, plan red
+    flags, and, if it has an oracle, any column the oracle SQL never
+    names, a row-count / column-set / value-hash mismatch against
+    DuckDB on ``con``, and oracle dtypes that drift through pandas."""
+    problems: list[str] = []
+    spark_types: dict = {}
+
+    def build():
+        sdf = spec.fn(spark, sf_dir)
+        spark_types.update((f.name, f.dataType) for f in sdf.schema.fields)
+        problems.extend(_complex_columns(sdf))
+        problems.extend(_plan_red_flags(spark, name, sdf))
+        return sdf
+
+    try:
+        s_cols, s_rows = collect_released(spark, build)
+    except Exception as e:  # noqa: BLE001
+        return problems + [f"spark error: {e}"]
+    if spec.oracle is None:
+        return problems
+
+    sql_lower = spec.oracle.lower()
+    absent = [c for c in s_cols if c.lower() not in sql_lower]
+    if absent:
+        problems.append(f"Spark columns never named in the oracle SQL: {absent}")
+    try:
+        cur = con.execute(spec.oracle)
+        d_cols = [d[0] for d in cur.description]
+        d_rows = cur.fetchall()
+        pdf = con.execute(spec.oracle).df()
+    except Exception as e:  # noqa: BLE001
+        return problems + [f"duckdb error: {e}"]
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
+    elif len(s_rows) == len(d_rows) and table_hash(s_cols, s_rows) != table_hash(
+        d_cols, d_rows
+    ):
+        first = next(
+            (a, b)
+            for a, b in zip(_rendered(s_cols, s_rows), _rendered(d_cols, d_rows))
+            if a != b
+        )
+        problems.append(
+            "value-hash mismatch\n  first diff:\n"
+            f"   spark : {first[0]}\n   duckdb: {first[1]}".replace("\x1f", "|")
+        )
+    return problems + _dtype_drift(pdf, spark_types)
 
 
 def main() -> int:
@@ -69,69 +224,29 @@ def main() -> int:
         spark = SparkSession.builder.master("local[8]").getOrCreate()
     else:
         spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
-    failures, skipped = [], []
+    failures, rows_only = [], 0
     checked = 0
     for name, spec in REGISTRY.items():
         if only and name not in only:
             continue
         checked += 1
-        try:
-            sdf = spec.fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"spark error: {e}"))
-            continue
-        finally:
-            # operators may tracked_cache() intermediates; release
-            # them per query so a 99-query sweep doesn't accumulate
-            # pinned executor memory
-            release_caches()
-        if spec.oracle is None:
-            skipped.append((name, len(s_rows)))
-            print(f"  ~ {name}: rows-only ({len(s_rows)} rows)")
-            continue
-        try:
-            cur = con.execute(spec.oracle)
-            d_cols = [d[0] for d in cur.description]
-            d_rows = cur.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"duckdb error: {e}"))
-            continue
-        problems = []
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        if not problems:
-            hs, hd = table_hash(s_cols, s_rows), table_hash(d_cols, d_rows)
-            if hs != hd:
-                problems.append("value-hash mismatch")
-                order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-                order_d = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
-                rs = sorted("|".join(_norm_cell(r[i]) for i in order_s) for r in s_rows)
-                rd = sorted("|".join(_norm_cell(r[i]) for i in order_d) for r in d_rows)
-                for a, b in zip(rs, rd):
-                    if a != b:
-                        problems.append(f"  first diff:\n   spark : {a}\n   duckdb: {b}")
-                        break
+        problems = check_query(spark, con, name, spec, sf_dir)
         if problems:
             failures.append((name, "; ".join(problems)))
             print(f"  ✗ {name}: {problems[0]}")
             for p in problems[1:]:
-                print(p)
+                print(f"    {p}")
+        elif spec.oracle is None:
+            rows_only += 1
+            print(f"  ~ {name}: rows-only")
         else:
-            print(f"  ✓ {name} ({len(s_rows)} rows)")
+            print(f"  ✓ {name}")
 
     print(
-        f"\n{checked - len(failures) - len(skipped)} ok, "
-        f"{len(skipped)} rows-only, {len(failures)} FAILED"
+        f"\n{checked - len(failures) - rows_only} ok, "
+        f"{rows_only} rows-only, {len(failures)} FAILED"
     )
     for name, why in failures:
         print(f"FAIL {name}: {why.splitlines()[0]}")
