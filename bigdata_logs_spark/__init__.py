@@ -16,10 +16,12 @@ anomaly detection), designed for 100 TB scale:
 
 Layout:
     session.py    SparkSession bootstrap (AQE, Arrow, UTC)
-    sources/      batch + streaming readers/writers
+    registry.py   every named query, each paired with its DuckDB oracle
+    caching.py    tracked caches that sweeps release between queries
+    __main__.py   CLI (parse, stream, detect, curate, query, explain, ...)
+    sources/      batch readers/writers, table loading, Python data source
     operators/    DataFrame -> DataFrame operator library
     functions/    reusable column-expression helpers
-    plans/        explain/plan-inspection utilities
     streaming/    Structured Streaming pipelines
 """
 

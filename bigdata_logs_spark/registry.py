@@ -40,7 +40,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
-    bench: bool = False  # include in bench.py beyond the headline set
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -50,10 +49,9 @@ def register(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
-    bench: bool = False,
 ):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags, bench=bench)
+        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
         return fn
 
     return deco
@@ -796,7 +794,6 @@ def _ssh_lines(spark, sf_dir):
     SSH_PARSE_CTE + "\nSELECT * FROM parsed",
     tags=("P-1", "P-2", "P-3", "P-4", "P-5", "P-6", "P-7", "P-8", "P-9",
           "P-10", "P-11", "P-12", "P-13", "P-14", "P-15", "S-1"),
-    bench=True,
 )
 def q_ssh_parse_full(spark, sf_dir):
     return parse_ssh_lines(_ssh_lines(spark, sf_dir))
@@ -1118,7 +1115,6 @@ REV_SQL = "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIM
     ORDER BY l_returnflag, l_linestatus
     """,
     tags=("J-1",),
-    bench=True,
 )
 def q_pricing_summary(spark, sf_dir):
     return J.pricing_summary(load_table(spark, sf_dir, "lineitem"))
@@ -1140,7 +1136,6 @@ def q_pricing_summary(spark, sf_dir):
     ORDER BY revenue DESC, c_custkey LIMIT 10
     """,
     tags=("J-2", "D-39"),
-    bench=True,
 )
 def q_top_revenue_customers(spark, sf_dir):
     return J.top_revenue_customers(
@@ -1169,7 +1164,6 @@ def q_top_revenue_customers(spark, sf_dir):
     ORDER BY region, nation
     """,
     tags=("J-3",),
-    bench=True,
 )
 def q_regional_revenue(spark, sf_dir):
     return J.regional_revenue(
@@ -1500,7 +1494,6 @@ def q_exact_dedup(spark, sf_dir):
     ORDER BY doc_id, band
     """,
     tags=("DD-2",),
-    bench=True,
 )
 def q_minhash_signatures(spark, sf_dir):
     return DD.minhash_signatures(_docs(spark, sf_dir))
@@ -1698,7 +1691,6 @@ def q_embedding_norms(spark, sf_dir):
     ORDER BY query_id, rank
     """,
     tags=("E-2",),
-    bench=True,
 )
 def q_knn_brute_force(spark, sf_dir):
     return SIM.knn_brute_force(_emb(spark, sf_dir))
@@ -1955,7 +1947,6 @@ def q_lsh_sign_buckets(spark, sf_dir):
     ORDER BY vec_a, vec_b
     """,
     tags=("DD-5", "E-2"),
-    bench=True,
 )
 def q_embedding_near_dup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs. Candidates come from
@@ -2417,7 +2408,6 @@ def q_stratified_sample(spark, sf_dir):
     GROUP BY doc_id ORDER BY doc_id
     """,
     tags=("PL-3",),
-    bench=True,
 )
 def q_contamination_check(spark, sf_dir):
     """Benchmark-contamination scan: k-gram hash overlap between
@@ -2533,7 +2523,6 @@ def q_near_dup_survivors(spark, sf_dir):
     FROM ranked WHERE rnk <= 5 ORDER BY doc_id, rnk
     """,
     tags=("T-7",),
-    bench=True,
 )
 def q_tfidf_top_terms(spark, sf_dir):
     """Per-document top-5 terms by tf-idf (ln verified bit-identical
@@ -2633,7 +2622,6 @@ def q_component_size_histogram(spark, sf_dir):
     ORDER BY vec_id
     """,
     tags=("E-6",),
-    bench=True,
 )
 def q_embedding_quantize(spark, sf_dir):
     """Per-dimension affine 0..255 quantization: 64-row stats agg
@@ -2855,7 +2843,6 @@ def q_streaming_stateful_alerts(spark, sf_dir):
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     tags=("J-11",),
-    bench=True,
 )
 def q_bucketed_order_revenue(spark, sf_dir):
     """Co-located fact-fact join via bucketing: orders and lineitem
@@ -2927,7 +2914,6 @@ def q_bucketed_order_revenue(spark, sf_dir):
     ORDER BY e.event_id
     """,
     tags=("J-9",),
-    bench=True,
 )
 def q_asof_last_signup_before_error(spark, sf_dir):
     """As-of join (union + per-key running last, one shuffle — no
@@ -3085,7 +3071,6 @@ def q_range_join_value_bands(spark, sf_dir):
     FROM assigned GROUP BY 1, 2 ORDER BY split, lang
     """,
     tags=("PL-4", "DD-7", "T-4", "PL-1"),
-    bench=True,
 )
 def q_corpus_curation(spark, sf_dir):
     """End-to-end corpus curation (dedup -> quality gate -> split ->
@@ -3642,7 +3627,6 @@ PII_IPV4_SQL = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
     FROM base b LEFT JOIN topt USING (doc_id) ORDER BY doc_id
     """,
     tags=("T-9",),
-    bench=True,
 )
 def q_repetition_scores(spark, sf_dir):
     """Gopher-style repetition filters: top-token share + duplicate
@@ -3670,7 +3654,6 @@ def q_repetition_scores(spark, sf_dir):
     FROM binned GROUP BY shard, bin ORDER BY shard, bin
     """,
     tags=("PL-6",),
-    bench=True,
 )
 def q_pack_token_budget(spark, sf_dir):
     """Greedy context-window packing, sharded so the running token
@@ -3864,7 +3847,6 @@ def q_ann_recall(spark, sf_dir):
     ORDER BY new_doc, old_doc
     """,
     tags=("DD-9",),
-    bench=True,
 )
 def q_incremental_near_dup(spark, sf_dir):
     """Delta-vs-corpus near-dup: only new-batch x existing candidate

@@ -128,74 +128,3 @@ def test_certification_order_puts_stalest_first_rows_only_last(tmp_path):
         a,
         *rows_only,
     ]
-
-
-def test_bench_extended_names_resolve_in_registry():
-    """Every name in bench.py's EXTENDED list must be a registered
-    query — a rename otherwise silently drops the op from the
-    per-round bench record (the `if name not in REGISTRY: continue`
-    guard hides it)."""
-    import ast
-    import pathlib
-
-    from bigdata_logs_spark.registry import REGISTRY
-
-    src = pathlib.Path(__file__).resolve().parents[1] / "bench.py"
-    tree = ast.parse(src.read_text())
-    names = None
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Assign)
-            and any(
-                isinstance(t, ast.Name) and t.id == "EXTENDED"
-                for t in node.targets
-            )
-            and isinstance(node.value, ast.List)
-        ):
-            names = [
-                el.value
-                for el in node.value.elts
-                if isinstance(el, ast.Constant)
-            ]
-    assert names, "EXTENDED list not found in bench.py"
-    missing = [n for n in names if n not in REGISTRY]
-    assert not missing, f"bench EXTENDED names not in registry: {missing}"
-
-
-def test_every_registry_query_is_benched_or_explicitly_waived():
-    """Round-6 guard (VERDICT r5 task #6): a new registry query must
-    land in bench.py's HEADLINE/EXTENDED (or carry the bench flag) or
-    be added to the explicit UNBENCHED waiver list — never silently
-    absent from the per-round bench record. Also rejects stale waiver
-    entries (renamed/removed queries) and double-listing."""
-    import ast
-    import pathlib
-
-    from bigdata_logs_spark.registry import REGISTRY
-
-    src = pathlib.Path(__file__).resolve().parents[1] / "bench.py"
-    tree = ast.parse(src.read_text())
-    lists: dict[str, list[str]] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and isinstance(node.value, ast.List):
-            for t in node.targets:
-                if isinstance(t, ast.Name) and t.id in (
-                    "HEADLINE",
-                    "EXTENDED",
-                    "UNBENCHED",
-                ):
-                    lists[t.id] = [
-                        el.value
-                        for el in node.value.elts
-                        if isinstance(el, ast.Constant)
-                    ]
-    assert set(lists) == {"HEADLINE", "EXTENDED", "UNBENCHED"}
-    flagged = {n for n in REGISTRY if REGISTRY[n].bench}
-    benched = set(lists["HEADLINE"]) | set(lists["EXTENDED"]) | flagged
-    waived = set(lists["UNBENCHED"])
-    unplaced = sorted(set(REGISTRY) - benched - waived)
-    assert not unplaced, f"queries neither benched nor waived: {unplaced}"
-    stale = sorted(waived - set(REGISTRY))
-    assert not stale, f"UNBENCHED entries not in registry: {stale}"
-    double = sorted(waived & benched)
-    assert not double, f"waived AND benched: {double}"

@@ -159,6 +159,20 @@ def _dtype_drift(pdf, spark_types: dict) -> list[str]:
     return bad
 
 
+def _run_oracle(con, sql: str):
+    """``(columns, fetchall() rows, .df() frame)`` of ``sql``, which
+    runs once: its result is materialised into a temp table (keeping
+    every column type, so both reads match reading the query itself)
+    and dropped afterwards."""
+    con.execute(f"CREATE TEMP TABLE oracle_result AS {sql}")
+    try:
+        cur = con.execute("SELECT * FROM oracle_result")
+        cols = [d[0] for d in cur.description]
+        return cols, cur.fetchall(), con.execute("SELECT * FROM oracle_result").df()
+    finally:
+        con.execute("DROP TABLE oracle_result")
+
+
 def check_query(spark, con, name: str, spec, sf_dir: str) -> list[str]:
     """Build the registry query ``spec`` once and return its problems
     (empty when it passes): complex-typed output columns, plan red
@@ -187,10 +201,7 @@ def check_query(spark, con, name: str, spec, sf_dir: str) -> list[str]:
     if absent:
         problems.append(f"Spark columns never named in the oracle SQL: {absent}")
     try:
-        cur = con.execute(spec.oracle)
-        d_cols = [d[0] for d in cur.description]
-        d_rows = cur.fetchall()
-        pdf = con.execute(spec.oracle).df()
+        d_cols, d_rows, pdf = _run_oracle(con, spec.oracle)
     except Exception as e:  # noqa: BLE001
         return problems + [f"duckdb error: {e}"]
     if len(s_rows) != len(d_rows):
