@@ -101,14 +101,16 @@ def _stage_totals(sc, first_job: int, end_job: int) -> dict[str, int]:
 
 def measure(spark, sf_dir: str, name: str) -> dict:
     """One rep of registry query ``name``: construction, planning
-    (``executedPlan()``) and a ``noop`` write, then the rep's jobs and
-    stage counters. Caches are released even when the query fails."""
+    (``executedPlan()``) and a ``noop`` write, then the rep's jobs (of
+    them ``construct_jobs`` ran during construction) and stage
+    counters. Caches are released even when the query fails."""
     sc = spark.sparkContext._jsc.sc()
     first_job = sc.dagScheduler().nextJobId()
     try:
         t0 = time.perf_counter()
         df = REGISTRY[name].fn(spark, sf_dir)
         t1 = time.perf_counter()
+        construct_end_job = sc.dagScheduler().nextJobId()
         df._jdf.queryExecution().executedPlan()
         t2 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
@@ -121,6 +123,7 @@ def measure(spark, sf_dir: str, name: str) -> dict:
         "construct_ms": round((t1 - t0) * 1e3, 1),
         "plan_ms": round((t2 - t1) * 1e3, 1),
         "exec_ms": round((t3 - t2) * 1e3, 1),
+        "construct_jobs": construct_end_job - first_job,
         **_stage_totals(sc, first_job, sc.dagScheduler().nextJobId()),
     }
 

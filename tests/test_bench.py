@@ -14,6 +14,7 @@ RECORD_FIELDS = {
     "plan_ms",
     "exec_ms",
     "jobs",
+    "construct_jobs",
     "task_ms",
     "shuffle_read_bytes",
     "shuffle_write_bytes",
@@ -47,5 +48,11 @@ def test_every_rep_runs_jobs_and_releases_caches(spark, sf_dir, monkeypatch):
         assert len(reps[name]) == 1 + bench.TIMED_REPS
         for rec in reps[name]:
             assert rec["jobs"] >= 1 and rec["task_ms"] > 0, (name, rec)
+            assert 0 <= rec["construct_jobs"] <= rec["jobs"], (name, rec)
         assert records[name]["sec"] == min(r["sec"] for r in reps[name][1:])
         assert records[name]["cold_sec"] == reps[name][0]["sec"]
+    # Once the warm-up rep has inferred the events schema, the batch
+    # query's construction runs no job; the stream's drain always does.
+    timed = reps["ssh_parse_full"][1:]
+    assert [r["construct_jobs"] for r in timed] == [0] * bench.TIMED_REPS
+    assert all(r["construct_jobs"] >= 1 for r in reps["streaming_hourly_counts"])

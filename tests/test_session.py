@@ -1,9 +1,11 @@
-"""Session bootstrap contracts — no SparkSession needed.
+"""Session bootstrap contracts.
 
-Pins the local-mode driver-heap sizing logic: 32g on the target box,
-clamped to ~40% of the detected memory limit (cgroup-v2 cap first,
-else /proc/meminfo MemTotal) so a smaller or container-limited host
-isn't OOM-killed, with $SPARK_GRAFT_DRIVER_MEM overriding unclamped.
+Pins the local-mode driver-heap sizing logic, with no SparkSession:
+32g on the target box, clamped to ~40% of the detected memory limit
+(cgroup-v2 cap first, else /proc/meminfo MemTotal) so a smaller or
+container-limited host isn't OOM-killed, with $SPARK_GRAFT_DRIVER_MEM
+overriding unclamped. Also pins that the engine session runs with
+PySpark's per-Column call-site capture off.
 """
 
 from __future__ import annotations
@@ -89,3 +91,12 @@ def test_env_override_wins(monkeypatch, tmp_path):
     assert (
         os.environ.get(S._DRIVER_MEM_ENV) or S._default_driver_mem()
     ) == "77g"
+
+
+def test_call_site_capture_is_off(spark):
+    # On, every Column call makes extra py4j round trips (session.py).
+    from pyspark.errors.utils import is_debugging_enabled
+
+    conf = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(conf) == "false"
+    assert is_debugging_enabled() is False
