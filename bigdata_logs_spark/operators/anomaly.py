@@ -346,8 +346,8 @@ def rare_transitions(
 ) -> DataFrame:
     """AD-6: event-type Markov transition profile with rare-edge
     flags — the batch calibration table behind sequence-anomaly
-    detection (the streaming ST-9 ``event_transitions`` operator
-    counts per-user transitions live; this is the corpus-wide model
+    detection (the streaming ST-9 ``event_transitions_state`` fold
+    counts per-IP transitions live; this is the corpus-wide model
     that says which of those transitions are WORTH alerting on).
     Security reading: a (login -> delete_all) edge with probability
     0.0004 is an incident lead; (view -> click) at 0.2 is noise.

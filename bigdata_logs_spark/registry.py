@@ -3975,28 +3975,23 @@ def q_supplier_nation_revenue(spark, sf_dir):
 )
 def q_streaming_event_transitions(spark, sf_dir):
     """Per-IP event-transition (Markov) counts computed BY THE
-    STREAMING ENGINE via transformWithStateInPandas (Spark 4's
-    arbitrary-stateful API: typed ValueState carries the last event
-    across micro-batches); oracle is the batch lag() window.
-
-    The stateful operator emits PER-MICRO-BATCH partial counts into
-    the append-mode memory sink (state carries only the boundary
-    event, not the tallies), so the consumer must re-aggregate —
-    without the groupBy a multi-batch feed (e.g. maxFilesPerTrigger)
-    would return duplicate (ip, prev, event) rows."""
+    STREAMING ENGINE: ``event_transitions_state`` folds each
+    micro-batch's per-IP segment summary (transition counts plus the
+    first and last event key) into a parquet state, so the state's
+    count rows are the final answer for any batch split or file
+    arrival order; oracle is the batch lag() window."""
     from pyspark.sql import functions as F
 
-    from bigdata_logs_spark.streaming import event_transitions_tws
+    from bigdata_logs_spark.streaming import event_transitions_state
 
     src = _stream_source_dir(spark, sf_dir)
-    parsed = read_ssh_stream(spark, src)
-    trans = event_transitions_tws(parsed)
-    name = "bls_trans_" + _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    run_stream_to_memory(trans, name, output_mode="append")
+    state = _scratch_path("bls_trans_state", sf_dir)
+    event_transitions_state(read_ssh_stream(spark, src), state)
+    # the count rows' columns only: no schema-inference job
     return (
-        spark.table(name)
-        .groupBy("ip", "prev_event", "event")
-        .agg(F.sum("n").alias("n"))
+        spark.read.schema("ip string, prev_event string, event string, n bigint")
+        .parquet(state)
+        .where(F.col("n").isNotNull())
         .orderBy("ip", "prev_event", "event")
     )
 

@@ -1,7 +1,7 @@
 from bigdata_logs_spark.streaming.ingest import (
     brute_force_detector,
     repeat_offender_pairs,
-    event_transitions_tws,
+    event_transitions_state,
     event_drift_counts,
     read_ssh_stream,
     severity_enriched_counts,
@@ -16,7 +16,7 @@ from bigdata_logs_spark.streaming.ingest import (
 __all__ = [
     "brute_force_detector",
     "repeat_offender_pairs",
-    "event_transitions_tws",
+    "event_transitions_state",
     "event_drift_counts",
     "read_ssh_stream",
     "severity_enriched_counts",

@@ -357,126 +357,75 @@ def streaming_latest_per_ip(parsed: DataFrame) -> DataFrame:
     )
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas ships its state protocol over
-    protobuf; without the `protobuf` package the driver worker
-    crashes at init. Gate on the import, not on the Spark version."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def event_transitions_tws(parsed: DataFrame) -> DataFrame:
+def event_transitions_state(parsed: DataFrame, state_dir: str) -> list:
     """Per-IP event-transition counts (ST-9): the Markov-chain
     statistic behind attack-pattern profiling (e.g. invalid_user ->
-    failed_password runs).
+    failed_password runs). For each IP, order its events by the total
+    (ts, pid, message) key and count consecutive (prev_event -> event)
+    transitions: the batch lag() window, folded over micro-batches by
+    ``_fold_into_state`` into a parquet state table at ``state_dir``.
 
-    Semantics: for each IP, order its events by the total
-    (ts, pid, message) key and count consecutive (prev_event ->
-    event) transitions. One string of state per key carries the last
-    event across micro-batches, so a transition spanning a batch
-    boundary is still counted; within a batch the handler sorts its
-    group, which makes the availableNow (single-batch) result
-    deterministic and batch-equivalent to the lag() window oracle.
-    Contract for multi-batch feeds: per-key arrival must be
-    time-ordered across batches (the file-tail source delivers files
-    in order).
+    The state summarises each IP's part of the feed: count rows
+    (ip, prev_event, event, n) and one boundary row (ip, first, last),
+    the min and max of k = (ts, pid, message, event). A batch's
+    increment is the same summary (one lag() window, one min/max
+    aggregate). The merge orders each IP's boundary rows by ``first``,
+    counts one bridge transition from each row's ``last.event`` to the
+    next row's ``first.event``, sums the counts and keeps min(first)
+    and max(last).
 
-    Two implementations, selected at runtime: Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState; preferred, but
-    its state protocol needs the protobuf package, absent in this
-    container) and an ``applyInPandasWithState`` fallback with
-    identical semantics — the gate is an import-try, so the same
-    code runs the new API on a fully-provisioned cluster.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    Contract: one IP's segments do not interleave in key order (each
+    micro-batch holds a contiguous key range per IP, as time-split
+    files do). Under it the merge is associative and commutative, so
+    the state depends neither on the batch split nor on the order the
+    files arrive in. Returns the drain's progress reports."""
+    from pyspark.sql import Window
 
-    out_schema = StructType(
-        [
-            StructField("ip", StringType()),
-            StructField("prev_event", StringType()),
-            StructField("event", StringType()),
-            StructField("n", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("last_event", StringType())])
-
-    def count_transitions(ip, pdf, prev):
-        pdf = pdf.sort_values(["ts", "pid", "message"], kind="mergesort")
-        counts: dict[tuple[str, str], int] = {}
-        for ev in pdf["event"].tolist():
-            if prev is not None:
-                counts[(prev, ev)] = counts.get((prev, ev), 0) + 1
-            prev = ev
-        out = pd.DataFrame(
-            {
-                "ip": [ip] * len(counts),
-                "prev_event": [k[0] for k in counts],
-                "event": [k[1] for k in counts],
-                "n": list(counts.values()),
-            }
-        )
-        return out, prev
-
+    by_ip = Window.partitionBy("ip")
     src = parsed.filter(F.col("ip").isNotNull()).select(
-        "ip", "ts", "pid", "message", "event"
+        "ip", F.struct("ts", "pid", "message", "event").alias("k")
     )
 
-    if _tws_available():
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
+    def increment(batch: DataFrame) -> DataFrame:
+        lagged = batch.withColumn(
+            "prev_event", F.lag("k.event").over(by_ip.orderBy("k"))
         )
-
-        class TransitionCounter(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._last = handle.getValueState("last", state_schema)
-
-            def handleInputRows(self, key, rows, timerValues):
-                pdf = pd.concat(list(rows), ignore_index=True)
-                prev = self._last.get()[0] if self._last.exists() else None
-                out, prev = count_transitions(key[0], pdf, prev)
-                self._last.update((prev,))
-                if len(out):
-                    yield out
-
-            def close(self) -> None:
-                pass
-
-        return src.groupBy("ip").transformWithStateInPandas(
-            statefulProcessor=TransitionCounter(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="None",
+        counts = (
+            lagged.where(F.col("prev_event").isNotNull())
+            .groupBy("ip", "prev_event", F.col("k.event").alias("event"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
+        bounds = batch.groupBy("ip").agg(
+            F.min("k").alias("first"), F.max("k").alias("last")
+        )
+        return counts.unionByName(bounds, allowMissingColumns=True)
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    def merge(upd: DataFrame) -> DataFrame:
+        # Tell the row kinds apart by a column that is a NULL literal in
+        # the other branch of the increment's union (n, first): the
+        # optimizer then drops that branch instead of re-reading the batch.
+        bounds = upd.where(F.col("first").isNotNull()).withColumn(
+            "prev", F.lag("last").over(by_ip.orderBy("first"))
+        )
+        bridges = bounds.where(F.col("prev").isNotNull()).select(
+            "ip",
+            F.col("prev.event").alias("prev_event"),
+            F.col("first.event").alias("event"),
+            F.lit(1).cast("bigint").alias("n"),
+        )
+        counts = (
+            upd.where(F.col("n").isNotNull())
+            .select("ip", "prev_event", "event", "n")
+            .unionByName(bridges)
+            .groupBy("ip", "prev_event", "event")
+            .agg(F.sum("n").alias("n"))
+        )
+        ends = bounds.groupBy("ip").agg(
+            F.min("first").alias("first"), F.max("last").alias("last")
+        )
+        return counts.unionByName(ends, allowMissingColumns=True)
 
-    def update(key, pdf_iter, state: GroupState):
-        (ip,) = key
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        prev = state.get[0] if state.exists else None
-        out, prev = count_transitions(ip, pdf, prev)
-        state.update((prev,))
-        if len(out):
-            yield out
-
-    return src.groupBy("ip").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_into_state(src, state_dir, increment, merge)
 
 
 def repeat_offender_pairs(
@@ -524,18 +473,22 @@ def repeat_offender_pairs(
     ).select("ip", "first_ts", "repeat_ts")
 
 
-def _fold_into_state(stream: DataFrame, state_dir: str, increment, merge) -> None:
+def _fold_into_state(stream: DataFrame, state_dir: str, increment, merge) -> list:
     """Drain ``stream`` into a mergeable parquet state table at
-    ``state_dir`` (the streaming sketches ST-13 and ST-15..18).
+    ``state_dir`` (ST-9's transition counts and the streaming
+    sketches ST-13 and ST-15..18); returns the drain's progress
+    reports.
 
     Each micro-batch contributes ``increment(batch)``; it is unioned
     with the current state and ``merge`` collapses the union into the
-    new state. The swap is the S-10 compaction discipline: write-tmp
-    -> validate ``_SUCCESS`` -> rename, so a reader never sees a
-    half-written state. ``merge`` must be associative and commutative
-    over increments, which makes the drained state independent of how
-    the feed splits into micro-batches; that is what earns these
-    streaming queries a full hash-match oracle.
+    new state; the next batch reads it back with the schema it was
+    written with (no inference job). The swap is the S-10 compaction
+    discipline: write-tmp -> validate ``_SUCCESS`` -> rename, so a
+    reader never sees a half-written state. ``merge`` must be
+    associative and commutative over increments, which makes the
+    drained state independent of how the feed splits into
+    micro-batches; that is what earns these streaming queries a full
+    hash-match oracle.
 
     Every call is a fresh drain: stale state or a stale checkpoint
     would make availableNow skip already-seen files, and the
@@ -547,19 +500,24 @@ def _fold_into_state(stream: DataFrame, state_dir: str, increment, merge) -> Non
         if os.path.exists(d):
             shutil.rmtree(d)
 
+    schema = None  # of the current state; None until one is written
+
     def step(batch: DataFrame, _batch_id: int) -> None:
+        nonlocal schema
         upd = increment(batch)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            upd = spark.read.parquet(state_dir).unionByName(upd)
-        merge(upd).write.mode("overwrite").parquet(tmp)
+        if schema is not None:
+            upd = spark.read.schema(schema).parquet(state_dir).unionByName(upd)
+        state = merge(upd)
+        state.write.mode("overwrite").parquet(tmp)
         if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
             raise RuntimeError(f"state write to {state_dir} did not complete")
         if os.path.exists(state_dir):
             shutil.rmtree(state_dir)
         os.rename(tmp, state_dir)
+        schema = state.schema
 
     try:
-        _drain(
+        return _drain(
             stream.writeStream.foreachBatch(step)
             .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
@@ -570,7 +528,7 @@ def _fold_into_state(stream: DataFrame, state_dir: str, increment, merge) -> Non
             shutil.rmtree(d, ignore_errors=True)
 
 
-def streaming_kmv_state(parsed: DataFrame, state_dir: str, k: int = 16) -> None:
+def streaming_kmv_state(parsed: DataFrame, state_dir: str, k: int = 16) -> list:
     """ST-13: streaming KMV distinct-count sketch — maintain, per
     event tag, the k smallest 52-bit md5 hashes of the source IPs
     seen so far, merged incrementally by a ``foreachBatch`` job into
@@ -601,7 +559,7 @@ def streaming_kmv_state(parsed: DataFrame, state_dir: str, k: int = 16) -> None:
     )
     rn = F.row_number().over(Window.partitionBy("event").orderBy("h"))
     # one dedup AFTER the union subsumes a per-batch pre-dedup
-    _fold_into_state(
+    return _fold_into_state(
         hashed,
         state_dir,
         lambda batch: batch,
@@ -828,7 +786,7 @@ def streaming_lsh_state_occupancy(
     )
 
 
-def streaming_cms_state(parsed: DataFrame, state_dir: str) -> None:
+def streaming_cms_state(parsed: DataFrame, state_dir: str) -> list:
     """ST-15: streaming Count-Min Sketch maintenance — keep the d x w
     counter table of source-IP frequencies live by summing each
     micro-batch's (row, bucket) increments into a parquet state table.
@@ -853,7 +811,7 @@ def streaming_cms_state(parsed: DataFrame, state_dir: str) -> None:
         .withColumn("h", F.expr(_poly_hash_expr("ip")))
         .select(cms_cells(F.col("h")))
     )
-    _fold_into_state(
+    return _fold_into_state(
         cells,
         state_dir,
         lambda batch: batch.groupBy("row", "bucket").agg(
@@ -865,7 +823,7 @@ def streaming_cms_state(parsed: DataFrame, state_dir: str) -> None:
     )
 
 
-def streaming_hll_state(parsed: DataFrame, state_dir: str) -> None:
+def streaming_hll_state(parsed: DataFrame, state_dir: str) -> list:
     """ST-16: streaming HyperLogLog maintenance — keep SK-4's
     64-register distinct-source-IP sketch live by MAX-merging each
     micro-batch's (register, rho) observations into a parquet state
@@ -900,7 +858,7 @@ def streaming_hll_state(parsed: DataFrame, state_dir: str) -> None:
         F.expr(f"shiftright(h, {HLL_FIELD})").alias("idx"),
         F.expr(f"h & {HLL_FIELD_MASK}").alias("w"),
     ).select("idx", rho.alias("rho"))
-    _fold_into_state(
+    return _fold_into_state(
         obs,
         state_dir,
         lambda batch: batch.groupBy("idx").agg(F.max("rho").alias("r")),
@@ -908,7 +866,7 @@ def streaming_hll_state(parsed: DataFrame, state_dir: str) -> None:
     )
 
 
-def streaming_length_histogram_state(parsed: DataFrame, state_dir: str) -> None:
+def streaming_length_histogram_state(parsed: DataFrame, state_dir: str) -> list:
     """ST-17: streaming message-length histogram maintenance — a
     256-bin fixed-width histogram of parsed SSH message lengths
     (payload-size drift is a classic ops observable: a new log
@@ -931,7 +889,7 @@ def streaming_length_histogram_state(parsed: DataFrame, state_dir: str) -> None:
     bins = parsed.where(F.col("message").isNotNull()).select(
         F.expr("least(length(message), 1023) div 4").alias("bin")
     )
-    _fold_into_state(
+    return _fold_into_state(
         bins,
         state_dir,
         lambda batch: batch.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")),
@@ -939,7 +897,7 @@ def streaming_length_histogram_state(parsed: DataFrame, state_dir: str) -> None:
     )
 
 
-def streaming_bloom_state(parsed: DataFrame, state_dir: str) -> None:
+def streaming_bloom_state(parsed: DataFrame, state_dir: str) -> list:
     """ST-18: streaming Bloom-filter maintenance — SK-5's m=1024-bit,
     k=4-hash filter over the source IPs seen so far, kept live by
     union-DISTINCT-merging each micro-batch's set-bit positions into a
@@ -962,7 +920,7 @@ def streaming_bloom_state(parsed: DataFrame, state_dir: str) -> None:
     bits = parsed.where(F.col("ip").isNotNull()).select(
         F.explode(bloom_positions(F.expr(kmv_hash_expr("ip")))).alias("bit")
     )
-    _fold_into_state(
+    return _fold_into_state(
         bits,
         state_dir,
         lambda batch: batch.select("bit").distinct(),

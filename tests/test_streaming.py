@@ -16,7 +16,7 @@ from bigdata_logs_spark.operators.enrich import with_event_time
 from bigdata_logs_spark.operators.parse import parse_ssh_lines
 from bigdata_logs_spark.operators.ssh_synth import synthesize_ssh_lines
 from bigdata_logs_spark.streaming import (
-    event_transitions_tws,
+    event_transitions_state,
     read_ssh_stream,
     run_stream_to_memory,
     severity_enriched_counts,
@@ -98,19 +98,21 @@ def test_stream_static_severity_join_equals_batch(spark, stream_dir):
     }
 
 
-def test_event_transitions_equal_batch_lag_window(spark, stream_dir):
-    from pyspark.sql import Window
-
-    streamed = event_transitions_tws(read_ssh_stream(spark, stream_dir))
-    run_stream_to_memory(streamed, "t_trans", output_mode="append")
-    got = {
+def _transitions(spark, state_dir) -> dict:
+    """(ip, prev_event, event) -> n from ST-9's drained state."""
+    return {
         (r["ip"], r["prev_event"], r["event"]): r["n"]
-        for r in spark.table("t_trans").collect()
+        for r in spark.read.parquet(state_dir).where(F.col("n").isNotNull()).collect()
     }
 
-    batch = with_event_time(parse_ssh_lines(spark.read.text(stream_dir)))
+
+def _lag_oracle(spark, src_dir) -> dict:
+    """The same counts from one batch lag() window over the feed."""
+    from pyspark.sql import Window
+
+    batch = with_event_time(parse_ssh_lines(spark.read.text(src_dir)))
     w = Window.partitionBy("ip").orderBy("ts", "pid", "message")
-    want = {
+    return {
         (r["ip"], r["prev_event"], r["event"]): r["n"]
         for r in batch.filter(F.col("ip").isNotNull())
         .withColumn("prev_event", F.lag("event").over(w))
@@ -119,7 +121,44 @@ def test_event_transitions_equal_batch_lag_window(spark, stream_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    assert got == want
+
+
+def test_event_transitions_equal_batch_lag_window(spark, stream_dir, tmp_path):
+    state = str(tmp_path / "trans")
+    event_transitions_state(read_ssh_stream(spark, stream_dir), state)
+    assert _transitions(spark, state) == _lag_oracle(spark, stream_dir)
+
+
+def test_event_transitions_bridge_ignores_file_arrival_order(spark, tmp_path):
+    """One IP's events split over two files, and the file holding the
+    LATER timestamps arrives first (older mtime, one file per
+    trigger). The bridge transition joins the earlier half's last
+    event to the later half's first, as the batch lag() window does;
+    chaining state in arrival order would count disconnect ->
+    invalid_user instead of failed_password -> other (the accepted
+    login)."""
+    d = tmp_path / "reversed_src"
+    d.mkdir()
+    ip = "192.0.2.7"
+    (d / "late.log").write_text(
+        f"Jan 15 10:00:03 srv1 sshd[9]: Accepted password for u1 from {ip} port 22 ssh2\n"
+        f"Jan 15 10:00:04 srv1 sshd[9]: Received disconnect from {ip}: 11: Bye Bye [preauth]\n"
+    )
+    (d / "early.log").write_text(
+        f"Jan 15 10:00:01 srv1 sshd[9]: Invalid user guest1 from {ip}\n"
+        f"Jan 15 10:00:02 srv1 sshd[9]: Failed password for root from {ip} port 22 ssh2\n"
+    )
+    os.utime(d / "late.log", (1_700_000_000, 1_700_000_000))
+    os.utime(d / "early.log", (1_700_000_001, 1_700_000_001))
+
+    state = str(tmp_path / "trans")
+    progress = event_transitions_state(
+        read_ssh_stream(spark, str(d), max_files_per_trigger=1), state
+    )
+    assert sum(p["numInputRows"] > 0 for p in progress) == 2
+    want = _lag_oracle(spark, str(d))
+    assert len(want) == 3
+    assert _transitions(spark, state) == want
 
 
 def test_stream_dedup_removes_redelivered_lines(spark, stream_dir, tmp_path):
@@ -262,15 +301,9 @@ def test_append_mode_watermark_contract(spark, events, tmp_path):
 
 
 def test_event_transitions_multi_batch_reaggregates(spark, events, tmp_path_factory):
-    """The stateful transition counter emits PER-MICRO-BATCH partial
-    counts (state carries only the boundary event). A multi-batch
-    feed must therefore be re-aggregated by the consumer — this is
-    the registry consumer's groupBy/sum contract. Feed the stream
-    one file per trigger, split time-ordered (the operator's cross-
-    batch contract), and require equality with the global batch
-    lag() oracle."""
-    from pyspark.sql import Window
-
+    """A two-file feed split by time, one file per trigger: the state
+    folds both batches' segment summaries, and its count rows equal
+    the global batch lag() oracle."""
     d = str(tmp_path_factory.mktemp("sshstream_ordered"))
     bound = events.agg(F.expr("percentile_approx(ts, 0.5)")).first()[0]
     synthesize_ssh_lines(events.filter(F.col("ts") <= F.lit(bound))).coalesce(
@@ -280,34 +313,13 @@ def test_event_transitions_multi_batch_reaggregates(spark, events, tmp_path_fact
         1
     ).write.mode("append").text(d)
 
-    streamed = event_transitions_tws(
-        read_ssh_stream(spark, d, max_files_per_trigger=1)
+    state = str(tmp_path_factory.mktemp("trans_mb"))
+    progress = event_transitions_state(
+        read_ssh_stream(spark, d, max_files_per_trigger=1), state
     )
-    run_stream_to_memory(streamed, "t_trans_mb", output_mode="append")
-    raw = spark.table("t_trans_mb")
-    # proof this actually ran multi-batch: the sink holds partial
-    # rows, i.e. some (ip, prev, event) key appears more than once
-    assert raw.count() > raw.select("ip", "prev_event", "event").distinct().count()
-
-    got = {
-        (r["ip"], r["prev_event"], r["event"]): r["n"]
-        for r in raw.groupBy("ip", "prev_event", "event")
-        .agg(F.sum("n").alias("n"))
-        .collect()
-    }
-
-    batch = with_event_time(parse_ssh_lines(spark.read.text(d)))
-    w = Window.partitionBy("ip").orderBy("ts", "pid", "message")
-    want = {
-        (r["ip"], r["prev_event"], r["event"]): r["n"]
-        for r in batch.filter(F.col("ip").isNotNull())
-        .withColumn("prev_event", F.lag("event").over(w))
-        .filter(F.col("prev_event").isNotNull())
-        .groupBy("ip", "prev_event", "event")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
+    # proof this actually ran multi-batch
+    assert sum(p["numInputRows"] > 0 for p in progress) >= 2
+    assert _transitions(spark, state) == _lag_oracle(spark, d)
 
 
 def test_repeat_offender_join_accumulates_state_across_batches(
