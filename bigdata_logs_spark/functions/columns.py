@@ -77,11 +77,8 @@ _SPREAD_MEMO: dict[tuple, bool] = {}
 # core chews the whole corpus faster than a 32-task exchange can pay
 # for itself (measured: warm deltas at 64-584 KB are <0.3 s either
 # way, while every skipped exchange saves fixed task overhead in the
-# capped driver correctness sweep). Env-overridable for experiments.
-def _spread_min_bytes() -> int:
-    import os
-
-    return int(os.environ.get("BLS_SPREAD_MIN_BYTES", 256 * 1024))
+# capped driver correctness sweep).
+SPREAD_MIN_BYTES = 256 << 10
 
 
 def _local_input_bytes(files: tuple[str, ...]) -> int | None:
@@ -129,7 +126,7 @@ def spread_small_input(df, min_factor: int = 2):
     # core than behind an exchange, and skipping here also skips the
     # split-count estimate
     total = _local_input_bytes(files)
-    if total is not None and total < _spread_min_bytes():
+    if total is not None and total < SPREAD_MIN_BYTES:
         return df
     # key includes the decision inputs, not just the files — a later
     # call with a different min_factor or a session with different

@@ -250,9 +250,13 @@ def entity_profile(events: DataFrame) -> DataFrame:
             ),
             _dsum(F.col("value")).alias("total_value"),
         )
-        .withColumn("distinct_k", F.size("k_set").cast("long"))
-        .withColumn("k_list", F.array_join(F.col("k_set"), ","))
-        .withColumn("event_diversity", F.size("et_set").cast("long"))
+        .withColumns(
+            {
+                "distinct_k": F.size("k_set").cast("long"),
+                "k_list": F.array_join(F.col("k_set"), ","),
+                "event_diversity": F.size("et_set").cast("long"),
+            }
+        )
         .drop("k_set", "et_set")
     )
     score = F.least(
@@ -276,18 +280,19 @@ def entity_profile(events: DataFrame) -> DataFrame:
     bot = F.least(
         F.lit(100.0), 1.5 * F.col("event_diversity") + 2.0 * F.col("distinct_k")
     )
-    prof = prof.withColumn("attacker_score", attacker).withColumn("bot_score", bot)
+    prof = prof.withColumns({"attacker_score": attacker, "bot_score": bot})
     legit = F.greatest(
         F.lit(0.0), F.lit(100.0) - F.col("attacker_score") - F.col("bot_score")
     )
     prof = prof.withColumn("legit_score", legit)
     total = F.col("attacker_score") + F.col("bot_score") + F.col("legit_score")
-    return (
-        prof.withColumn("attacker_pct", F.round(F.col("attacker_score") * 100.0 / total, 1))
-        .withColumn("bot_pct", F.round(F.col("bot_score") * 100.0 / total, 1))
-        .withColumn("authorized_pct", F.round(F.col("legit_score") * 100.0 / total, 1))
-        .drop("attacker_score", "bot_score", "legit_score")
-    )
+    return prof.withColumns(
+        {
+            "attacker_pct": F.round(F.col("attacker_score") * 100.0 / total, 1),
+            "bot_pct": F.round(F.col("bot_score") * 100.0 / total, 1),
+            "authorized_pct": F.round(F.col("legit_score") * 100.0 / total, 1),
+        }
+    ).drop("attacker_score", "bot_score", "legit_score")
 
 
 def entity_profile_sorted(events: DataFrame) -> DataFrame:

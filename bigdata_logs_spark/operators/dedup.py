@@ -47,6 +47,9 @@ CONTAINMENT_THRESHOLD = 0.5
 # DD-18 candidate gate: minimum rare shingles a pair must share
 # before verification (the DD-12/DD-14 shared-fingerprint discipline)
 RARE_MIN_SHARED = 2
+# Corpus size from which _scope_verify gates the Jaccard re-explode
+# behind the LSH candidate set.
+SCOPE_VERIFY_MIN_BYTES = 64 << 20
 
 
 def _tokens(text: Column) -> Column:
@@ -59,18 +62,13 @@ def _scope_verify(docs: DataFrame) -> bool:
     the LSH candidate set (see comment at the use site). Local-file
     probe mirrors spread_small_input; unknown size (non-local fs,
     in-memory frame) means production scale — scope."""
-    import os
-
     from bigdata_logs_spark.functions.columns import _local_input_bytes
 
-    threshold = int(
-        os.environ.get("BLS_SCOPE_VERIFY_MIN_BYTES", 64 * 1024 * 1024)
-    )
     files = tuple(docs.inputFiles())
     if not files:
         return False  # in-memory test frames: tiny by construction
     total = _local_input_bytes(files)
-    return total is None or total >= threshold
+    return total is None or total >= SCOPE_VERIFY_MIN_BYTES
 
 
 def _shingles() -> Column:

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,12 +50,26 @@ def register(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
+    op: Callable[..., DataFrame] | None = None,
+    tables: tuple[str, ...] = (),
 ):
+    """Add a query to ``REGISTRY``.
+
+    With ``op``, the query is ``op`` applied to the named ``tables``
+    (loaded in that order) and nothing is returned; constant arguments
+    go in through ``functools.partial``. Without it, ``register`` is a
+    decorator for a builder ``fn(spark, sf_dir) -> DataFrame``.
+    A name already in ``REGISTRY`` raises ``ValueError``."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
         return fn
 
-    return deco
+    if op is None:
+        return deco
+    deco(lambda spark, sf_dir: op(*(load_table(spark, sf_dir, t) for t in tables)))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,12 +114,43 @@ SUSP_SQL = "('error', 'signup')"
 SUSP_CASE = f"CASE WHEN event_type IN {SUSP_SQL} THEN 1 ELSE 0 END"
 HIGH_VALUE = "150.0"
 
+# 1 on a user's first event and on every event more than 30 minutes
+# after that user's previous one (ties ordered by event_id).
+SESSION_START_SQL = """CASE WHEN floor(epoch(ts))::BIGINT
+                       - lag(floor(epoch(ts))::BIGINT)
+                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                       IS NULL
+                  OR floor(epoch(ts))::BIGINT
+                       - lag(floor(epoch(ts))::BIGINT)
+                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                       > 1800
+             THEN 1 ELSE 0 END"""
+
+# Daily event counts ``base(d, x)``, d in days since 1970-01-01, and the
+# gap-free calendar ``cal(d)`` from the first day to the last.
+DAILY_CAL_CTES = """
+    WITH base AS (
+      SELECT (ts::DATE - DATE '1970-01-01')::BIGINT AS d,
+             COUNT(*)::BIGINT AS x
+      FROM events GROUP BY 1
+    ), rngt AS (
+      SELECT MIN(d) AS lo, MAX(d) AS hi FROM base
+    ), cal AS (
+      SELECT unnest(range(lo, hi + 1)) AS d FROM rngt
+    )"""
+# DAILY_CAL_CTES plus ``series(d, x)``: the daily counts with 0 on days
+# without events.
+DAILY_SERIES_CTES = DAILY_CAL_CTES + """, series AS (
+      SELECT c.d, COALESCE(b.x, 0)::BIGINT AS x
+      FROM cal c LEFT JOIN base b USING (d)
+    )"""
+
 
 # --------------------------------------------------------------------------
 # Dashboard family over `events`
 # --------------------------------------------------------------------------
 
-@register(
+register(
     "global_metrics",
     f"""
     SELECT
@@ -116,25 +162,19 @@ HIGH_VALUE = "150.0"
     FROM events
     """,
     tags=("D-18", "D-19", "D-20", "D-15"),
+    op=D.global_metrics, tables=("events",),
 )
-def q_global_metrics(spark, sf_dir):
-    return D.global_metrics(_events(spark, sf_dir))
 
 
-@register(
+register(
     "global_metrics_approx",
     None,  # HLL sketches differ across engines — rows-only check.
     tags=("D-19",),
+    op=D.global_metrics_approx, tables=("events",),
 )
-def q_global_metrics_approx(spark, sf_dir):
-    """100 TB variant of D-19: approx_count_distinct (HLL++) replaces
-    the exact global distinct — no exact distinct over billions of
-    keys. Deterministic for fixed input but engine-specific, so no
-    cross-engine oracle."""
-    return D.global_metrics_approx(_events(spark, sf_dir))
 
 
-@register(
+register(
     "event_type_counts",
     """
     SELECT event_type, COUNT(*)::BIGINT AS n
@@ -142,12 +182,11 @@ def q_global_metrics_approx(spark, sf_dir):
     ORDER BY n DESC, event_type
     """,
     tags=("D-21",),
+    op=D.event_type_counts, tables=("events",),
 )
-def q_event_type_counts(spark, sf_dir):
-    return D.event_type_counts(_events(spark, sf_dir))
 
 
-@register(
+register(
     "top_entities",
     """
     SELECT user_id, COUNT(*)::BIGINT AS n
@@ -155,48 +194,44 @@ def q_event_type_counts(spark, sf_dir):
     ORDER BY n DESC, user_id LIMIT 10
     """,
     tags=("D-21", "D-39"),
+    op=partial(D.entity_value_counts, k=10), tables=("events",),
 )
-def q_top_entities(spark, sf_dir):
-    return D.entity_value_counts(_events(spark, sf_dir), k=10)
 
 
-@register(
+register(
     "events_per_hour",
     """
     SELECT strftime(ts, '%H') AS hour, COUNT(*)::BIGINT AS n
     FROM events GROUP BY 1 ORDER BY hour
     """,
     tags=("D-22", "D-10", "D-12"),
+    op=D.events_per_hour, tables=("events",),
 )
-def q_events_per_hour(spark, sf_dir):
-    return D.events_per_hour(_events(spark, sf_dir))
 
 
-@register(
+register(
     "events_per_day",
     """
     SELECT strftime(ts, '%Y-%m-%d') AS date, COUNT(*)::BIGINT AS total_events
     FROM events GROUP BY 1 ORDER BY date
     """,
     tags=("D-22", "D-11"),
+    op=D.events_per_day, tables=("events",),
 )
-def q_events_per_day(spark, sf_dir):
-    return D.events_per_day(_events(spark, sf_dir))
 
 
-@register(
+register(
     "events_by_type_per_day",
     """
     SELECT strftime(ts, '%Y-%m-%d') AS date, event_type, COUNT(*)::BIGINT AS n
     FROM events GROUP BY 1, 2 ORDER BY date, event_type
     """,
     tags=("D-23",),
+    op=D.events_by_type_per_day, tables=("events",),
 )
-def q_events_by_type_per_day(spark, sf_dir):
-    return D.events_by_type_per_day(_events(spark, sf_dir))
 
 
-@register(
+register(
     "suspicious_vs_normal_per_day",
     f"""
     SELECT strftime(ts, '%Y-%m-%d') AS date,
@@ -205,12 +240,11 @@ def q_events_by_type_per_day(spark, sf_dir):
     FROM events GROUP BY 1 ORDER BY date
     """,
     tags=("D-13", "D-23", "D-24"),
+    op=D.suspicious_vs_normal_per_day, tables=("events",),
 )
-def q_suspicious_vs_normal_per_day(spark, sf_dir):
-    return D.suspicious_vs_normal_per_day(_events(spark, sf_dir))
 
 
-@register(
+register(
     "entity_event_matrix",
     """
     SELECT user_id,
@@ -222,9 +256,8 @@ def q_suspicious_vs_normal_per_day(spark, sf_dir):
     FROM events GROUP BY user_id ORDER BY user_id
     """,
     tags=("D-25", "D-26"),
+    op=D.entity_event_matrix, tables=("events",),
 )
-def q_entity_event_matrix(spark, sf_dir):
-    return D.entity_event_matrix(_events(spark, sf_dir))
 
 
 # Shared CTE for the flagship profile oracle (D-25..D-31 + D-14 + D-43).
@@ -283,14 +316,13 @@ WITH base AS (
 """
 
 
-@register(
+register(
     "entity_profile",
     PROFILE_ORACLE_CTE + "SELECT * FROM profile ORDER BY suspicious_score DESC, user_id",
     tags=("D-25", "D-26", "D-27", "D-28", "D-29", "D-30", "D-31", "D-14",
           "D-16", "D-17", "D-36", "D-41", "D-42", "D-43", "D-44"),
+    op=D.entity_profile_sorted, tables=("events",),
 )
-def q_entity_profile(spark, sf_dir):
-    return D.entity_profile_sorted(_events(spark, sf_dir))
 
 
 @register(
@@ -341,16 +373,15 @@ def q_score_histogram(spark, sf_dir):
     return D.score_histogram(D.entity_profile(_events(spark, sf_dir)))
 
 
-@register(
+register(
     "distinct_event_types",
     "SELECT DISTINCT event_type FROM events WHERE event_type IS NOT NULL ORDER BY event_type",
     tags=("D-35",),
+    op=D.distinct_event_types, tables=("events",),
 )
-def q_distinct_event_types(spark, sf_dir):
-    return D.distinct_event_types(_events(spark, sf_dir))
 
 
-@register(
+register(
     "events_for_entity",
     """
     SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts, user_id,
@@ -359,12 +390,11 @@ def q_distinct_event_types(spark, sf_dir):
     ORDER BY ts DESC, event_id
     """,
     tags=("D-6", "D-7", "D-36"),
+    op=partial(D.events_for_entity, user_id=7), tables=("events",),
 )
-def q_events_for_entity(spark, sf_dir):
-    return D.events_for_entity(_events(spark, sf_dir), user_id=7)
 
 
-@register(
+register(
     "events_of_type",
     """
     SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts, user_id,
@@ -372,24 +402,22 @@ def q_events_for_entity(spark, sf_dir):
     FROM events WHERE event_type = 'error'
     """,
     tags=("D-3", "D-2"),
+    op=partial(D.events_of_type, event_type="error"), tables=("events",),
 )
-def q_events_of_type(spark, sf_dir):
-    return D.events_of_type(_events(spark, sf_dir), event_type="error")
 
 
-@register(
+register(
     "entity_hourly_activity",
     """
     SELECT strftime(ts, '%H') || ':00' AS hour_label, COUNT(*)::BIGINT AS n
     FROM events WHERE user_id = 7 GROUP BY 1 ORDER BY hour_label
     """,
     tags=("D-6", "D-22", "D-12"),
+    op=partial(D.entity_hourly_activity, user_id=7), tables=("events",),
 )
-def q_entity_hourly_activity(spark, sf_dir):
-    return D.entity_hourly_activity(_events(spark, sf_dir), user_id=7)
 
 
-@register(
+register(
     "top_events_with_others",
     """
     WITH counts AS (
@@ -405,9 +433,8 @@ def q_entity_hourly_activity(spark, sf_dir):
     FROM ranked GROUP BY 1 ORDER BY n DESC, category
     """,
     tags=("D-40",),
+    op=partial(T.top_k_with_others, key="user_id", k=10), tables=("events",),
 )
-def q_top_events_with_others(spark, sf_dir):
-    return T.top_k_with_others(_events(spark, sf_dir), key="user_id", k=10)
 
 
 @register(
@@ -769,6 +796,22 @@ SSH_PARSE_CTE = (
 )"""
 )
 
+# SSH_PARSE_CTE plus the failed-auth ``bursts(ip, ts, burst)``: per
+# failure, the IP's failures in the 600 s ending at it.
+SSH_FAIL_BURSTS_CTES = SSH_PARSE_CTE + """
+    , fails AS (
+      SELECT ip, strptime('2024 ' || month || ' ' || day || ' ' || time,
+                          '%Y %b %d %H:%M:%S') AS ts
+      FROM parsed
+      WHERE event IN ('failed_password', 'invalid_user', 'auth_failure')
+        AND ip IS NOT NULL
+    ), bursts AS (
+      SELECT ip, ts,
+             (COUNT(*) OVER (PARTITION BY ip ORDER BY epoch(ts)::BIGINT
+                RANGE BETWEEN 599 PRECEDING AND CURRENT ROW))::BIGINT AS burst
+      FROM fails
+    )"""
+
 
 def _ssh_lines(spark, sf_dir):
     # The sf0.1 events parquet is a single file, so every downstream
@@ -1098,7 +1141,7 @@ from bigdata_logs_spark.operators import joins as J  # noqa: E402
 REV_SQL = "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(8,2))"
 
 
-@register(
+register(
     "pricing_summary",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -1115,12 +1158,11 @@ REV_SQL = "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIM
     ORDER BY l_returnflag, l_linestatus
     """,
     tags=("J-1",),
+    op=J.pricing_summary, tables=("lineitem",),
 )
-def q_pricing_summary(spark, sf_dir):
-    return J.pricing_summary(load_table(spark, sf_dir, "lineitem"))
 
 
-@register(
+register(
     "top_revenue_customers",
     f"""
     WITH order_rev AS (
@@ -1136,16 +1178,11 @@ def q_pricing_summary(spark, sf_dir):
     ORDER BY revenue DESC, c_custkey LIMIT 10
     """,
     tags=("J-2", "D-39"),
+    op=J.top_revenue_customers, tables=("customer", "orders", "lineitem"),
 )
-def q_top_revenue_customers(spark, sf_dir):
-    return J.top_revenue_customers(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
 
 
-@register(
+register(
     "regional_revenue",
     f"""
     WITH order_rev AS (
@@ -1164,18 +1201,12 @@ def q_top_revenue_customers(spark, sf_dir):
     ORDER BY region, nation
     """,
     tags=("J-3",),
+    op=J.regional_revenue,
+    tables=("region", "nation", "customer", "orders", "lineitem"),
 )
-def q_regional_revenue(spark, sf_dir):
-    return J.regional_revenue(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
 
 
-@register(
+register(
     "customers_without_orders",
     """
     SELECT c_custkey, c_name, c_mktsegment
@@ -1184,14 +1215,11 @@ def q_regional_revenue(spark, sf_dir):
     ORDER BY c_custkey
     """,
     tags=("J-4",),
+    op=J.customers_without_orders, tables=("customer", "orders"),
 )
-def q_customers_without_orders(spark, sf_dir):
-    return J.customers_without_orders(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
 
 
-@register(
+register(
     "customers_with_open_orders",
     """
     SELECT c_custkey, c_name
@@ -1201,14 +1229,11 @@ def q_customers_without_orders(spark, sf_dir):
     ORDER BY c_custkey
     """,
     tags=("J-5",),
+    op=J.customers_with_open_orders, tables=("customer", "orders"),
 )
-def q_customers_with_open_orders(spark, sf_dir):
-    return J.customers_with_open_orders(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
 
 
-@register(
+register(
     "part_type_revenue",
     f"""
     SELECT p_type,
@@ -1218,14 +1243,11 @@ def q_customers_with_open_orders(spark, sf_dir):
     GROUP BY p_type ORDER BY p_type
     """,
     tags=("J-6",),
+    op=J.part_type_revenue, tables=("part", "lineitem"),
 )
-def q_part_type_revenue(spark, sf_dir):
-    return J.part_type_revenue(
-        load_table(spark, sf_dir, "part"), load_table(spark, sf_dir, "lineitem")
-    )
 
 
-@register(
+register(
     "top_order_per_customer",
     """
     SELECT o_custkey, o_orderkey, o_totalprice,
@@ -1238,12 +1260,11 @@ def q_part_type_revenue(spark, sf_dir):
     ORDER BY o_custkey
     """,
     tags=("W-1",),
+    op=J.top_order_per_customer, tables=("orders",),
 )
-def q_top_order_per_customer(spark, sf_dir):
-    return J.top_order_per_customer(load_table(spark, sf_dir, "orders"))
 
 
-@register(
+register(
     "customer_order_stats",
     """
     WITH per_cust AS (
@@ -1258,26 +1279,22 @@ def q_top_order_per_customer(spark, sf_dir):
     ORDER BY c_custkey
     """,
     tags=("J-7", "D-41", "D-42"),
+    op=J.customer_order_stats, tables=("customer", "orders"),
 )
-def q_customer_order_stats(spark, sf_dir):
-    return J.customer_order_stats(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
 
 
-@register(
+register(
     "order_priority_counts",
     """
     SELECT o_orderpriority, COUNT(*)::BIGINT AS n
     FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     tags=("D-21",),
+    op=J.order_priority_counts, tables=("orders",),
 )
-def q_order_priority_counts(spark, sf_dir):
-    return J.order_priority_counts(load_table(spark, sf_dir, "orders"))
 
 
-@register(
+register(
     "segment_nation_sales",
     """
     SELECT c_mktsegment, n_name AS nation, COUNT(*)::BIGINT AS n_orders,
@@ -1289,13 +1306,8 @@ def q_order_priority_counts(spark, sf_dir):
     ORDER BY c_mktsegment, nation
     """,
     tags=("J-8",),
+    op=J.segment_nation_sales, tables=("customer", "nation", "orders"),
 )
-def q_segment_nation_sales(spark, sf_dir):
-    return J.segment_nation_sales(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "orders"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1329,12 +1341,67 @@ BAND_SIGS_SQL = """SELECT doc_id, r.band::INT AS band,
                   ELSE substr(md5('#' || s), (r.band - 4) * 8 + 1, 8) END)) AS sig
     FROM sh CROSS JOIN range(0, 8) AS r(band)"""
 
+# TOKS_CTE plus the token-bigram graph: ``dir(src, dst)`` holds every
+# pair of adjacent tokens in both directions, with multiplicity.
+TOKEN_DIR_CTES = TOKS_CTE + """
+    , pairs AS (
+      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
+      FROM toks WHERE len(tokens) >= 2
+    ), dir AS (
+      SELECT a AS src, b AS dst FROM pairs
+      UNION ALL SELECT b AS src, a AS dst FROM pairs
+    )"""
+
+# A candidate pair's exact shingle Jaccard (``x``/``y`` rows of ``sh``),
+# rounded as DD's verify step rounds it.
+JACCARD_SQL = (
+    "ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE"
+    " / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)"
+)
+
+# TOKS_CTE plus DD's MinHash tables: the shingle sets ``sh`` and the band
+# signatures ``sigs``.
+LSH_SIGS_CTES = (
+    TOKS_CTE
+    + f"""
+    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
+    , sigs AS (
+      {BAND_SIGS_SQL}
+    )"""
+)
+
+# LSH_SIGS_CTES plus ``sigs_ok``: the signatures whose (band, sig) bucket
+# holds at most 64 docs, DD's bucket-occupancy cap.
+LSH_SIGS_OK_CTES = LSH_SIGS_CTES + """
+    , ok AS (
+      SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
+    )
+    , sigs_ok AS (SELECT s.* FROM sigs s JOIN ok USING (band, sig))"""
+
+# Containment verification of ``cand(doc_a, doc_b)`` over ``sh``: the
+# pairs whose |A∩B| / min(|A|, |B|) reaches DD's threshold, as the
+# query's final SELECT.
+CONTAINMENT_VERIFY_SQL = f"""
+    , cont AS (
+      SELECT doc_a, doc_b,
+             len(list_intersect(x.shingles, y.shingles))::BIGINT AS n_inter,
+             len(x.shingles)::BIGINT AS sz_a, len(y.shingles)::BIGINT AS sz_b
+      FROM cand JOIN sh x ON cand.doc_a = x.doc_id
+                JOIN sh y ON cand.doc_b = y.doc_id
+    )
+    SELECT doc_a, doc_b, n_inter, sz_a, sz_b,
+           ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) AS containment
+    FROM cont
+    WHERE ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) >= {DD.CONTAINMENT_THRESHOLD}
+    ORDER BY doc_a, doc_b
+"""
+
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
-@register(
+register(
     "doc_stats_by_lang",
     """
     SELECT lang, COUNT(*)::BIGINT AS n_docs, SUM(n_chars)::BIGINT AS total_chars,
@@ -1343,12 +1410,11 @@ def _docs(spark, sf_dir):
     FROM documents GROUP BY lang ORDER BY lang
     """,
     tags=("T-1",),
+    op=TX.doc_stats_by_lang, tables=("documents",),
 )
-def q_doc_stats_by_lang(spark, sf_dir):
-    return TX.doc_stats_by_lang(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "token_counts",
     TOKS_CTE
     + """
@@ -1357,12 +1423,11 @@ def q_doc_stats_by_lang(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("T-2",),
+    op=TX.token_counts, tables=("documents",),
 )
-def q_token_counts(spark, sf_dir):
-    return TX.token_counts(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "word_frequencies",
     TOKS_CTE
     + """
@@ -1371,12 +1436,11 @@ def q_token_counts(spark, sf_dir):
     GROUP BY word ORDER BY n DESC, word LIMIT 50
     """,
     tags=("T-3",),
+    op=partial(TX.word_frequencies, k=50), tables=("documents",),
 )
-def q_word_frequencies(spark, sf_dir):
-    return TX.word_frequencies(_docs(spark, sf_dir), k=50)
 
 
-@register(
+register(
     "quality_scores",
     TOKS_CTE
     + """
@@ -1393,12 +1457,11 @@ def q_word_frequencies(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("T-4",),
+    op=TX.quality_scores, tables=("documents",),
 )
-def q_quality_scores(spark, sf_dir):
-    return TX.quality_scores(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "lang_id",
     TOKS_CTE
     + """
@@ -1409,12 +1472,11 @@ def q_quality_scores(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("T-5",),
+    op=TX.lang_id, tables=("documents",),
 )
-def q_lang_id(spark, sf_dir):
-    return TX.lang_id(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "token_counts_pandas_udf",
     TOKS_CTE
     + """
@@ -1423,15 +1485,11 @@ def q_lang_id(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("U-2",),
+    op=TX.token_counts_pandas_udf, tables=("documents",),
 )
-def q_token_counts_pandas_udf(spark, sf_dir):
-    """Scalar @pandas_udf (Arrow series->series) twin of the native
-    token_counts — proves the vectorized Python escape hatch yields
-    hash-identical results to the JVM expression path."""
-    return TX.token_counts_pandas_udf(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "doc_length_zscores",
     """
     SELECT doc_id, lang, n_chars::BIGINT AS n_chars,
@@ -1447,15 +1505,11 @@ def q_token_counts_pandas_udf(spark, sf_dir):
     ) ORDER BY doc_id
     """,
     tags=("U-1",),
+    op=TX.doc_length_zscores, tables=("documents",),
 )
-def q_doc_length_zscores(spark, sf_dir):
-    """Grouped-map applyInPandas (Arrow-batched pandas per lang
-    group): per-language length z-scores with integer-exact moments,
-    so the Python-worker path is still oracle-checkable."""
-    return TX.doc_length_zscores(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "fingerprints",
     TOKS_CTE
     + """
@@ -1467,12 +1521,11 @@ def q_doc_length_zscores(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("T-6",),
+    op=TX.fingerprints, tables=("documents",),
 )
-def q_fingerprints(spark, sf_dir):
-    return TX.fingerprints(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "exact_dedup",
     """
     SELECT MIN(doc_id)::BIGINT AS doc_id, md5(text) AS content_key,
@@ -1480,12 +1533,11 @@ def q_fingerprints(spark, sf_dir):
     FROM documents GROUP BY md5(text) ORDER BY doc_id
     """,
     tags=("DD-1",),
+    op=DD.exact_dedup, tables=("documents",),
 )
-def q_exact_dedup(spark, sf_dir):
-    return DD.exact_dedup(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "minhash_signatures",
     TOKS_CTE
     + f"""
@@ -1494,12 +1546,11 @@ def q_exact_dedup(spark, sf_dir):
     ORDER BY doc_id, band
     """,
     tags=("DD-2",),
+    op=DD.minhash_signatures, tables=("documents",),
 )
-def q_minhash_signatures(spark, sf_dir):
-    return DD.minhash_signatures(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "minhash_buckets",
     TOKS_CTE
     + f"""
@@ -1513,12 +1564,11 @@ def q_minhash_signatures(spark, sf_dir):
     ORDER BY band, sig
     """,
     tags=("DD-2",),
+    op=DD.minhash_buckets, tables=("documents",),
 )
-def q_minhash_buckets(spark, sf_dir):
-    return DD.minhash_buckets(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "simhash",
     TOKS_CTE
     + """
@@ -1531,12 +1581,11 @@ def q_minhash_buckets(spark, sf_dir):
     FROM toks ORDER BY doc_id
     """,
     tags=("DD-3",),
+    op=DD.simhash, tables=("documents",),
 )
-def q_simhash(spark, sf_dir):
-    return DD.simhash(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "jaccard_pairs",
     TOKS_CTE
     + """
@@ -1553,60 +1602,63 @@ def q_simhash(spark, sf_dir):
     ORDER BY doc_a, doc_b
     """,
     tags=("DD-4",),
+    op=DD.jaccard_pairs, tables=("documents",),
 )
-def q_jaccard_pairs(spark, sf_dir):
-    return DD.jaccard_pairs(_docs(spark, sf_dir))
 
 
-# Shared LSH-pipeline CTE chain ending in a ``pairs`` relation of
-# verified near-dup pairs — consumed by the near_dup_pairs oracle and
-# the DD-11 calibration oracle (one definition so the two cannot
-# drift; ``sigs`` is also reused for band agreement).
-NDP_PAIRS_CTES = (
-    TOKS_CTE
+# The LSH pipeline up to ``pairs(doc_a, doc_b, jaccard)``, the verified
+# candidate pairs. NDP_PAIRS_CTES keeps the pairs at Jaccard >= 0.05
+# (near_dup_pairs and the DD-11 calibration, which also reuses ``sigs``
+# for band agreement); ND_PAIRS_CTE keeps every candidate pair.
+_ND_PAIRS_SQL = (
+    LSH_SIGS_OK_CTES
     + f"""
-    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
-    , sigs AS (
-      {BAND_SIGS_SQL}
-    )
-    , ok AS (
-      SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
-    )
-    , sigs_ok AS (SELECT s.* FROM sigs s JOIN ok USING (band, sig))
     , cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM sigs_ok a JOIN sigs_ok b ON a.band = b.band AND a.sig = b.sig
       WHERE a.doc_id < b.doc_id
     )
     , pairs AS (
-      SELECT doc_a, doc_b,
-             ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                   / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-               AS jaccard
+      SELECT doc_a, doc_b, {JACCARD_SQL} AS jaccard
       FROM cand JOIN sh x ON cand.doc_a = x.doc_id
-                JOIN sh y ON cand.doc_b = y.doc_id
-      WHERE ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                  / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-            >= 0.05
-    )"""
+                JOIN sh y ON cand.doc_b = y.doc_id"""
 )
+NDP_PAIRS_CTES = _ND_PAIRS_SQL + f"\n      WHERE {JACCARD_SQL} >= 0.05\n    )"
+ND_PAIRS_CTE = _ND_PAIRS_SQL + "\n    )\n"
+
+# Connected components of the near-dup graph at Jaccard >= 0.5, by
+# recursive transitive closure: ``comp(doc_id, component)`` maps every
+# doc in a pair to its component's smallest doc_id.
+ND_COMPONENTS_CTES = ND_PAIRS_CTE.replace(
+    "WITH toks", "WITH RECURSIVE toks", 1
+) + """
+    , edges AS (
+      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
+      UNION ALL
+      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
+    )
+    , reach(u, v) AS (
+      SELECT u, v FROM edges
+      UNION
+      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+    )
+    , comp AS (
+      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
+    )"""
 
 
-@register(
+register(
     "near_dup_pairs",
     NDP_PAIRS_CTES
     + """
     SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b
     """,
     tags=("DD-2", "DD-4"),
+    op=DD.near_dup_pairs, tables=("documents",),
 )
-def q_near_dup_pairs(spark, sf_dir):
-    """Full near-dup pipeline: MinHash-LSH bucket candidates ->
-    exact shingle-Jaccard verification (no O(n²) pair expansion)."""
-    return DD.near_dup_pairs(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "minhash_calibration",
     NDP_PAIRS_CTES
     + """
@@ -1628,12 +1680,8 @@ def q_near_dup_pairs(spark, sf_dir):
     FROM agree
     """,
     tags=("DD-11",),
+    op=DD.minhash_calibration, tables=("documents",),
 )
-def q_minhash_calibration(spark, sf_dir):
-    """Estimator self-measurement: banded-signature agreement vs
-    exact Jaccard over the verified pair list (integer-exact sums,
-    one division per mean)."""
-    return DD.minhash_calibration(_docs(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -1654,7 +1702,7 @@ def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-@register(
+register(
     "embedding_norms",
     f"""
     SELECT vec_id, label,
@@ -1662,12 +1710,11 @@ def _emb(spark, sf_dir):
     FROM embeddings ORDER BY vec_id
     """,
     tags=("E-1",),
+    op=SIM.embedding_norms, tables=("embeddings",),
 )
-def q_embedding_norms(spark, sf_dir):
-    return SIM.embedding_norms(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "knn_brute_force",
     f"""
     WITH q AS (
@@ -1691,12 +1738,11 @@ def q_embedding_norms(spark, sf_dir):
     ORDER BY query_id, rank
     """,
     tags=("E-2",),
+    op=SIM.knn_brute_force, tables=("embeddings",),
 )
-def q_knn_brute_force(spark, sf_dir):
-    return SIM.knn_brute_force(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "knn_label_accuracy",
     f"""
     WITH q AS (
@@ -1735,16 +1781,11 @@ def q_knn_brute_force(spark, sf_dir):
     FROM pred GROUP BY 1 ORDER BY 1
     """,
     tags=("E-23",),
+    op=SIM.knn_label_accuracy, tables=("embeddings",),
 )
-def q_knn_label_accuracy(spark, sf_dir):
-    """E-23 leave-one-out kNN label accuracy: the deterministic
-    vec_id%8 eval split classified by majority vote of 5 exact-cosine
-    neighbours; per-label hit rates — the embedding-space sanity
-    metric in front of every ANN/cluster stage."""
-    return SIM.knn_label_accuracy(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "label_cluster_quality",
     """
     WITH comps AS (
@@ -1790,13 +1831,8 @@ def q_knn_label_accuracy(spark, sf_dir):
     WHERE rk = 1 ORDER BY label
     """,
     tags=("E-24",),
+    op=SIM.label_cluster_quality, tables=("embeddings",),
 )
-def q_label_cluster_quality(spark, sf_dir):
-    """E-24 Davies-Bouldin report: per-label scatter, most-confusable
-    neighbour label, and the DB separation component — integer
-    micro-unit geometry (positive-shifted so floor division is
-    engine-identical), all pairwise work on k x k labels."""
-    return SIM.label_cluster_quality(_emb(spark, sf_dir))
 
 
 def _pca_oracle() -> str:
@@ -1875,21 +1911,15 @@ def _pca_oracle() -> str:
     return sql
 
 
-@register(
+register(
     "pca_top_component",
     _pca_oracle(),
     tags=("E-25",),
+    op=SIM.pca_top_component, tables=("embeddings",),
 )
-def q_pca_top_component(spark, sf_dir):
-    """E-25 top principal component by fixed-point power iteration:
-    integer covariance via the distributed outer-product self-join,
-    shift-rescaled broadcast matrix, engine-identical floor-division
-    renormalization, Rayleigh variance share — the whitening /
-    collapse-detection axis of the embedding stack."""
-    return SIM.pca_top_component(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "label_centroids",
     """
     WITH exploded AS (
@@ -1902,12 +1932,11 @@ def q_pca_top_component(spark, sf_dir):
     FROM exploded GROUP BY label, dim ORDER BY label, dim
     """,
     tags=("E-3",),
+    op=SIM.label_centroids, tables=("embeddings",),
 )
-def q_label_centroids(spark, sf_dir):
-    return SIM.label_centroids(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "lsh_sign_buckets",
     f"""
     WITH planes AS (
@@ -1925,12 +1954,11 @@ def q_label_centroids(spark, sf_dir):
     FROM bits GROUP BY bucket ORDER BY bucket
     """,
     tags=("E-4",),
+    op=SIM.lsh_sign_buckets, tables=("embeddings",),
 )
-def q_lsh_sign_buckets(spark, sf_dir):
-    return SIM.lsh_sign_buckets(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "embedding_near_dup",
     f"""
     WITH n AS (
@@ -1947,13 +1975,8 @@ def q_lsh_sign_buckets(spark, sf_dir):
     ORDER BY vec_a, vec_b
     """,
     tags=("DD-5", "E-2"),
+    op=SIM.embedding_near_dup, tables=("embeddings",),
 )
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs. Candidates come from
-    exact angular cell pruning (label cells + triangle inequality),
-    so the oracle stays the exact all-pairs definition while the
-    plan never contains a corpus-wide nested loop."""
-    return SIM.embedding_near_dup(_emb(spark, sf_dir))
 
 
 L2_SQL = (
@@ -1961,13 +1984,9 @@ L2_SQL = (
     "i -> ({a}[i]::DOUBLE - {b}[i]) * ({a}[i]::DOUBLE - {b}[i])))"
 )
 
-
-def _ivf_oracle(nprobe: int) -> str:
-    """IVF-Flat oracle SQL, parameterized by nprobe (the probes CTE's
-    rnk cutoff) so the E-17 sweep can instantiate several settings
-    without copy drift."""
-    return f"""
-    WITH exploded AS (
+# The label centroids, IVF's coarse quantizer: ``cent(cell, cvec)``, each
+# label's mean embedding rounded to 6 places. The first CTE of a WITH.
+LABEL_CENTROIDS_CTES = """exploded AS (
       SELECT label, i - 1 AS dim,
              CAST(embedding[i]::DOUBLE AS DECIMAL(28,12)) AS xd
       FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
@@ -1976,7 +1995,15 @@ def _ivf_oracle(nprobe: int) -> str:
         SELECT label, dim, ROUND(CAST(SUM(xd) AS DOUBLE) / COUNT(*), 6) AS c
         FROM exploded GROUP BY label, dim)
       GROUP BY label
-    ), ranked AS (
+    )"""
+
+
+def _ivf_oracle(nprobe: int) -> str:
+    """IVF-Flat oracle SQL, parameterized by nprobe (the probes CTE's
+    rnk cutoff) so the E-17 sweep can instantiate several settings
+    without copy drift."""
+    return f"""
+    WITH {LABEL_CENTROIDS_CTES}, ranked AS (
       SELECT e.vec_id, e.embedding, c.cell,
              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
                ROUND({L2_SQL.format(a='e.embedding', b='c.cvec')}, 6), c.cell)
@@ -2007,16 +2034,12 @@ def _ivf_oracle(nprobe: int) -> str:
     """
 
 
-@register(
+register(
     "ann_ivf_topk",
     _ivf_oracle(nprobe=2),
     tags=("E-5",),
+    op=SIM.ann_ivf_topk, tables=("embeddings",),
 )
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF-Flat ANN: label-centroid coarse quantizer, nprobe=2 cell
-    probing, exact cosine re-rank within the probed inverted lists
-    (the scale path beside the sign-LSH buckets)."""
-    return SIM.ann_ivf_topk(_emb(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -2352,7 +2375,7 @@ def _bucket_sql(salt: str) -> str:
     )
 
 
-@register(
+register(
     "train_val_test_split",
     f"""
     WITH b AS (
@@ -2365,14 +2388,11 @@ def _bucket_sql(salt: str) -> str:
     FROM b ORDER BY doc_id
     """,
     tags=("PL-1",),
+    op=PL.train_val_test_split, tables=("documents",),
 )
-def q_train_val_test_split(spark, sf_dir):
-    """Deterministic id-hash train/val/test assignment — narrow
-    projection, no shuffle, reproducible under any partitioning."""
-    return PL.train_val_test_split(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "stratified_sample",
     f"""
     WITH b AS (
@@ -2383,14 +2403,13 @@ def q_train_val_test_split(spark, sf_dir):
     ORDER BY doc_id
     """,
     tags=("PL-2",),
+    op=PL.stratified_sample, tables=("documents",),
 )
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic per-language downsampling (training-mix
-    shaping); independent hash salt from the split assignment."""
-    return PL.stratified_sample(_docs(spark, sf_dir))
 
 
-@register(
+# k=4 so the sf0.01 corpus yields a non-trivial overlap set; the
+# production default is 8.
+register(
     "contamination_check",
     TOKS_CTE
     + """
@@ -2408,14 +2427,8 @@ def q_stratified_sample(spark, sf_dir):
     GROUP BY doc_id ORDER BY doc_id
     """,
     tags=("PL-3",),
+    op=partial(PL.contamination_check, k=4), tables=("documents",),
 )
-def q_contamination_check(spark, sf_dir):
-    """Benchmark-contamination scan: k-gram hash overlap between
-    candidate training docs and the benchmark stand-in (source
-    'src9'); only (doc_id, hash) pairs shuffle. k=4 here so the
-    sf0.01 corpus yields a non-trivial overlap set; production
-    default is 8 (GPT-3-style 13-gram is a parameter change)."""
-    return PL.contamination_check(_docs(spark, sf_dir), k=4)
 
 
 SIMHASH_SQL = """
@@ -2431,7 +2444,8 @@ SIMHASH_SQL = """
 """
 
 
-@register(
+# The oracle does the O(n^2) comparison the banding avoids.
+register(
     "simhash_near_dup",
     TOKS_CTE
     + SIMHASH_SQL
@@ -2446,43 +2460,11 @@ SIMHASH_SQL = """
     ORDER BY doc_a, doc_b
     """,
     tags=("DD-3", "DD-6"),
-)
-def q_simhash_near_dup(spark, sf_dir):
-    """SimHash near-dup pairs: 4x8-bit band buckets supply candidates
-    (pigeonhole-exact for Hamming <= 3), exact Hamming verifies. The
-    oracle does the O(n^2) comparison the banding avoids."""
-    return DD.simhash_near_dup(_docs(spark, sf_dir))
-
-
-ND_PAIRS_CTE = (
-    TOKS_CTE
-    + f"""
-    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
-    , sigs AS (
-      {BAND_SIGS_SQL}
-    )
-    , ok AS (
-      SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
-    )
-    , sigs_ok AS (SELECT s.* FROM sigs s JOIN ok USING (band, sig))
-    , cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sigs_ok a JOIN sigs_ok b ON a.band = b.band AND a.sig = b.sig
-      WHERE a.doc_id < b.doc_id
-    )
-    , pairs AS (
-      SELECT doc_a, doc_b,
-             ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                   / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-               AS jaccard
-      FROM cand JOIN sh x ON cand.doc_a = x.doc_id
-                JOIN sh y ON cand.doc_b = y.doc_id
-    )
-"""
+    op=DD.simhash_near_dup, tables=("documents",),
 )
 
 
-@register(
+register(
     "near_dup_survivors",
     ND_PAIRS_CTE
     + """
@@ -2492,16 +2474,11 @@ ND_PAIRS_CTE = (
     ORDER BY d.doc_id
     """,
     tags=("DD-2", "DD-4"),
+    op=partial(DD.near_dup_survivors, threshold=0.5), tables=("documents",),
 )
-def q_near_dup_survivors(spark, sf_dir):
-    """End-to-end dedup policy: drop every doc that is a verified
-    near-duplicate (shingle Jaccard >= 0.5) of a lower-id doc —
-    keep-first-seen via one left-anti join against the LSH-verified
-    pair list."""
-    return DD.near_dup_survivors(_docs(spark, sf_dir), threshold=0.5)
 
 
-@register(
+register(
     "tfidf_top_terms",
     TOKS_CTE
     + """
@@ -2523,62 +2500,29 @@ def q_near_dup_survivors(spark, sf_dir):
     FROM ranked WHERE rnk <= 5 ORDER BY doc_id, rnk
     """,
     tags=("T-7",),
+    op=partial(TX.tfidf_top_terms, k=5), tables=("documents",),
 )
-def q_tfidf_top_terms(spark, sf_dir):
-    """Per-document top-5 terms by tf-idf (ln verified bit-identical
-    across engines; 6-decimal round + term tiebreak makes the top-k
-    deterministic)."""
-    return TX.tfidf_top_terms(_docs(spark, sf_dir), k=5)
 
 
-@register(
+# The oracle computes the same components with a recursive
+# transitive-closure CTE.
+register(
     "near_dup_components",
-    ND_PAIRS_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    ND_COMPONENTS_CTES
     + """
-    , edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
-    )
-    , reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    , comp AS (
-      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
-    )
     SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
     FROM documents d LEFT JOIN comp c USING (doc_id)
     ORDER BY d.doc_id
     """,
     tags=("DD-2", "DD-4", "DD-8"),
+    op=partial(DD.near_dup_components, threshold=0.5), tables=("documents",),
 )
-def q_near_dup_components(spark, sf_dir):
-    """Component-level dedup: iterative min-label propagation over
-    the LSH-verified near-dup graph (converges in O(diameter) rounds,
-    each a join on the tiny pair list). The oracle computes the same
-    components via a recursive transitive-closure CTE."""
-    return DD.near_dup_components(_docs(spark, sf_dir), threshold=0.5)
 
 
-@register(
+register(
     "component_size_histogram",
-    ND_PAIRS_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    ND_COMPONENTS_CTES
     + """
-    , edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
-    )
-    , reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    , comp AS (
-      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
-    )
     , labeled AS (
       SELECT COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -2590,12 +2534,8 @@ def q_near_dup_components(spark, sf_dir):
     FROM sizes GROUP BY sz ORDER BY component_size
     """,
     tags=("DD-10",),
+    op=partial(DD.component_size_histogram, threshold=0.5), tables=("documents",),
 )
-def q_component_size_histogram(spark, sf_dir):
-    """Near-dup component size distribution: singletons vs pairs vs
-    template families — two one-row-per-component aggregations on top
-    of the label-propagation components."""
-    return DD.component_size_histogram(_docs(spark, sf_dir), threshold=0.5)
 
 
 @register(
@@ -2739,7 +2679,7 @@ INT_DOT_SQL = (
 )
 
 
-@register(
+register(
     "knn_quantized",
     QUANT_CTE
     + f"""
@@ -2776,12 +2716,8 @@ INT_DOT_SQL = (
     ORDER BY query_id, rank
     """,
     tags=("E-6", "E-7"),
+    op=SIM.knn_quantized, tables=("embeddings",),
 )
-def q_knn_quantized(spark, sf_dir):
-    """Two-stage ANN: BIGINT dot over int8 codes selects 20
-    candidates per query (bit-exact, order-immune), exact cosine
-    re-ranks to top-5 — the memory-bandwidth scale path."""
-    return SIM.knn_quantized(_emb(spark, sf_dir))
 
 
 @register(
@@ -2897,7 +2833,8 @@ def q_bucketed_order_revenue(spark, sf_dir):
     )
 
 
-@register(
+# The oracle is DuckDB's native ASOF JOIN.
+register(
     "asof_last_signup_before_error",
     """
     WITH e AS (
@@ -2914,11 +2851,8 @@ def q_bucketed_order_revenue(spark, sf_dir):
     ORDER BY e.event_id
     """,
     tags=("J-9",),
+    op=J.asof_last_event, tables=("events",),
 )
-def q_asof_last_signup_before_error(spark, sf_dir):
-    """As-of join (union + per-key running last, one shuffle — no
-    range-expanded join) vs DuckDB's native ASOF JOIN oracle."""
-    return J.asof_last_event(_events(spark, sf_dir))
 
 
 def _parsed_store(spark, sf_dir) -> str:
@@ -3024,7 +2958,8 @@ def q_media_resize(spark, sf_dir):
     return MM.resize_media(media).orderBy("media_id")
 
 
-@register(
+# The oracle is the naive inequality join the bin-key pattern replaces.
+register(
     "range_join_value_bands",
     """
     WITH bands(band_id, lo, hi) AS (
@@ -3039,15 +2974,11 @@ def q_media_resize(spark, sf_dir):
     GROUP BY band_id, lo, hi ORDER BY band_id
     """,
     tags=("J-10",),
+    op=J.range_join_value_bands, tables=("events",),
 )
-def q_range_join_value_bands(spark, sf_dir):
-    """Interval join via the scalable bin-key pattern (bands exploded
-    to covered bins, single equi-join + exact predicate) — the oracle
-    does the naive inequality join the pattern replaces."""
-    return J.range_join_value_bands(_events(spark, sf_dir))
 
 
-@register(
+register(
     "corpus_curation",
     ND_PAIRS_CTE
     + f"""
@@ -3071,12 +3002,8 @@ def q_range_join_value_bands(spark, sf_dir):
     FROM assigned GROUP BY 1, 2 ORDER BY split, lang
     """,
     tags=("PL-4", "DD-7", "T-4", "PL-1"),
+    op=PL.corpus_curation, tables=("documents",),
 )
-def q_corpus_curation(spark, sf_dir):
-    """End-to-end corpus curation (dedup -> quality gate -> split ->
-    manifest) as one lazy plan: Catalyst prunes and pushes across all
-    stages at once; nothing materializes between them."""
-    return PL.corpus_curation(_docs(spark, sf_dir))
 
 
 @register(
@@ -3363,20 +3290,12 @@ def q_store_upsert(spark, sf_dir):
 from bigdata_logs_spark.operators import analytics as AN  # noqa: E402
 
 
-@register(
+register(
     "user_sessions",
-    """
+    f"""
     WITH o AS (
       SELECT user_id, event_id, ts,
-             CASE WHEN floor(epoch(ts))::BIGINT
-                       - lag(floor(epoch(ts))::BIGINT)
-                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       IS NULL
-                  OR floor(epoch(ts))::BIGINT
-                       - lag(floor(epoch(ts))::BIGINT)
-                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > 1800
-             THEN 1 ELSE 0 END AS b
+             {SESSION_START_SQL} AS b
       FROM events
     ), s AS (
       SELECT *, SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -3394,15 +3313,11 @@ from bigdata_logs_spark.operators import analytics as AN  # noqa: E402
     FROM ps GROUP BY user_id ORDER BY user_id
     """,
     tags=("W-4",),
+    op=AN.user_sessions, tables=("events",),
 )
-def q_user_sessions(spark, sf_dir):
-    """Batch gaps-and-islands sessionization (30-min idle gap): one
-    shuffle on user_id, window lag -> boundary -> running sum. The
-    streaming twin is attack_sessions (native session_window)."""
-    return AN.user_sessions(_events(spark, sf_dir))
 
 
-@register(
+register(
     "funnel_conversion",
     """
     WITH f AS (
@@ -3421,15 +3336,11 @@ def q_user_sessions(spark, sf_dir):
     FROM f
     """,
     tags=("AGG-5",),
+    op=AN.funnel_conversion, tables=("events",),
 )
-def q_funnel_conversion(spark, sf_dir):
-    """Ordered funnel (signup -> click -> purchase, strictly
-    increasing first-times) via one conditional aggregation per
-    stage in a single groupBy — no joins, no explode."""
-    return AN.funnel_conversion(_events(spark, sf_dir))
 
 
-@register(
+register(
     "retention_cohorts",
     """
     WITH wk AS (
@@ -3443,16 +3354,12 @@ def q_funnel_conversion(spark, sf_dir):
     GROUP BY 1, 2 ORDER BY cohort_week, week_offset
     """,
     tags=("AGG-6",),
+    op=AN.retention_cohorts, tables=("events",),
 )
-def q_retention_cohorts(spark, sf_dir):
-    """Weekly retention cohorts: cohort = Monday-truncated calendar
-    week DATE of first event (a bare ISO week NUMBER collides across
-    years and goes negative over New Year); offset = whole weeks
-    since the cohort week (both engines truncate weeks to Monday)."""
-    return AN.retention_cohorts(_events(spark, sf_dir))
 
 
-@register(
+# The oracle runs the plain join: salting must not change the answer.
+register(
     "salted_join_order_priority",
     """
     SELECT o_orderpriority,
@@ -3463,15 +3370,8 @@ def q_retention_cohorts(spark, sf_dir):
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     tags=("SKEW-2",),
+    op=J.salted_join_order_priority, tables=("orders", "lineitem"),
 )
-def q_salted_join_order_priority(spark, sf_dir):
-    """Explicit salted join (hot key spread over 8 (key, salt) tasks,
-    one side replicated) — provably identical to the plain join the
-    oracle runs; completes the skew toolkit beside salted_event_counts
-    (AGG-3) and AQE's automatic skew split."""
-    return J.salted_join_order_priority(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
 
 
 @register(
@@ -3601,7 +3501,7 @@ def q_bigram_frequencies(spark, sf_dir):
 PII_IPV4_SQL = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-@register(
+register(
     "repetition_scores",
     TOKS_CTE
     + """
@@ -3627,14 +3527,11 @@ PII_IPV4_SQL = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
     FROM base b LEFT JOIN topt USING (doc_id) ORDER BY doc_id
     """,
     tags=("T-9",),
+    op=TX.repetition_scores, tables=("documents",),
 )
-def q_repetition_scores(spark, sf_dir):
-    """Gopher-style repetition filters: top-token share + duplicate
-    bigram ratio per document."""
-    return TX.repetition_scores(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "pack_token_budget",
     TOKS_CTE
     + """
@@ -3654,15 +3551,11 @@ def q_repetition_scores(spark, sf_dir):
     FROM binned GROUP BY shard, bin ORDER BY shard, bin
     """,
     tags=("PL-6",),
+    op=partial(PL.pack_token_budget, budget=2048, n_shards=8), tables=("documents",),
 )
-def q_pack_token_budget(spark, sf_dir):
-    """Greedy context-window packing, sharded so the running token
-    sum parallelizes (one window per id-hash shard, never one global
-    serial scan)."""
-    return PL.pack_token_budget(_docs(spark, sf_dir), budget=2048, n_shards=8)
 
 
-@register(
+register(
     "source_mixing_weights",
     TOKS_CTE
     + """
@@ -3681,11 +3574,8 @@ def q_pack_token_budget(spark, sf_dir):
     FROM per CROSS JOIN tot ORDER BY source
     """,
     tags=("PL-7",),
+    op=PL.source_mixing_weights, tables=("documents",),
 )
-def q_source_mixing_weights(spark, sf_dir):
-    """Domain-mixing weights: per-source sampling factor that would
-    rebalance the corpus to uniform token share per source."""
-    return PL.source_mixing_weights(_docs(spark, sf_dir))
 
 
 @register(
@@ -3792,7 +3682,8 @@ def q_streaming_severity_counts(spark, sf_dir):
     )
 
 
-@register(
+# The oracle composes the two already-registered query oracles.
+register(
     "ann_recall",
     f"""
     SELECT e.query_id, SUM(CASE WHEN a.neighbor_id IS NOT NULL
@@ -3808,26 +3699,14 @@ def q_streaming_severity_counts(spark, sf_dir):
         ivf=REGISTRY["ann_ivf_topk"].oracle,
     ),
     tags=("E-8",),
+    op=SIM.ann_recall, tables=("embeddings",),
 )
-def q_ann_recall(spark, sf_dir):
-    """Recall@5 of the IVF index against exact brute force — the
-    index-quality self-measurement; oracle composes the two
-    already-registered query oracles."""
-    return SIM.ann_recall(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "incremental_near_dup",
-    TOKS_CTE
+    LSH_SIGS_OK_CTES
     + f"""
-    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
-    , sigs AS (
-      {BAND_SIGS_SQL}
-    )
-    , ok AS (
-      SELECT band, sig FROM sigs GROUP BY band, sig HAVING COUNT(*) <= 64
-    )
-    , sigs_ok AS (SELECT s.* FROM sigs s JOIN ok USING (band, sig))
     , cand AS (
       SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS old_doc
       FROM sigs_ok a JOIN sigs_ok b ON a.band = b.band AND a.sig = b.sig
@@ -3835,27 +3714,18 @@ def q_ann_recall(spark, sf_dir):
       JOIN documents db ON db.doc_id = b.doc_id
       WHERE da.source = 'src9' AND db.source != 'src9'
     )
-    SELECT new_doc, old_doc,
-           ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                 / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-             AS jaccard
+    SELECT new_doc, old_doc, {JACCARD_SQL} AS jaccard
     FROM cand JOIN sh x ON cand.new_doc = x.doc_id
               JOIN sh y ON cand.old_doc = y.doc_id
-    WHERE ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-          >= 0.05
+    WHERE {JACCARD_SQL} >= 0.05
     ORDER BY new_doc, old_doc
     """,
     tags=("DD-9",),
+    op=DD.incremental_near_dup, tables=("documents",),
 )
-def q_incremental_near_dup(spark, sf_dir):
-    """Delta-vs-corpus near-dup: only new-batch x existing candidate
-    pairs are generated and verified — the per-batch incremental shape
-    (cost scales with the delta, never corpus squared)."""
-    return DD.incremental_near_dup(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "token_length_percentile_gate",
     TOKS_CTE
     + """
@@ -3871,12 +3741,8 @@ def q_incremental_near_dup(spark, sf_dir):
     FROM b
     """,
     tags=("PL-9",),
+    op=PL.token_length_percentile_gate, tables=("documents",),
 )
-def q_token_length_percentile_gate(spark, sf_dir):
-    """Length-distribution outlier gate: exact p05/p95 of token
-    counts plus how many docs the band keeps (swap in
-    approx_percentile at 100 TB — same plan shape)."""
-    return PL.token_length_percentile_gate(_docs(spark, sf_dir))
 
 
 @register(
@@ -3925,7 +3791,7 @@ def q_streaming_latest_per_ip(spark, sf_dir):
     )
 
 
-@register(
+register(
     "supplier_nation_revenue",
     f"""
     WITH sr AS (
@@ -3940,16 +3806,8 @@ def q_streaming_latest_per_ip(spark, sf_dir):
     ORDER BY revenue DESC, s_suppkey LIMIT 10
     """,
     tags=("J-12",),
+    op=J.supplier_nation_revenue, tables=("supplier", "nation", "lineitem"),
 )
-def q_supplier_nation_revenue(spark, sf_dir):
-    """Top-10 suppliers by revenue with nation — covers the star
-    schema's last dimension; lineitem pre-aggregates to supplier
-    grain below the broadcast dim joins."""
-    return J.supplier_nation_revenue(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
 
 
 @register(
@@ -4282,7 +4140,7 @@ def q_qty_price_regression(spark, sf_dir):
     )
 
 
-@register(
+register(
     "per_source_sample",
     """
     WITH ranked AS (
@@ -4294,14 +4152,11 @@ def q_qty_price_regression(spark, sf_dir):
     FROM ranked WHERE rnk <= 5 ORDER BY source, rnk
     """,
     tags=("PL-11",),
+    op=partial(PL.per_source_sample, n_per_source=5), tables=("documents",),
 )
-def q_per_source_sample(spark, sf_dir):
-    """Deterministic per-source N-doc preview: hash-ranked window
-    top-N, reproducible across engines/partitionings."""
-    return PL.per_source_sample(_docs(spark, sf_dir), n_per_source=5)
 
 
-@register(
+register(
     "key_skew_report",
     """
     WITH counts AS (
@@ -4315,17 +4170,11 @@ def q_per_source_sample(spark, sf_dir):
     ORDER BY n_rows DESC, key_value LIMIT 10
     """,
     tags=("SKEW-3",),
+    op=partial(PL.key_skew_report, key="l_orderkey", top=10), tables=("lineitem",),
 )
-def q_key_skew_report(spark, sf_dir):
-    """Hot-key diagnostic over the lineitem fact: per-key counts
-    (map-side combined) + one broadcast totals row -> top-10 keys
-    with share and x-even-load multiple."""
-    return PL.key_skew_report(
-        load_table(spark, sf_dir, "lineitem"), key="l_orderkey", top=10
-    )
 
 
-@register(
+register(
     "fk_orphans",
     """
     SELECT 'lineitem.l_orderkey -> orders' AS fk,
@@ -4351,20 +4200,13 @@ def q_key_skew_report(spark, sf_dir):
     ORDER BY fk
     """,
     tags=("J-13",),
+    op=J.fk_orphans, tables=("lineitem", "orders", "customer", "part", "supplier"),
 )
-def q_fk_orphans(spark, sf_dir):
-    """Referential-integrity audit over the star schema: four
-    key-only left-anti joins unioned into one report."""
-    return J.fk_orphans(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-    )
 
 
-@register(
+# The exact semi join removes bloom false positives, so the oracle is
+# the plain semi join.
+register(
     "bloom_pruned_order_priority",
     """
     SELECT o_orderpriority, COUNT(*)::BIGINT AS n_orders,
@@ -4376,19 +4218,8 @@ def q_fk_orphans(spark, sf_dir):
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     tags=("J-14",),
+    op=J.bloom_pruned_order_priority, tables=("customer", "orders"),
 )
-def q_bloom_pruned_order_priority(spark, sf_dir):
-    """Bloom-filter pre-filtered semi join: the fact side is pruned
-    by k narrow hash-probe expressions against ONE broadcast
-    word->bits row BEFORE any exchange; the exact semi join on the
-    survivors removes bloom false positives, so the oracle is the
-    plain semi join. The runtime-filter pattern Spark injects under
-    `spark.sql.optimizer.runtime.bloomFilter.enabled`, made explicit
-    and plan-tested."""
-    return J.bloom_pruned_order_priority(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
 
 
 from bigdata_logs_spark.functions import zorder_terms_sql as _zts
@@ -4421,7 +4252,7 @@ def q_zorder_cells(spark, sf_dir):
     return zorder_cells(_events(spark, sf_dir))
 
 
-@register(
+register(
     "column_profile",
     """
     SELECT * FROM (
@@ -4446,14 +4277,11 @@ def q_zorder_cells(spark, sf_dir):
     ) ORDER BY column_name
     """,
     tags=("D-48",),
+    op=D.column_profile, tables=("events",),
 )
-def q_column_profile(spark, sf_dir):
-    """Per-column null/exact-distinct profile of events as one
-    stacked aggregation pass (the pandas isna/nunique EDA sweep)."""
-    return D.column_profile(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "conversion_latency",
     """
     WITH firsts AS (
@@ -4469,14 +4297,11 @@ def q_column_profile(spark, sf_dir):
     FROM firsts WHERE s IS NOT NULL AND p IS NOT NULL AND p >= s
     """,
     tags=("AGG-8",),
+    op=AN.conversion_latency, tables=("events",),
 )
-def q_conversion_latency(spark, sf_dir):
-    """First-signup -> first-purchase latency: conditional-min
-    partial agg per user, then one percentile reduce."""
-    return AN.conversion_latency(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "doc_chunks",
     TOKS_CTE
     + """
@@ -4498,14 +4323,11 @@ def q_conversion_latency(spark, sf_dir):
     FROM st ORDER BY doc_id, chunk_no
     """,
     tags=("PL-10",),
+    op=partial(PL.chunk_documents, chunk_size=16, stride=12), tables=("documents",),
 )
-def q_doc_chunks(spark, sf_dir):
-    """Fixed-size token chunking with overlap (chunk 16 / stride 12):
-    narrow per-row explode, chunk text leaves the row only as md5."""
-    return PL.chunk_documents(_docs(spark, sf_dir), chunk_size=16, stride=12)
 
 
-@register(
+register(
     "kmeans_centroid_update",
     """
     WITH seeds AS (
@@ -4537,13 +4359,8 @@ def q_doc_chunks(spark, sf_dir):
     FROM dims GROUP BY cluster, pos ORDER BY cluster, pos
     """,
     tags=("E-9",),
+    op=partial(SIM.kmeans_update, k=8), tables=("embeddings",),
 )
-def q_kmeans_centroid_update(spark, sf_dir):
-    """One Lloyd iteration (IVF coarse-quantizer training step):
-    broadcast k seed vectors as one row, assign via narrow array
-    expressions (no k-fold corpus expansion), shuffle only the
-    (cluster, pos) partial means."""
-    return SIM.kmeans_update(_emb(spark, sf_dir), k=8)
 
 
 _GRAMS3_CTE = (
@@ -4560,7 +4377,7 @@ _GRAMS3_CTE = (
 )
 
 
-@register(
+register(
     "boilerplate_ngrams",
     _GRAMS3_CTE
     + """
@@ -4569,15 +4386,11 @@ _GRAMS3_CTE = (
     ORDER BY df DESC, gram LIMIT 50
     """,
     tags=("T-10",),
+    op=partial(TX.boilerplate_ngrams, k=3, min_df=2, top=50), tables=("documents",),
 )
-def q_boilerplate_ngrams(spark, sf_dir):
-    """Cross-document repeated 3-grams (boilerplate/template
-    detector): per-doc distinct grams -> one combined count per gram
-    -> TakeOrdered. Only (doc_id, gram) pairs shuffle."""
-    return TX.boilerplate_ngrams(_docs(spark, sf_dir), k=3, min_df=2, top=50)
 
 
-@register(
+register(
     "boilerplate_fraction",
     _GRAMS3_CTE
     + """
@@ -4596,18 +4409,14 @@ def q_boilerplate_ngrams(spark, sf_dir):
     ORDER BY p.doc_id
     """,
     tags=("T-11",),
+    op=partial(TX.boilerplate_fraction, k=3, min_df=20), tables=("documents",),
 )
-def q_boilerplate_fraction(spark, sf_dir):
-    """Share of each doc's distinct 3-grams that are corpus-common
-    (df >= 20) — the per-doc template-heaviness gate. One cached
-    (doc_id, gram) explode feeds the df agg and the join back."""
-    return TX.boilerplate_fraction(_docs(spark, sf_dir), k=3, min_df=20)
 
 
 from bigdata_logs_spark.operators import anomaly as AD  # noqa: E402
 
 
-@register(
+register(
     "hourly_event_anomalies",
     """
     WITH cells AS (
@@ -4633,30 +4442,14 @@ from bigdata_logs_spark.operators import anomaly as AD  # noqa: E402
     FROM stats ORDER BY date, hour
     """,
     tags=("AD-1",),
+    op=AD.hourly_count_anomalies, tables=("events",),
 )
-def q_hourly_event_anomalies(spark, sf_dir):
-    """Seasonal per-hour-of-day z-score anomaly cells — the detector
-    the reference's activity heatmap (stats_dashboard.py:61-101)
-    implies but never computes."""
-    return AD.hourly_count_anomalies(_events(spark, sf_dir))
 
 
 @register(
     "brute_force_ips",
-    SSH_PARSE_CTE
+    SSH_FAIL_BURSTS_CTES
     + """
-    , fails AS (
-      SELECT ip, strptime('2024 ' || month || ' ' || day || ' ' || time,
-                          '%Y %b %d %H:%M:%S') AS ts
-      FROM parsed
-      WHERE event IN ('failed_password', 'invalid_user', 'auth_failure')
-        AND ip IS NOT NULL
-    ), bursts AS (
-      SELECT ip, ts,
-             (COUNT(*) OVER (PARTITION BY ip ORDER BY epoch(ts)::BIGINT
-                RANGE BETWEEN 599 PRECEDING AND CURRENT ROW))::BIGINT AS burst
-      FROM fails
-    )
     SELECT ip, COUNT(*)::BIGINT AS n_failures, MAX(burst)::BIGINT AS max_burst,
            strftime(MIN(CASE WHEN burst >= 2 THEN ts END),
                     '%Y-%m-%d %H:%M:%S') AS first_burst_at,
@@ -4713,7 +4506,7 @@ def _chi2_oracle(key: str, per_type_cte: str) -> str:
     )
 
 
-@register(
+register(
     "event_type_drift",
     _chi2_oracle(
         "event_type",
@@ -4728,14 +4521,11 @@ def _chi2_oracle(key: str, per_type_cte: str) -> str:
     )""",
     ),
     tags=("AD-4",),
+    op=AD.event_type_drift, tables=("events",),
 )
-def q_event_type_drift(spark, sf_dir):
-    """Chi-square homogeneity drift report: first vs second half of
-    the month — the between-batch dataset-drift monitor."""
-    return AD.event_type_drift(_events(spark, sf_dir))
 
 
-@register(
+register(
     "order_price_outliers",
     """
     WITH seg AS (
@@ -4758,16 +4548,11 @@ def q_event_type_drift(spark, sf_dir):
     GROUP BY d.segment ORDER BY d.segment
     """,
     tags=("AD-3",),
+    op=AD.order_price_outliers, tables=("orders", "customer"),
 )
-def q_order_price_outliers(spark, sf_dir):
-    """Robust (median/MAD) per-segment price outlier gate."""
-    return AD.order_price_outliers(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
 
 
-@register(
+register(
     "interarrival_stats",
     """
     WITH gaps AS (
@@ -4785,29 +4570,14 @@ def q_order_price_outliers(spark, sf_dir):
     GROUP BY event_type ORDER BY event_type
     """,
     tags=("W-6",),
+    op=AN.interarrival_stats, tables=("events",),
 )
-def q_interarrival_stats(spark, sf_dir):
-    """Per-type inter-arrival gap percentiles — the empirical basis
-    for rate-monitor thresholds (e.g. the brute-force window)."""
-    return AN.interarrival_stats(_events(spark, sf_dir))
 
 
 @register(
     "ssh_incident_report",
-    SSH_PARSE_CTE
-    + """
-    , fails AS (
-      SELECT ip, strptime('2024 ' || month || ' ' || day || ' ' || time,
-                          '%Y %b %d %H:%M:%S') AS ts
-      FROM parsed
-      WHERE event IN ('failed_password', 'invalid_user', 'auth_failure')
-        AND ip IS NOT NULL
-    ), bursts AS (
-      SELECT ip, ts,
-             (COUNT(*) OVER (PARTITION BY ip ORDER BY epoch(ts)::BIGINT
-                RANGE BETWEEN 599 PRECEDING AND CURRENT ROW))::BIGINT AS burst
-      FROM fails
-    ), incidents AS (
+    SSH_FAIL_BURSTS_CTES
+    + """, incidents AS (
       SELECT ip, COUNT(*)::BIGINT AS n_failures, MAX(burst)::BIGINT AS max_burst,
              strftime(MIN(CASE WHEN burst >= 2 THEN ts END),
                       '%Y-%m-%d %H:%M:%S') AS first_burst_at
@@ -4979,22 +4749,18 @@ def q_rollup_incremental_maintenance(spark, sf_dir):
     ).orderBy("date", "event_type")
 
 
-@register(
+register(
     "value_median_pandas_agg",
     """
     SELECT event_type, ROUND(quantile_cont(value, 0.5), 6) AS p50
     FROM events GROUP BY event_type ORDER BY event_type
     """,
     tags=("U-4",),
+    op=D.value_median_pandas_agg, tables=("events",),
 )
-def q_value_median_pandas_agg(spark, sf_dir):
-    """Grouped-aggregate pandas_udf (series -> scalar per group):
-    numpy's linear-interpolated median agrees bit-for-bit with
-    Spark's percentile and DuckDB's quantile_cont."""
-    return D.value_median_pandas_agg(_events(spark, sf_dir))
 
 
-@register(
+register(
     "props_typed_extract",
     """
     SELECT event_type,
@@ -5007,11 +4773,8 @@ def q_value_median_pandas_agg(spark, sf_dir):
     FROM events GROUP BY event_type ORDER BY event_type
     """,
     tags=("F-2",),
+    op=D.props_typed_extract, tables=("events",),
 )
-def q_props_typed_extract(spark, sf_dir):
-    """Typed from_json struct extraction (one parse per row, explicit
-    schema) feeding ordinary typed aggregates."""
-    return D.props_typed_extract(_events(spark, sf_dir))
 
 
 @register(
@@ -5097,7 +4860,7 @@ def q_store_time_travel(spark, sf_dir):
     )
 
 
-@register(
+register(
     "corpus_manifest",
     TOKS_CTE
     + """
@@ -5111,11 +4874,8 @@ def q_store_time_travel(spark, sf_dir):
     FROM toks GROUP BY source, lang ORDER BY source, lang
     """,
     tags=("PL-12",),
+    op=PL.corpus_manifest, tables=("documents",),
 )
-def q_corpus_manifest(spark, sf_dir):
-    """Dataset-card manifest with an order-independent bit_xor content
-    fingerprint per (source, lang) stratum."""
-    return PL.corpus_manifest(_docs(spark, sf_dir))
 
 
 @register(
@@ -5157,7 +4917,7 @@ def q_streaming_event_drift(spark, sf_dir):
     return chi2_drift_report(spark.table(name), key_col="event")
 
 
-@register(
+register(
     "commonness_scores",
     TOKS_CTE
     + """
@@ -5174,11 +4934,8 @@ def q_streaming_event_drift(spark, sf_dir):
     FROM per_doc CROSS JOIN tot ORDER BY doc_id
     """,
     tags=("T-12",),
+    op=TX.commonness_scores, tables=("documents",),
 )
-def q_commonness_scores(spark, sf_dir):
-    """Mean corpus-unigram probability per document (perplexity proxy
-    without log(): exact integer sums, one final division)."""
-    return TX.commonness_scores(_docs(spark, sf_dir))
 
 
 def _rp_oracle(d_out: int = 8) -> str:
@@ -5201,18 +4958,15 @@ def _rp_oracle(d_out: int = 8) -> str:
     """
 
 
-@register(
+register(
     "embedding_random_projection",
     _rp_oracle(),
     tags=("E-10",),
+    op=SIM.random_projection, tables=("embeddings",),
 )
-def q_embedding_random_projection(spark, sf_dir):
-    """JL sign random projection 64 -> 8 dims; integer-quantized fold
-    so both engines produce bit-identical doubles."""
-    return SIM.random_projection(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "rare_transitions",
     """
     WITH bigrams AS (
@@ -5233,15 +4987,11 @@ def q_embedding_random_projection(spark, sf_dir):
     FROM counts ORDER BY prev_type, next_type
     """,
     tags=("AD-6",),
+    op=AD.rare_transitions, tables=("events",),
 )
-def q_rare_transitions(spark, sf_dir):
-    """Markov transition profile over per-user event streams with
-    rare-edge flags: one (user_id)-keyed window pass -> k x k count
-    table -> conditional probabilities from exact integer counts."""
-    return AD.rare_transitions(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "user_activity_deciles",
     """
     WITH per_user AS (
@@ -5257,16 +5007,11 @@ def q_rare_transitions(spark, sf_dir):
     FROM tiled GROUP BY decile ORDER BY decile
     """,
     tags=("W-7",),
+    op=AN.user_activity_deciles, tables=("events",),
 )
-def q_user_activity_deciles(spark, sf_dir):
-    """Activity deciles via ntile over the (already aggregated)
-    per-user count table — completes the ranking-window taxonomy; the
-    (n_events, user_id) tiebreak pins remainder-row assignment so
-    both engines tile identically."""
-    return AN.user_activity_deciles(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "ngram_novelty",
     _GRAMS3_CTE
     + """
@@ -5281,15 +5026,11 @@ def q_user_activity_deciles(spark, sf_dir):
     GROUP BY g.doc_id ORDER BY g.doc_id
     """,
     tags=("T-13",),
+    op=partial(TX.ngram_novelty, k=3), tables=("documents",),
 )
-def q_ngram_novelty(spark, sf_dir):
-    """Per-doc novel-content fraction: share of a doc's distinct
-    3-grams first seen (min doc_id) in that doc — the incremental-
-    value signal next to boilerplate_fraction's corpus-common share."""
-    return TX.ngram_novelty(_docs(spark, sf_dir), k=3)
 
 
-@register(
+register(
     "pair_similarity_histogram",
     f"""
     WITH cells AS (
@@ -5307,15 +5048,11 @@ def q_ngram_novelty(spark, sf_dir):
     FROM pairs GROUP BY bin ORDER BY bin
     """,
     tags=("E-11",),
+    op=partial(SIM.pair_similarity_histogram, n_cells=16), tables=("embeddings",),
 )
-def q_pair_similarity_histogram(spark, sf_dir):
-    """Hash-cell-sampled pairwise-cosine histogram — the threshold-
-    calibration curve for embedding near-dup; cells turn all-pairs
-    into an equi-join (n^2/n_cells pairs, no cartesian)."""
-    return SIM.pair_similarity_histogram(_emb(spark, sf_dir), n_cells=16)
 
 
-@register(
+register(
     "doc_ngrams_udtf",
     TOKS_CTE
     + """
@@ -5327,15 +5064,11 @@ def q_pair_similarity_histogram(spark, sf_dir):
     SELECT doc_id, pos::INT AS pos, gram FROM g ORDER BY doc_id, pos
     """,
     tags=("U-5",),
+    op=partial(TX.ngram_rows_udtf, k=3, max_doc_id=50), tables=("documents",),
 )
-def q_doc_ngrams_udtf(spark, sf_dir):
-    """Python UDTF lateral expansion (U-5): row->k-gram rows through
-    the registered table function — the slow-path extension surface,
-    capped to 50 docs and row-identical to the native gram twin."""
-    return TX.ngram_rows_udtf(_docs(spark, sf_dir), k=3, max_doc_id=50)
 
 
-@register(
+register(
     "daily_value_rank",
     """
     WITH cells AS (
@@ -5351,31 +5084,14 @@ def q_doc_ngrams_udtf(spark, sf_dir):
     ORDER BY event_type, date
     """,
     tags=("W-8",),
+    op=AN.daily_value_rank, tables=("events",),
 )
-def q_daily_value_rank(spark, sf_dir):
-    """Relative-rank windows (percent_rank, cume_dist) over the tiny
-    per-(type, day) value cells — fact table collapses first, rank
-    math never sees raw-event cardinality."""
-    return AN.daily_value_rank(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "leakage_safe_split",
-    ND_PAIRS_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    ND_COMPONENTS_CTES
     + """
-    , edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
-    )
-    , reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    , comp AS (
-      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
-    )
     , labeled AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -5394,15 +5110,11 @@ def q_daily_value_rank(spark, sf_dir):
     FROM bucketed ORDER BY doc_id
     """,
     tags=("PL-13",),
+    op=PL.leakage_safe_split, tables=("documents",),
 )
-def q_leakage_safe_split(spark, sf_dir):
-    """Near-dup-aware split (PL-13): whole components share one
-    train/val/test assignment, so no test doc has a near-dup twin in
-    train; singletons keep their PL-1 assignment bit-for-bit."""
-    return PL.leakage_safe_split(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "source_vocab_overlap",
     TOKS_CTE
     + """
@@ -5426,27 +5138,14 @@ def q_leakage_safe_split(spark, sf_dir):
     ORDER BY source_a, source_b
     """,
     tags=("T-14",),
+    op=TX.source_vocab_overlap, tables=("documents",),
 )
-def q_source_vocab_overlap(spark, sf_dir):
-    """Pairwise vocabulary Jaccard between sources over the distinct
-    (source, token) table — the mixing-diagnostics matrix; corpus
-    volume cancels, only lexical coverage is compared."""
-    return TX.source_vocab_overlap(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "centroid_confusion",
     f"""
-    WITH exploded AS (
-      SELECT label, i - 1 AS dim,
-             CAST(embedding[i]::DOUBLE AS DECIMAL(28,12)) AS xd
-      FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-    ), cent AS (
-      SELECT label AS cell, list(c ORDER BY dim) AS cvec FROM (
-        SELECT label, dim, ROUND(CAST(SUM(xd) AS DOUBLE) / COUNT(*), 6) AS c
-        FROM exploded GROUP BY label, dim)
-      GROUP BY label
-    ), assigned AS (
+    WITH {LABEL_CENTROIDS_CTES}, assigned AS (
       SELECT e.vec_id, e.label, c.cell,
              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
                ROUND({L2_SQL.format(a='e.embedding', b='c.cvec')}, 6), c.cell)
@@ -5464,15 +5163,11 @@ def q_source_vocab_overlap(spark, sf_dir):
     FROM m ORDER BY label, predicted
     """,
     tags=("E-12",),
+    op=SIM.centroid_classification_report, tables=("embeddings",),
 )
-def q_centroid_confusion(spark, sf_dir):
-    """Nearest-centroid confusion matrix (E-12): which labels the
-    IVF coarse quantizer mixes up, with per-label accuracy — the
-    where-is-recall-lost report next to ann_recall's how-much."""
-    return SIM.centroid_classification_report(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "funnel_coverage_audit",
     """
     WITH s AS (
@@ -5490,15 +5185,11 @@ def q_centroid_confusion(spark, sf_dir):
     FROM j GROUP BY 1 ORDER BY coverage
     """,
     tags=("J-15",),
+    op=J.funnel_coverage_audit, tables=("events",),
 )
-def q_funnel_coverage_audit(spark, sf_dir):
-    """FULL OUTER reconciliation of the signup vs purchase user
-    populations (J-15) — the data-quality leg behind AGG-5's
-    conversion rate, including purchasers with no signup event."""
-    return J.funnel_coverage_audit(load_table(spark, sf_dir, "events"))
 
 
-@register(
+register(
     "ewma_daily_counts",
     """
     WITH cells AS (
@@ -5517,12 +5208,8 @@ def q_funnel_coverage_audit(spark, sf_dir):
     FROM pre ORDER BY event_type, date
     """,
     tags=("AD-7",),
+    op=AD.ewma_daily_counts, tables=("events",),
 )
-def q_ewma_daily_counts(spark, sf_dir):
-    """EWMA (alpha=1/2) daily-count baseline per event type: exact
-    power-of-two weights make the fold bit-identical across engines;
-    fact table collapses to day cells before any window math."""
-    return AD.ewma_daily_counts(load_table(spark, sf_dir, "events"))
 
 
 from bigdata_logs_spark.operators import graph as G  # noqa: E402
@@ -5540,17 +5227,10 @@ _PAGERANK_STEP = """
 """
 
 
-@register(
+register(
     "textrank_keywords",
-    TOKS_CTE
-    + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), edges AS (
+    TOKEN_DIR_CTES
+    + """, edges AS (
       SELECT src, dst, COUNT(*)::BIGINT AS w FROM dir GROUP BY 1, 2
     ), outw AS (
       SELECT src, SUM(w)::BIGINT AS ow FROM edges GROUP BY 1
@@ -5571,20 +5251,35 @@ _PAGERANK_STEP = """
     ORDER BY rank_scaled DESC, token LIMIT 25
     """,
     tags=("G-1",),
+    op=G.textrank_keywords, tables=("documents",),
 )
-def q_textrank_keywords(spark, sf_dir):
-    """G-1 TextRank keywords: 3 unrolled damped-PageRank iterations on
-    the token-adjacency graph, exact fixed-point integer arithmetic
-    (contributions floored before the incoming-edge integer sum). The
-    corpus collapses to the cached weighted edge list in one pass;
-    each iteration is one join on src + one integer groupBy on dst."""
-    return G.textrank_keywords(_docs(spark, sf_dir))
 
 
 from bigdata_logs_spark.operators import sketches as SK  # noqa: E402
 
+# SK's HyperLogLog in SQL: a register's rank from the low bits ``w`` of a
+# hash, the raw harmonic-mean estimate from ``z_present``/``m_present``
+# (fixed-point sum and count of the non-empty registers), and the
+# estimate with SK's small-range (linear counting) correction, from
+# ``raw`` and the empty-register count ``v``.
+HLL_RHO_SQL = (
+    f"CASE WHEN w = 0 THEN {SK.HLL_RHO_MAX}"
+    f" ELSE {SK.HLL_RHO_MAX} - length(bin(w)) END"
+)
+HLL_RAW_SQL = (
+    f"{SK.HLL_ALPHA}::DOUBLE * {SK.HLL_M * SK.HLL_M} * {SK.HLL_ZSCALE}"
+    f" / (z_present + ({SK.HLL_M} - m_present) * {SK.HLL_ZSCALE})"
+)
+HLL_ESTIMATE_SQL = (
+    f"ROUND(CASE WHEN raw <= {2.5 * SK.HLL_M}::DOUBLE AND v > 0"
+    f" THEN {float(SK.HLL_M)}::DOUBLE * ln({float(SK.HLL_M)}::DOUBLE / v)"
+    " ELSE raw END, 4)"
+)
 
-@register(
+
+# The sketch hashes are explicit integer arithmetic, so the oracle
+# replays them exactly.
+register(
     "cms_heavy_hitters",
     TOKS_CTE
     + """
@@ -5616,18 +5311,11 @@ from bigdata_logs_spark.operators import sketches as SK  # noqa: E402
     FROM estimates ORDER BY exact_count DESC, token LIMIT 20
     """,
     tags=("SK-1",),
+    op=SK.cms_heavy_hitters, tables=("documents",),
 )
-def q_cms_heavy_hitters(spark, sf_dir):
-    """SK-1 Count-Min Sketch calibration: 4x128-counter sketch of the
-    token frequency stream from explicit affine/polynomial integer
-    hashes (replayed exactly by the oracle), reporting exact count vs
-    CMS estimate vs overestimate for the top-20 tokens. The d-fold
-    explode runs on the distinct-key table, never the corpus; the
-    counter table broadcasts back for the estimate join."""
-    return SK.cms_heavy_hitters(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "vocab_growth",
     TOKS_CTE
     + """
@@ -5657,13 +5345,8 @@ def q_cms_heavy_hitters(spark, sf_dir):
     FROM series ORDER BY docs_seen
     """,
     tags=("T-16",),
+    op=TX.vocab_growth, tables=("documents",),
 )
-def q_vocab_growth(spark, sf_dir):
-    """T-16 Heaps-law curve: cumulative token count vs distinct-vocab
-    size at 50-doc checkpoints in doc_id order. Tokens collapse to
-    first-occurrence ranks (min-combinable) then to step buckets; the
-    cumulative window runs over the tiny series only. All-integer."""
-    return TX.vocab_growth(_docs(spark, sf_dir))
 
 
 def _pq_oracle_cols() -> str:
@@ -5697,7 +5380,7 @@ _PQ_ASSIGNED_CTE = f"""
     )"""
 
 
-@register(
+register(
     "pq_codes",
     _PQ_ASSIGNED_CTE
     + """
@@ -5705,16 +5388,11 @@ _PQ_ASSIGNED_CTE = f"""
     FROM assigned ORDER BY vec_id
     """,
     tags=("E-13",),
+    op=SIM.pq_codes, tables=("embeddings",),
 )
-def q_pq_codes(spark, sf_dir):
-    """E-13 product quantization: 64-dim float embedding -> 4 one-byte
-    codes (nearest seed-codebook entry per 16-dim subspace). Broadcast
-    one codebook row + narrow per-row array expressions: zero
-    shuffles, corpus never exploded k- or m-fold."""
-    return SIM.pq_codes(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "pq_distortion",
     _PQ_ASSIGNED_CTE
     + """
@@ -5729,15 +5407,11 @@ def q_pq_codes(spark, sf_dir):
     FROM legs GROUP BY subspace, code ORDER BY subspace, code
     """,
     tags=("E-14",),
+    op=SIM.pq_distortion, tables=("embeddings",),
 )
-def q_pq_distortion(spark, sf_dir):
-    """E-14 PQ calibration: per (subspace, code) occupancy and mean
-    squared reconstruction distortion — the retrain-trigger metric.
-    Double-sum rounding headroom argument as ``kmeans_centroid_update``."""
-    return SIM.pq_distortion(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "curriculum_phases",
     TOKS_CTE
     + """
@@ -5754,15 +5428,11 @@ def q_pq_distortion(spark, sf_dir):
     FROM ranked ORDER BY phase, phase_rank
     """,
     tags=("PL-14",),
+    op=PL.curriculum_phases, tables=("documents",),
 )
-def q_curriculum_phases(spark, sf_dir):
-    """PL-14 curriculum ordering: shortest-first NTILE(4) phases with
-    a deterministic md5 shuffle inside each phase. Only (doc_id,
-    n_tokens) pairs enter the sort; text never moves."""
-    return PL.curriculum_phases(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "zipf_fit",
     TOKS_CTE
     + """
@@ -5792,16 +5462,11 @@ def q_curriculum_phases(spark, sf_dir):
     FROM m ORDER BY lang
     """,
     tags=("T-17",),
+    op=TX.zipf_fit, tables=("documents",),
 )
-def q_zipf_fit(spark, sf_dir):
-    """T-17 per-language Zipf slope: OLS of ln(freq) on ln(rank) over
-    the top-100 terms, AGG-7's exact-co-moment discipline applied to
-    fixed-point-quantized ln terms (ln is bit-identical across the
-    engines, so the quantized integers — and their sums — are too)."""
-    return TX.zipf_fit(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "kmv_distinct",
     f"""
     WITH hashed AS (
@@ -5827,13 +5492,8 @@ def q_zipf_fit(spark, sf_dir):
     FROM sk s JOIN exact e USING (event_type) ORDER BY event_type
     """,
     tags=("SK-2",),
+    op=SK.kmv_distinct, tables=("events",),
 )
-def q_kmv_distinct(spark, sf_dir):
-    """SK-2 KMV distinct sketch: per event type, (k-1)/u_(k) estimate
-    from the 16 smallest 52-bit md5 hashes vs the exact distinct-user
-    count — the oracle-checkable approximate distinct (HLL's twin
-    `global_metrics_approx` can only get a rows-only check)."""
-    return SK.kmv_distinct(_events(spark, sf_dir))
 
 
 def _pq_lut_oracle_cols() -> str:
@@ -5850,7 +5510,7 @@ def _pq_lut_oracle_cols() -> str:
     return ",".join(cols)
 
 
-@register(
+register(
     "pq_adc_topk",
     _PQ_ASSIGNED_CTE
     + f"""
@@ -5867,14 +5527,8 @@ def _pq_lut_oracle_cols() -> str:
     ORDER BY adc_sq_dist, vec_id LIMIT 10
     """,
     tags=("E-15",),
+    op=SIM.pq_adc_topk, tables=("embeddings",),
 )
-def q_pq_adc_topk(spark, sf_dir):
-    """E-15 asymmetric-distance PQ search: the query precomputes a
-    4x8 LUT of exact subvector-to-codebook distances (one broadcast
-    row); every corpus vector's distance is 4 lookups + 3 adds over
-    its codes — the original floats are never touched during the
-    scan. Top-k via TakeOrderedAndProject."""
-    return SIM.pq_adc_topk(_emb(spark, sf_dir))
 
 
 @register(
@@ -5906,7 +5560,7 @@ def q_ssh_account_clusters(spark, sf_dir):
     return G.account_clusters(parse_ssh_lines(_ssh_lines(spark, sf_dir)))
 
 
-@register(
+register(
     "embedding_truncation_fidelity",
     """
     WITH en AS (
@@ -5931,13 +5585,8 @@ def q_ssh_account_clusters(spark, sf_dir):
     FROM legs GROUP BY trunc_dim ORDER BY trunc_dim
     """,
     tags=("E-16",),
+    op=SIM.truncation_fidelity, tables=("embeddings",),
 )
-def q_embedding_truncation_fidelity(spark, sf_dir):
-    """E-16 Matryoshka-style truncation fidelity: mean/min cosine
-    between each embedding and its first-{8,16,32} prefix (reduces to
-    sqrt(prefix energy / full energy) — one fold, one sqrt per row).
-    Narrow per-row expression; 3 rows per vector reach the shuffle."""
-    return SIM.truncation_fidelity(_emb(spark, sf_dir))
 
 
 @register(
@@ -5964,13 +5613,15 @@ def q_embedding_truncation_fidelity(spark, sf_dir):
     tags=("ST-13", "SK-2"),
 )
 def q_streaming_kmv_distinct(spark, sf_dir):
-    """ST-13 streaming KMV: the engine drains the SSH file stream in
-    forced multi-file micro-batches while a foreachBatch job merges
+    """ST-13 streaming KMV: the engine drains the SSH file stream
+    while a foreachBatch job merges
     each batch's (event, ip-hash) pairs into a k=16-row-per-group
     parquet state (min-k union is associative/commutative/idempotent,
     so the final state is bit-identical for ANY batch split — which
     is why this STREAMING query gets a full hash-match oracle, unlike
-    the trigger-timing-dependent windowed entries)."""
+    the trigger-timing-dependent windowed entries). The source here is
+    one file, so it drains in one micro-batch; multi-batch drains are
+    covered by ``test_streaming_kmv_state_batch_split_invariant``."""
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.streaming.ingest import (
@@ -5979,7 +5630,7 @@ def q_streaming_kmv_distinct(spark, sf_dir):
     )
 
     src = _stream_source_dir(spark, sf_dir)
-    parsed = read_ssh_stream(spark, src, max_files_per_trigger=2)
+    parsed = read_ssh_stream(spark, src)
     state = _scratch_path("bls_kmv_state", sf_dir)
     streaming_kmv_state(parsed, state, k=16)
     rep = (
@@ -6053,7 +5704,7 @@ def q_python_datasource_counts(spark, sf_dir):
     )
 
 
-@register(
+register(
     "daily_value_ohlc",
     """
     WITH r AS (
@@ -6072,16 +5723,11 @@ def q_python_datasource_counts(spark, sf_dir):
     FROM r GROUP BY 1, 2 ORDER BY event_type, date
     """,
     tags=("W-9",),
+    op=AN.daily_value_ohlc, tables=("events",),
 )
-def q_daily_value_ohlc(spark, sf_dir):
-    """W-9 OHLC downsampling: open/close via struct-min/max over the
-    total (ts, event_id) order — map-side-combinable argmin/argmax,
-    no window pass, no self-join; every cell is a PICKED double
-    (never summed), so no rounding is needed."""
-    return AN.daily_value_ohlc(_events(spark, sf_dir))
 
 
-@register(
+register(
     "daily_value_interpolated",
     """
     WITH per AS (
@@ -6120,16 +5766,11 @@ def q_daily_value_ohlc(spark, sf_dir):
     FROM a ORDER BY date
     """,
     tags=("W-10",),
+    op=AN.daily_value_interpolated, tables=("events",),
 )
-def q_daily_value_interpolated(spark, sf_dir):
-    """W-10 dense daily means with linear interpolation across empty
-    days (D-47 zero-fills counts; a missing mean is bridged, not
-    zeroed). Corpus collapses to decimal-exact day means first; the
-    spine + two ignore-null windows run over n_days rows only."""
-    return AN.daily_value_interpolated(_events(spark, sf_dir))
 
 
-@register(
+register(
     "lang_id_confusion",
     TOKS_CTE
     + """
@@ -6150,31 +5791,14 @@ def q_daily_value_interpolated(spark, sf_dir):
     FROM cells ORDER BY lang, predicted_lang
     """,
     tags=("T-18",),
+    op=TX.lang_id_confusion, tables=("documents",),
 )
-def q_lang_id_confusion(spark, sf_dir):
-    """T-18 language-ID evaluation: confusion cells of the T-5 marker
-    heuristic vs the labeled lang, with per-cell share of the true
-    language (the T-5 counterpart of E-12's quantizer confusion)."""
-    return TX.lang_id_confusion(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "quality_dedup_survivors",
-    ND_PAIRS_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + """
-    , edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
-    )
-    , reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    , comp AS (
-      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
-    ), allc AS (
+    ND_COMPONENTS_CTES
+    + """, allc AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component, d.n_chars
       FROM documents d LEFT JOIN comp c USING (doc_id)
     ), surv AS (
@@ -6190,27 +5814,14 @@ def q_lang_id_confusion(spark, sf_dir):
     FROM allc a JOIN surv s USING (component) ORDER BY a.doc_id
     """,
     tags=("PL-15",),
+    op=partial(DD.quality_dedup_survivors, threshold=0.5), tables=("documents",),
 )
-def q_quality_dedup_survivors(spark, sf_dir):
-    """PL-15 quality-aware component dedup: within each DD-8 near-dup
-    component keep the doc with the most content (max n_chars,
-    deterministic id tie-break) — 'keep the longest version', the
-    policy min-id survivors get wrong on truncated variants. Adds one
-    window over the metadata projection; text never shuffles."""
-    return DD.quality_dedup_survivors(_docs(spark, sf_dir), threshold=0.5)
 
 
-@register(
+register(
     "token_graph_degrees",
-    TOKS_CTE
-    + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), edges AS (
+    TOKEN_DIR_CTES
+    + """, edges AS (
       SELECT src, dst FROM dir GROUP BY 1, 2
     ), deg AS (
       SELECT src, COUNT(*)::BIGINT AS deg FROM edges GROUP BY 1
@@ -6220,13 +5831,8 @@ def q_quality_dedup_survivors(spark, sf_dir):
     FROM deg GROUP BY 1 ORDER BY degree_bucket
     """,
     tags=("G-3",),
+    op=G.token_graph_degrees, tables=("documents",),
 )
-def q_token_graph_degrees(spark, sf_dir):
-    """G-3 degree distribution of the token graph in power-of-two
-    buckets — the hub/shape check before running G-1. Buckets come
-    from the binary-string length (bin()), never float log2, which is
-    ln-ratio-computed and inexact exactly on the bucket boundaries."""
-    return G.token_graph_degrees(_docs(spark, sf_dir))
 
 
 @register(
@@ -6267,7 +5873,7 @@ def q_observed_etl_metrics(spark, sf_dir):
     )
 
 
-@register(
+register(
     "user_attr_scd2",
     """
     WITH observed AS (
@@ -6292,16 +5898,11 @@ def q_observed_etl_metrics(spark, sf_dir):
     FROM changes ORDER BY user_id, valid_from
     """,
     tags=("S-18",),
+    op=AN.user_attr_scd2, tables=("events",),
 )
-def q_user_attr_scd2(spark, sf_dir):
-    """S-18 SCD Type 2 build: per-user attribute runs compressed to
-    validity intervals (valid_from/valid_to/is_current) — the
-    dimension shape J-9's as-of join consumes. One user_id shuffle +
-    two window passes; one row per value RUN, not per event."""
-    return AN.user_attr_scd2(_events(spark, sf_dir))
 
 
-@register(
+register(
     "cdc_shared_chunks",
     TOKS_CTE
     + """
@@ -6340,18 +5941,11 @@ def q_user_attr_scd2(spark, sf_dir):
     FROM pairs GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY doc_a, doc_b
     """,
     tags=("DD-12",),
+    op=DD.cdc_shared_chunks, tables=("documents",),
 )
-def q_cdc_shared_chunks(spark, sf_dir):
-    """DD-12 content-defined chunking overlap (LBFS rolling-hash
-    boundaries): doc pairs sharing >= 2 content-derived chunk
-    fingerprints — catches a copied paragraph inside an otherwise
-    different long doc, which whole-document MinHash structurally
-    misses. Chunk text leaves the row only as md5; pair generation is
-    occupancy-capped like the LSH buckets."""
-    return DD.cdc_shared_chunks(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "packing_efficiency",
     TOKS_CTE
     + """
@@ -6379,28 +5973,16 @@ def q_cdc_shared_chunks(spark, sf_dir):
     FROM bins GROUP BY shard ORDER BY shard
     """,
     tags=("PL-16",),
+    op=PL.packing_efficiency, tables=("documents",),
 )
-def q_packing_efficiency(spark, sf_dir):
-    """PL-16 packing-efficiency report: per shard, window count, mean
-    fill fraction vs the 2048 budget, and straddling-bin count — the
-    padding-waste gauge over PL-6's packing layout."""
-    return PL.packing_efficiency(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "session_documents",
-    """
+    f"""
     WITH o AS (
       SELECT user_id, event_id, ts, event_type,
-             CASE WHEN floor(epoch(ts))::BIGINT
-                       - lag(floor(epoch(ts))::BIGINT)
-                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       IS NULL
-                  OR floor(epoch(ts))::BIGINT
-                       - lag(floor(epoch(ts))::BIGINT)
-                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > 1800
-             THEN 1 ELSE 0 END AS b
+             {SESSION_START_SQL} AS b
       FROM events
     ), s AS (
       SELECT *, SUM(b) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -6414,16 +5996,11 @@ def q_packing_efficiency(spark, sf_dir):
     FROM s GROUP BY user_id, session_no ORDER BY user_id, session_no
     """,
     tags=("PL-17",),
+    op=PL.sessions_to_documents, tables=("events",),
 )
-def q_session_documents(spark, sf_dir):
-    """PL-17 sessions -> training documents: each 30-min-gap user
-    session textualized as ordered event_type@HH:MM tokens (the
-    behavioral-sequence serialization for training on user journeys),
-    emitted as md5 + stats so shuffles stay payload-free."""
-    return PL.sessions_to_documents(_events(spark, sf_dir))
 
 
-@register(
+register(
     "hourly_burstiness",
     """
     WITH cells AS (
@@ -6443,12 +6020,8 @@ def q_session_documents(spark, sf_dir):
     FROM m ORDER BY event_type
     """,
     tags=("W-11",),
+    op=AN.hourly_burstiness, tables=("events",),
 )
-def q_hourly_burstiness(spark, sf_dir):
-    """W-11 Fano factor of hourly arrivals per event type (~1 Poisson,
-    >>1 bursty — the dispersion summary of AD-1's pointwise flags).
-    Integer co-moments, mirrored operand order, one division pair."""
-    return AN.hourly_burstiness(_events(spark, sf_dir))
 
 
 def _recall_leg(nprobe: int) -> str:
@@ -6463,7 +6036,9 @@ def _recall_leg(nprobe: int) -> str:
     """
 
 
-@register(
+# The oracle composes the parameterized IVF template, so the settings
+# cannot drift from the registered search.
+register(
     "ivf_nprobe_sweep",
     f"""
     WITH legs AS (
@@ -6476,17 +6051,11 @@ def _recall_leg(nprobe: int) -> str:
     FROM legs ORDER BY nprobe
     """,
     tags=("E-17",),
+    op=SIM.ivf_nprobe_sweep, tables=("embeddings",),
 )
-def q_ivf_nprobe_sweep(spark, sf_dir):
-    """E-17 recall-vs-nprobe tuning curve: E-8's recall measured at
-    nprobe 1/2/4 in one report — the table an IVF deployment picks
-    its operating point from. Oracle composes the parameterized IVF
-    template, so the settings cannot drift from the registered
-    search."""
-    return SIM.ivf_nprobe_sweep(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "dow_hour_anomalies",
     """
     WITH cells AS (
@@ -6513,16 +6082,11 @@ def q_ivf_nprobe_sweep(spark, sf_dir):
     FROM stats ORDER BY date, hour
     """,
     tags=("AD-8",),
+    op=AD.dow_hour_anomalies, tables=("events",),
 )
-def q_dow_hour_anomalies(spark, sf_dir):
-    """AD-8 two-factor seasonal baseline: (date, hour) counts z-scored
-    within their (day-of-week, hour) cell — weekday/weekend rhythm
-    stops masquerading as anomaly. Arithmetic day-of-week ((epoch
-    days + 3) mod 7): engine date parts disagree on Sunday's index."""
-    return AD.dow_hour_anomalies(_events(spark, sf_dir))
 
 
-@register(
+register(
     "char_entropy",
     """
     WITH ch AS (
@@ -6540,16 +6104,11 @@ def q_dow_hour_anomalies(spark, sf_dir):
     GROUP BY c.doc_id ORDER BY c.doc_id
     """,
     tags=("T-20",),
+    op=TX.char_entropy, tables=("documents",),
 )
-def q_char_entropy(spark, sf_dir):
-    """T-20 character-distribution Shannon entropy per doc (nats) —
-    the cheap gibberish/base64/padding detector beside T-4's token
-    quality gates. One combinable (doc, char) count; per-doc sums
-    span at most alphabet-size terms (kmeans rounding headroom)."""
-    return TX.char_entropy(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "daily_value_ribbon",
     """
     SELECT strftime(ts, '%Y-%m-%d') AS date, COUNT(*)::BIGINT AS n_events,
@@ -6559,12 +6118,8 @@ def q_char_entropy(spark, sf_dir):
     FROM events GROUP BY 1 ORDER BY date
     """,
     tags=("D-52",),
+    op=D.daily_value_ribbon, tables=("events",),
 )
-def q_daily_value_ribbon(spark, sf_dir):
-    """D-52 daily p10/p50/p90 value ribbon — the spread band around
-    the median line charts draw (AGG-2's exact-interpolation parity,
-    grouped by day; approx_percentile is the same-shape 100 TB swap)."""
-    return D.daily_value_ribbon(_events(spark, sf_dir))
 
 
 @register(
@@ -6645,7 +6200,7 @@ def q_snapshot_diff(spark, sf_dir):
     )
 
 
-@register(
+register(
     "duplicate_ngram_fraction",
     TOKS_CTE
     + f"""
@@ -6663,16 +6218,11 @@ def q_snapshot_diff(spark, sf_dir):
     GROUP BY 1 ORDER BY p.doc_id
     """,
     tags=("T-23",),
+    op=TX.duplicate_ngram_fraction, tables=("documents",),
 )
-def q_duplicate_ngram_fraction(spark, sf_dir):
-    """T-23 duplicate n-gram fraction: per-doc share of distinct
-    shingles occurring in OTHER docs (corpus count minus own) — the
-    Gopher-style linear-cost duplication screen that runs before any
-    quadratic-candidate dedup tier."""
-    return TX.duplicate_ngram_fraction(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "binary_knn",
     f"""
     WITH sigs AS (
@@ -6712,13 +6262,8 @@ def q_duplicate_ngram_fraction(spark, sf_dir):
     ORDER BY query_id, rank
     """,
     tags=("E-19",),
+    op=SIM.binary_knn, tables=("embeddings",),
 )
-def q_binary_knn(spark, sf_dir):
-    """E-19 binary quantization + rescoring: 64 sign bits in two
-    32-bit halves, XOR+popcount Hamming shortlist, exact-cosine
-    re-rank of shortlist-many true vectors — the 32x-memory serving
-    scan next to the PQ (magnitude-codebook) tier."""
-    return SIM.binary_knn(_emb(spark, sf_dir))
 
 
 @register(
@@ -6763,7 +6308,7 @@ def q_cusum_changepoints(spark, sf_dir):
     return cusum_changepoints(_events(spark, sf_dir))
 
 
-@register(
+register(
     "dq_expectations",
     f"""
     WITH m AS (
@@ -6797,36 +6342,22 @@ def q_cusum_changepoints(spark, sf_dir):
     FROM checks ORDER BY "constraint"
     """,
     tags=("OPS-2",),
+    op=D.dq_expectations, tables=("events",),
 )
-def q_dq_expectations(spark, sf_dir):
-    """OPS-2 data-quality gate: one aggregation pass evaluates the
-    declared constraint suite (completeness / uniqueness / domain /
-    range / freshness); observed values are integer micro-fractions,
-    so verdicts compare integers — no float drift can flip a gate."""
-    return D.dq_expectations(_events(spark, sf_dir))
 
 
 @register(
     "streaming_near_dup_pairs",
-    TOKS_CTE
-    + f"""
-    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
-    , sigs AS (
-      {BAND_SIGS_SQL}
-    ), cand AS (
+    LSH_SIGS_CTES
+    + f""", cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig
       WHERE a.doc_id < b.doc_id
     )
-    SELECT doc_a, doc_b,
-           ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                 / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-             AS jaccard
+    SELECT doc_a, doc_b, {JACCARD_SQL} AS jaccard
     FROM cand JOIN sh x ON cand.doc_a = x.doc_id
               JOIN sh y ON cand.doc_b = y.doc_id
-    WHERE ROUND(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                / len(list_distinct(list_concat(x.shingles, y.shingles))), 4)
-          >= 0.05
+    WHERE {JACCARD_SQL} >= 0.05
     ORDER BY doc_a, doc_b
     """,
     tags=("ST-14",),
@@ -6857,12 +6388,8 @@ def q_streaming_near_dup_pairs(spark, sf_dir):
 
 @register(
     "streaming_lsh_state_occupancy",
-    TOKS_CTE
-    + f"""
-    , sh AS (SELECT doc_id, list_distinct({SHINGLES_EXPR}) AS shingles FROM toks)
-    , sigs AS (
-      {BAND_SIGS_SQL}
-    ), occ AS (
+    LSH_SIGS_CTES
+    + f""", occ AS (
       SELECT band, sig, COUNT(*)::BIGINT AS n FROM sigs GROUP BY band, sig
     )
     SELECT COUNT(*)::BIGINT AS n_buckets,
@@ -6904,7 +6431,7 @@ def q_streaming_lsh_state_occupancy(spark, sf_dir):
     return streaming_lsh_state_occupancy(stream, state, cap=DD.BUCKET_CAP)
 
 
-@register(
+register(
     "scd2_asof_enrichment",
     """
     WITH observed AS (
@@ -6938,16 +6465,11 @@ def q_streaming_lsh_state_occupancy(spark, sf_dir):
     FROM enriched GROUP BY 1 ORDER BY attr_k
     """,
     tags=("J-16",),
+    op=AN.scd2_asof_enrichment, tables=("events",),
 )
-def q_scd2_asof_enrichment(spark, sf_dir):
-    """J-16 point-in-time enrichment: every event joined to the S-18
-    dimension interval valid at its timestamp (equi-join on user_id +
-    in-partition range predicate), rolled up per attribute value —
-    the consume side proving the SCD2 intervals round-trip."""
-    return AN.scd2_asof_enrichment(_events(spark, sf_dir))
 
 
-@register(
+register(
     "token_budget_allocation",
     TOKS_CTE
     + """
@@ -6987,26 +6509,12 @@ def q_scd2_asof_enrichment(spark, sf_dir):
     ORDER BY a.source
     """,
     tags=("PL-18",),
+    op=PL.token_budget_allocation, tables=("documents",),
 )
-def q_token_budget_allocation(spark, sf_dir):
-    """PL-18 budget split: tau=0.5 temperature weights (sqrt token
-    mass, quantized to BIGINT micro-units) + largest-remainder
-    rounding so per-source budgets sum to the global budget exactly;
-    per-source fit counts from an in-partition running sum."""
-    return PL.token_budget_allocation(_docs(spark, sf_dir))
 
 
 _SEMDEDUP_ORACLE = f"""
-    WITH RECURSIVE exploded AS (
-      SELECT label, i - 1 AS dim,
-             CAST(embedding[i]::DOUBLE AS DECIMAL(28,12)) AS xd
-      FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-    ), cent AS (
-      SELECT label AS cell, list(c ORDER BY dim) AS cvec FROM (
-        SELECT label, dim, ROUND(CAST(SUM(xd) AS DOUBLE) / COUNT(*), 6) AS c
-        FROM exploded GROUP BY label, dim)
-      GROUP BY label
-    ), n AS (
+    WITH RECURSIVE {LABEL_CENTROIDS_CTES}, n AS (
       SELECT vec_id, label AS cell, embedding,
              SQRT({DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
       FROM embeddings
@@ -7043,20 +6551,15 @@ _SEMDEDUP_ORACLE = f"""
     """
 
 
-@register(
+register(
     "semantic_dedup",
     _SEMDEDUP_ORACLE,
     tags=("DD-15",),
+    op=SIM.semantic_dedup, tables=("embeddings",),
 )
-def q_semantic_dedup(spark, sf_dir):
-    """DD-15 SemDeDup: within-cell cosine components, keep the member
-    least similar to its cluster centroid — the embedding-space dedup
-    tier that sees paraphrases the token tiers cannot. Pairs never
-    leave a cell; components run on the pair list only."""
-    return SIM.semantic_dedup(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "winnowing_overlap",
     TOKS_CTE
     + f"""
@@ -7083,12 +6586,8 @@ def q_semantic_dedup(spark, sf_dir):
     WHERE n_shared >= 2 ORDER BY doc_a, doc_b
     """,
     tags=("DD-14",),
+    op=DD.winnowing_overlap, tables=("documents",),
 )
-def q_winnowing_overlap(spark, sf_dir):
-    """DD-14 winnowing (MOSS): per-window minimum k-gram hashes at
-    guaranteed 2/(w+1) density; pairs sharing >= 2 selected
-    fingerprints, occupancy-capped before the fp self-join."""
-    return DD.winnowing_overlap(_docs(spark, sf_dir))
 
 
 def _pq_resid_cols(vec: str, out: str) -> str:
@@ -7115,16 +6614,7 @@ _RESID_SQL = (
 )
 
 _IVFPQ_ORACLE = f"""
-    WITH exploded AS (
-      SELECT label, i - 1 AS dim,
-             CAST(embedding[i]::DOUBLE AS DECIMAL(28,12)) AS xd
-      FROM embeddings, LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i)
-    ), cent AS (
-      SELECT label AS cell, list(c ORDER BY dim) AS cvec FROM (
-        SELECT label, dim, ROUND(CAST(SUM(xd) AS DOUBLE) / COUNT(*), 6) AS c
-        FROM exploded GROUP BY label, dim)
-      GROUP BY label
-    ), ranked AS (
+    WITH {LABEL_CENTROIDS_CTES}, ranked AS (
       SELECT e.vec_id, e.embedding, c.cell, c.cvec,
              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
                ROUND({{L2}}, 6), c.cell) AS rnk
@@ -7168,20 +6658,15 @@ _IVFPQ_ORACLE = f"""
     """
 
 
-@register(
+register(
     "ivfpq_adc_topk",
     _IVFPQ_ORACLE.format(L2=L2_SQL.format(a="e.embedding", b="c.cvec")),
     tags=("E-18",),
+    op=SIM.ivfpq_adc_topk, tables=("embeddings",),
 )
-def q_ivfpq_adc_topk(spark, sf_dir):
-    """E-18 IVF-PQ: coarse cells route, product quantization encodes
-    the RESIDUALS, queries probe nprobe cells with per-cell ADC
-    lookup tables — the FAISS IVFPQ billion-vector architecture,
-    composed from the certified E-5/E-13 tiers."""
-    return SIM.ivfpq_adc_topk(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "kmv_set_ops",
     f"""
     WITH keyed AS (
@@ -7212,41 +6697,19 @@ def q_ivfpq_adc_topk(spark, sf_dir):
     FROM ex CROSS JOIN sk
     """,
     tags=("SK-3",),
+    op=SK.kmv_set_ops, tables=("events",),
 )
-def q_kmv_set_ops(spark, sf_dir):
-    """SK-3 sketch set algebra: union + intersection cardinality from
-    merged KMV sketches (md5 order statistics, so the estimates are
-    themselves hash-certified), next to the exact answers."""
-    return SK.kmv_set_ops(_events(spark, sf_dir))
 
 
-@register(
+register(
     "minhash_containment",
-    NDP_PAIRS_CTES
-    + f"""
-    , cont AS (
-      SELECT doc_a, doc_b,
-             len(list_intersect(x.shingles, y.shingles))::BIGINT AS n_inter,
-             len(x.shingles)::BIGINT AS sz_a, len(y.shingles)::BIGINT AS sz_b
-      FROM cand JOIN sh x ON cand.doc_a = x.doc_id
-                JOIN sh y ON cand.doc_b = y.doc_id
-    )
-    SELECT doc_a, doc_b, n_inter, sz_a, sz_b,
-           ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) AS containment
-    FROM cont
-    WHERE ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) >= {DD.CONTAINMENT_THRESHOLD}
-    ORDER BY doc_a, doc_b
-    """,
+    NDP_PAIRS_CTES + CONTAINMENT_VERIFY_SQL,
     tags=("DD-13",),
+    op=DD.minhash_containment, tables=("documents",),
 )
-def q_minhash_containment(spark, sf_dir):
-    """DD-13 containment dedup: |A∩B| / min(|A|,|B|) on exact shingle
-    sets over the occupancy-capped LSH candidates — catches the
-    doc-pasted-inside-doc case whole-document Jaccard dilutes."""
-    return DD.minhash_containment(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "containment_rare_shingle",
     TOKS_CTE
     + f"""
@@ -7260,42 +6723,17 @@ def q_minhash_containment(spark, sf_dir):
       FROM gr a JOIN gr b ON a.gram = b.gram
       WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2 HAVING COUNT(*) >= {DD.RARE_MIN_SHARED}
-    )
-    , cont AS (
-      SELECT doc_a, doc_b,
-             len(list_intersect(x.shingles, y.shingles))::BIGINT AS n_inter,
-             len(x.shingles)::BIGINT AS sz_a, len(y.shingles)::BIGINT AS sz_b
-      FROM cand JOIN sh x ON cand.doc_a = x.doc_id
-                JOIN sh y ON cand.doc_b = y.doc_id
-    )
-    SELECT doc_a, doc_b, n_inter, sz_a, sz_b,
-           ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) AS containment
-    FROM cont
-    WHERE ROUND(n_inter::DOUBLE / LEAST(sz_a, sz_b), 4) >= {DD.CONTAINMENT_THRESHOLD}
-    ORDER BY doc_a, doc_b
-    """,
+    )"""
+    + CONTAINMENT_VERIFY_SQL,
     tags=("DD-18",),
+    op=DD.containment_rare_shingle, tables=("documents",),
 )
-def q_containment_rare_shingle(spark, sf_dir):
-    """DD-18 containment with DF-capped rare-shingle candidates: the
-    size-ratio recall fix for DD-13 — a contained doc shares its
-    whole shingle set with its container, so any non-boilerplate
-    shingle survives as a candidate however extreme the length
-    ratio; Jaccard-tuned LSH bands structurally miss those pairs."""
-    return DD.containment_rare_shingle(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "token_graph_triangles",
-    TOKS_CTE
-    + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), edges AS (
+    TOKEN_DIR_CTES
+    + """, edges AS (
       SELECT src, dst FROM dir GROUP BY 1, 2
     ), und AS (SELECT src, dst FROM edges WHERE src < dst
     ), deg AS (SELECT src, COUNT(*)::BIGINT AS deg FROM edges GROUP BY 1
@@ -7315,15 +6753,11 @@ def q_containment_rare_shingle(spark, sf_dir):
     FROM tri
     """,
     tags=("G-4",),
+    op=G.token_graph_triangles, tables=("documents",),
 )
-def q_token_graph_triangles(spark, sf_dir):
-    """G-4 triangle census: id-ordered wedge join closed against the
-    edge list (each triangle once, no cartesian); clustering
-    coefficient from exact integer wedge totals."""
-    return G.token_graph_triangles(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "pmi_bigrams",
     TOKS_CTE
     + """
@@ -7354,15 +6788,11 @@ def q_token_graph_triangles(spark, sf_dir):
     ORDER BY pmi_micro DESC, big.w1, big.w2 LIMIT 50
     """,
     tags=("T-21",),
+    op=TX.pmi_bigrams, tables=("documents",),
 )
-def q_pmi_bigrams(spark, sf_dir):
-    """T-21 PMI collocations: integer micro-nat PMI of adjacent token
-    pairs (quantize-each-ln-before-sum => exact BIGINT score), top-50
-    via TakeOrderedAndProject; unigram legs broadcast."""
-    return TX.pmi_bigrams(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "lm_doc_scores",
     TOKS_CTE
     + """
@@ -7395,16 +6825,11 @@ def q_pmi_bigrams(spark, sf_dir):
     ORDER BY t.doc_id
     """,
     tags=("T-22",),
+    op=TX.lm_doc_scores, tables=("documents",),
 )
-def q_lm_doc_scores(spark, sf_dir):
-    """T-22 bigram-LM quality scores: every doc scored by add-one-
-    smoothed NLL under the corpus's own bigram model (the KenLM-gate
-    pattern of pretraining pipelines) — exact integer micro-nat
-    totals; model tables are one aggregation pass each."""
-    return TX.lm_doc_scores(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "bm25_topk",
     TOKS_CTE
     + """
@@ -7443,16 +6868,11 @@ def q_lm_doc_scores(spark, sf_dir):
     ORDER BY bm25_micro DESC, doc_id LIMIT 10
     """,
     tags=("T-26",),
+    op=TX.bm25_topk, tables=("documents",),
 )
-def q_bm25_topk(spark, sf_dir):
-    """T-26 BM25 top-10 (Robertson/Spärck Jones, k1=1.25 b=0.75):
-    saturation + length-normalized retrieval scoring of the
-    mid-frequency 3-term query; micro-nat idf, per-term BIGINT
-    micro-scores (order-free sums), broadcast query/model legs."""
-    return TX.bm25_topk(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "dashboard_render_all",
     PROFILE_ORACLE_CTE
     + f"""
@@ -7528,16 +6948,11 @@ def q_bm25_topk(spark, sf_dir):
     SELECT panel, k, metric, value FROM unioned ORDER BY panel, k, metric
     """,
     tags=("D-53",),
+    op=D.dashboard_render_all, tables=("events",),
 )
-def q_dashboard_render_all(spark, sf_dir):
-    """D-53 full-dashboard composite: the reference UI's always-on
-    panels (src/stats_dashboard.py:35-181) rendered in one pass — a
-    tracked-cache base scan + the fused profile feed all ten panels,
-    amortizing what the reference recomputes per interaction."""
-    return D.dashboard_render_all(_events(spark, sf_dir))
 
 
-@register(
+register(
     "hll_distinct",
     f"""
     WITH keyed AS (
@@ -7553,8 +6968,7 @@ def q_dashboard_render_all(spark, sf_dir):
       FROM hashed
     ), regs AS (
       SELECT event_type, idx,
-             MAX(CASE WHEN w = 0 THEN {SK.HLL_RHO_MAX}
-                 ELSE {SK.HLL_RHO_MAX} - length(bin(w)) END)::BIGINT AS r
+             MAX({HLL_RHO_SQL})::BIGINT AS r
       FROM parts GROUP BY 1, 2
     ), z AS (
       SELECT event_type,
@@ -7564,17 +6978,11 @@ def q_dashboard_render_all(spark, sf_dir):
       FROM regs GROUP BY 1
     ), est AS (
       SELECT event_type, ({SK.HLL_M} - m_present)::BIGINT AS v,
-             {SK.HLL_ALPHA}::DOUBLE * {SK.HLL_M * SK.HLL_M}
-               * {SK.HLL_ZSCALE}
-               / (z_present + ({SK.HLL_M} - m_present) * {SK.HLL_ZSCALE})
-               AS raw
+             {HLL_RAW_SQL} AS raw
       FROM z
     ), corr AS (
       SELECT event_type, v,
-             ROUND(CASE WHEN raw <= {2.5 * SK.HLL_M}::DOUBLE AND v > 0
-                   THEN {float(SK.HLL_M)}::DOUBLE
-                        * ln({float(SK.HLL_M)}::DOUBLE / v)
-                   ELSE raw END, 4) AS hll_estimate
+             {HLL_ESTIMATE_SQL} AS hll_estimate
       FROM est
     ), ex AS (
       SELECT event_type, COUNT(DISTINCT user_id)::BIGINT AS n_exact
@@ -7588,14 +6996,8 @@ def q_dashboard_render_all(spark, sf_dir):
     ORDER BY event_type
     """,
     tags=("SK-4",),
+    op=SK.hll_distinct, tables=("events",),
 )
-def q_hll_distinct(spark, sf_dir):
-    """SK-4 explicit HyperLogLog: 64 first-principles registers from
-    the 52-bit md5 hash (top 6 bits route, leading zeros of the low 46
-    score), harmonic mean in exact fixed point, linear-counting
-    small-range correction — the certifiable twin of the engine-HLL
-    `global_metrics_approx` (which can only be rows-only checked)."""
-    return SK.hll_distinct(_events(spark, sf_dir))
 
 
 _BLOOM_POS_SQL = (
@@ -7608,7 +7010,7 @@ _BLOOM_POS_SQL = (
 )
 
 
-@register(
+register(
     "bloom_membership",
     f"""
     WITH keyed AS (
@@ -7650,16 +7052,11 @@ _BLOOM_POS_SQL = (
     FROM flags
     """,
     tags=("SK-5",),
+    op=SK.bloom_membership, tables=("events",),
 )
-def q_bloom_membership(spark, sf_dir):
-    """SK-5 explicit Bloom filter: m=1024/k=4 affine-hash filter over
-    purchase users, probed by every distinct user — observed FPP and
-    occupancy hash-certified cross-engine; the certifiable
-    construction behind J-14's engine-internal bloom-pruned join."""
-    return SK.bloom_membership(_events(spark, sf_dir))
 
 
-@register(
+register(
     "robust_daily_trend",
     """
     WITH daily AS (
@@ -7696,16 +7093,11 @@ def q_bloom_membership(spark, sf_dir):
     ORDER BY event_type
     """,
     tags=("AGG-10",),
+    op=AN.robust_daily_trend, tables=("events",),
 )
-def q_robust_daily_trend(spark, sf_dir):
-    """AGG-10 robust trend: Theil-Sen median slope + Mann-Kendall S
-    per event type over daily counts — the 29.3%-breakdown robust
-    pair beside AGG-7's outlier-fragile OLS; all pair math runs on
-    the bounded (type, day) aggregate, never the event stream."""
-    return AN.robust_daily_trend(_events(spark, sf_dir))
 
 
-@register(
+register(
     "weighted_median_price",
     """
     WITH per_price AS (
@@ -7725,13 +7117,8 @@ def q_robust_daily_trend(spark, sf_dir):
     FROM eligible GROUP BY 1 ORDER BY 1
     """,
     tags=("AGG-11",),
+    op=AN.weighted_median_price, tables=("lineitem",),
 )
-def q_weighted_median_price(spark, sf_dir):
-    """AGG-11 weighted median: smallest price whose cumulative
-    quantity weight reaches half the per-flag total — DECIMAL-exact
-    (2*cum >= total, no division), equal prices pre-aggregated so
-    the pick is order-free."""
-    return AN.weighted_median_price(load_table(spark, sf_dir, "lineitem"))
 
 
 _MULTISET_LEG = (
@@ -7851,15 +7238,8 @@ def q_benford_first_digit(spark, sf_dir):
 
 def _kcore_oracle(k: int = 3, rounds: int = 4) -> str:
     base = (
-        TOKS_CTE
-        + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), e0 AS (SELECT src, dst FROM dir GROUP BY 1, 2)
+        TOKEN_DIR_CTES
+        + """, e0 AS (SELECT src, dst FROM dir GROUP BY 1, 2)
     """
     )
     for r in range(1, rounds + 1):
@@ -7878,18 +7258,12 @@ def _kcore_oracle(k: int = 3, rounds: int = 4) -> str:
     return base + "\n    UNION ALL ".join(legs) + "\n    ORDER BY round"
 
 
-@register(
+register(
     "token_graph_kcore",
     _kcore_oracle(),
     tags=("G-5",),
+    op=G.token_graph_kcore, tables=("documents",),
 )
-def q_token_graph_kcore(spark, sf_dir):
-    """G-5 k-core peel profile: four fixed rounds of drop-degree-<3
-    on the token graph, node/edge survivors per round — each round is
-    a degree agg + two semi-joins on the cached vocabulary-sized edge
-    list; the fixed round count keeps the output deterministic and
-    the oracle an identical unrolled replay."""
-    return G.token_graph_kcore(_docs(spark, sf_dir))
 
 
 @register(
@@ -7926,7 +7300,7 @@ def q_confusable_usernames(spark, sf_dir):
     )
 
 
-@register(
+register(
     "kwic_concordance",
     TOKS_CTE
     + """
@@ -7959,16 +7333,11 @@ def q_confusable_usernames(spark, sf_dir):
     ORDER BY term, doc_id, pos
     """,
     tags=("T-25",),
+    op=TX.kwic_concordance, tables=("documents",),
 )
-def q_kwic_concordance(spark, sf_dir):
-    """T-25 keyword-in-context concordance: every occurrence of the
-    top-3 corpus tokens with +/-2 tokens of context (capped at 50
-    deterministic rows per term) — broadcast term list, one narrow
-    posexplode pass, per-row context slices."""
-    return TX.kwic_concordance(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "inverted_index_postings",
     TOKS_CTE
     + """
@@ -7986,13 +7355,8 @@ def q_kwic_concordance(spark, sf_dir):
     SELECT * FROM agg ORDER BY df DESC, token LIMIT 20
     """,
     tags=("PL-19",),
+    op=TX.inverted_index_postings, tables=("documents",),
 )
-def q_inverted_index_postings(spark, sf_dir):
-    """PL-19 inverted index: per-token df, total tf, and the first 10
-    sorted posting doc ids for the top-20 df tokens — the BM25-ready
-    retrieval index; posting lists are capped at build time so no
-    unbounded array rides the shuffle."""
-    return TX.inverted_index_postings(_docs(spark, sf_dir))
 
 
 _NORM_H = (
@@ -8001,7 +7365,7 @@ _NORM_H = (
 )
 
 
-@register(
+register(
     "normalization_dedup",
     f"""
     SELECT source, COUNT(*)::BIGINT AS n_docs,
@@ -8012,26 +7376,14 @@ _NORM_H = (
     FROM documents GROUP BY 1 ORDER BY 1
     """,
     tags=("DD-16",),
+    op=DD.normalization_dedup, tables=("documents",),
 )
-def q_normalization_dedup(spark, sf_dir):
-    """DD-16 normalization-aware exact dedup: per source, duplicate
-    groups surfaced by casefold + punctuation-strip + whitespace
-    collapse before hashing — the cheap tier between byte-exact DD-1
-    and shingled DD-2; only digests shuffle."""
-    return DD.normalization_dedup(_docs(spark, sf_dir))
 
 
 def _bfs_oracle(hops: int = 4) -> str:
     base = (
-        TOKS_CTE
-        + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), e0 AS (SELECT src, dst FROM dir GROUP BY 1, 2
+        TOKEN_DIR_CTES
+        + """, e0 AS (SELECT src, dst FROM dir GROUP BY 1, 2
     ), deg AS (SELECT src, COUNT(*)::BIGINT AS deg FROM e0 GROUP BY 1
     ), f0 AS (SELECT src FROM deg ORDER BY deg DESC, src LIMIT 1
     ), v0 AS (SELECT src FROM f0)
@@ -8053,20 +7405,15 @@ def _bfs_oracle(hops: int = 4) -> str:
     return base + "\n    UNION ALL ".join(legs) + "\n    ORDER BY hop"
 
 
-@register(
+register(
     "bfs_reachability",
     _bfs_oracle(),
     tags=("G-6",),
+    op=G.bfs_reachability, tables=("documents",),
 )
-def q_bfs_reachability(spark, sf_dir):
-    """G-6 BFS reachability profile: fixed-hop frontier expansion
-    from the top-degree token on the cached edge list — newly
-    reached vocabulary per hop, the small-world connectivity probe
-    next to G-3's degree histogram."""
-    return G.bfs_reachability(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "knn_diversity",
     f"""
     WITH q AS (
@@ -8106,16 +7453,11 @@ def q_bfs_reachability(spark, sf_dir):
     FROM sc GROUP BY 1 ORDER BY 1
     """,
     tags=("E-20",),
+    op=SIM.knn_diversity, tables=("embeddings",),
 )
-def q_knn_diversity(spark, sf_dir):
-    """E-20 intra-list diversity: mean/min pairwise cosine among each
-    query's top-5 neighbours (the redundancy metric MMR re-rankers
-    optimize) — bounded k^2/2 pair fan-out inside a query, embedding
-    fetches as vec_id equi-joins, micro-unit-quantized exact mean."""
-    return SIM.knn_diversity(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "modal_activity_profile",
     """
     WITH hours AS (
@@ -8143,16 +7485,11 @@ def q_knn_diversity(spark, sf_dir):
     ORDER BY event_type
     """,
     tags=("AGG-12",),
+    op=AN.modal_activity_profile, tables=("events",),
 )
-def q_modal_activity_profile(spark, sf_dir):
-    """AGG-12 statistical mode: each type's modal hour and day-of-week
-    (smaller-unit tiebreak; arithmetic epoch dow, Monday=0 — engine
-    dow functions disagree on week start) — two combinable counts +
-    windows over tiny aggregates."""
-    return AN.modal_activity_profile(_events(spark, sf_dir))
 
 
-@register(
+register(
     "holt_linear_trend",
     """
     WITH RECURSIVE daily AS (
@@ -8191,14 +7528,8 @@ def q_modal_activity_profile(spark, sf_dir):
     ORDER BY i.event_type
     """,
     tags=("W-12",),
+    op=AN.holt_linear_trend, tables=("events",),
 )
-def q_holt_linear_trend(spark, sf_dir):
-    """W-12 Holt double exponential smoothing (alpha=beta=0.5): per
-    type level+trend+one-step forecast over daily counts — exact-
-    halving smoothing makes the per-type fold bit-identical to the
-    oracle's recursive CTE replay; series tables stay tiny at any
-    corpus scale."""
-    return AN.holt_linear_trend(_events(spark, sf_dir))
 
 
 @register(
@@ -8237,15 +7568,17 @@ def q_holt_linear_trend(spark, sf_dir):
     tags=("ST-15",),
 )
 def q_streaming_cms_heavy_hitters(spark, sf_dir):
-    """ST-15 streaming CMS: the engine drains the SSH file stream in
-    multi-file micro-batches while foreachBatch sums each batch's
+    """ST-15 streaming CMS: the engine drains the SSH file stream
+    while foreachBatch sums each batch's
     (row, bucket) increments into a 4x128-cell parquet counter state
     (counter addition is associative+commutative, so the drained
     table is bit-identical under ANY batch split — the third
     streaming query to earn a full hash-match oracle, after ST-13's
     min-k union and ST-14's append-only fingerprints). The report
     reads the top-10 source IPs' estimates from the drained state
-    beside the exact batch counts."""
+    beside the exact batch counts. The source here is one file, so it
+    drains in one micro-batch; multi-batch drains are covered by
+    ``TestStreamingCms::test_batch_split_invariant_and_bounded``."""
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.operators.sketches import _poly_hash_expr, cms_cells
@@ -8255,7 +7588,7 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     )
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src, max_files_per_trigger=2)
+    stream = read_ssh_stream(spark, src)
     state = _scratch_path("bls_cms_state", sf_dir)
     streaming_cms_state(stream, state)
     counters = spark.read.parquet(state)
@@ -8298,8 +7631,7 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
       FROM hashed
     ), regs AS (
       SELECT idx,
-             MAX(CASE WHEN w = 0 THEN {SK.HLL_RHO_MAX}
-                 ELSE {SK.HLL_RHO_MAX} - length(bin(w)) END)::BIGINT AS r
+             MAX({HLL_RHO_SQL})::BIGINT AS r
       FROM parts GROUP BY 1
     ), z AS (
       SELECT SUM(1::BIGINT << ({SK.HLL_RHO_MAX} - r)::INT)::BIGINT
@@ -8308,17 +7640,11 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
       FROM regs
     ), est AS (
       SELECT ({SK.HLL_M} - m_present)::BIGINT AS v,
-             {SK.HLL_ALPHA}::DOUBLE * {SK.HLL_M * SK.HLL_M}
-               * {SK.HLL_ZSCALE}
-               / (z_present + ({SK.HLL_M} - m_present) * {SK.HLL_ZSCALE})
-               AS raw
+             {HLL_RAW_SQL} AS raw
       FROM z
     ), corr AS (
       SELECT v,
-             ROUND(CASE WHEN raw <= {2.5 * SK.HLL_M}::DOUBLE AND v > 0
-                   THEN {float(SK.HLL_M)}::DOUBLE
-                        * ln({float(SK.HLL_M)}::DOUBLE / v)
-                   ELSE raw END, 4) AS hll_estimate
+             {HLL_ESTIMATE_SQL} AS hll_estimate
       FROM est
     ), ex AS (
       SELECT COUNT(DISTINCT ip)::BIGINT AS n_exact
@@ -8332,8 +7658,8 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     tags=("ST-16",),
 )
 def q_streaming_hll_distinct(spark, sf_dir):
-    """ST-16 streaming HLL: the engine drains the SSH file stream in
-    multi-file micro-batches while foreachBatch MAX-merges each
+    """ST-16 streaming HLL: the engine drains the SSH file stream
+    while foreachBatch MAX-merges each
     batch's (register, rho) observations into a <=64-row parquet
     register state (``streaming_hll_state``). Register update is
     associative, commutative AND idempotent, so the drained state —
@@ -8342,7 +7668,10 @@ def q_streaming_hll_distinct(spark, sf_dir):
     invariances (ST-15's counters tolerate resplitting but not
     replay), and the fourth streaming query with a full hash-match
     oracle. The report reads SK-4's estimate arithmetic off the
-    drained registers beside the exact distinct-IP count."""
+    drained registers beside the exact distinct-IP count. The source
+    here is one file, so it drains in one micro-batch; multi-batch
+    drains are covered by
+    ``test_streaming_hll_state_split_and_replay_invariant``."""
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.operators.sketches import (
@@ -8357,7 +7686,7 @@ def q_streaming_hll_distinct(spark, sf_dir):
     )
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src, max_files_per_trigger=2)
+    stream = read_ssh_stream(spark, src)
     state = _scratch_path("bls_hll_state", sf_dir)
     streaming_hll_state(stream, state)
     regs = spark.read.parquet(state)
@@ -8399,23 +7728,10 @@ def q_streaming_hll_distinct(spark, sf_dir):
     )
 
 
-@register(
+register(
     "corpus_dedup_funnel",
-    ND_PAIRS_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    ND_COMPONENTS_CTES
     + f"""
-    , edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jaccard >= 0.5
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs WHERE jaccard >= 0.5
-    )
-    , reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    , comp AS (
-      SELECT u AS doc_id, least(u, MIN(v)) AS component FROM reach GROUP BY u
-    )
     , compfull AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -8443,17 +7759,11 @@ def q_streaming_hll_distinct(spark, sf_dir):
     ORDER BY stage
     """,
     tags=("PL-20",),
+    op=PL.corpus_dedup_funnel, tables=("documents",),
 )
-def q_corpus_dedup_funnel(spark, sf_dir):
-    """PL-20 dedup funnel: docs/tokens surviving raw -> byte-exact ->
-    normalized-exact -> LSH near-dup-component tiers, each keeping
-    min-doc_id among the prior tier's survivors — the composed
-    "what did dedup remove" report over the certified DD-1/DD-16/DD-5
-    semantics."""
-    return PL.corpus_dedup_funnel(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "ams_f2_skew",
     f"""
     WITH counts AS (
@@ -8486,18 +7796,11 @@ def q_corpus_dedup_funnel(spark, sf_dir):
     FROM ex JOIN med USING (event_type) ORDER BY event_type
     """,
     tags=("SK-6",),
+    op=SK.ams_f2_skew, tables=("events",),
 )
-def q_ams_f2_skew(spark, sf_dir):
-    """SK-6 AMS F2 sketch: per type, the sum-of-squared-key-counts
-    (the self-join / skewed-shuffle size statistic) estimated from 8
-    random-sign integer accumulators beside the exact value — all
-    exact BIGINT arithmetic, so the approximation itself
-    hash-certifies; accumulators merge by addition across partitions
-    and streams."""
-    return SK.ams_f2_skew(_events(spark, sf_dir))
 
 
-@register(
+register(
     "value_boxplot_stats",
     """
     WITH ranked AS (
@@ -8530,15 +7833,11 @@ def q_ams_f2_skew(spark, sf_dir):
     GROUP BY 1 ORDER BY 1
     """,
     tags=("AGG-13",),
+    op=AN.value_boxplot_stats, tables=("events",),
 )
-def q_value_boxplot_stats(spark, sf_dir):
-    """AGG-13 Tukey box plot: exact q1/median/q3 (percentile_disc-
-    style deterministic positional picks, quartile positions in
-    integer arithmetic) + IQR + 1.5-IQR outlier counts per type."""
-    return AN.value_boxplot_stats(_events(spark, sf_dir))
 
 
-@register(
+register(
     "longest_event_streaks",
     """
     WITH seq AS (
@@ -8561,16 +7860,11 @@ def q_value_boxplot_stats(spark, sf_dir):
     FROM pick WHERE rn = 1 ORDER BY event_type
     """,
     tags=("W-13",),
+    op=AN.longest_event_streaks, tables=("events",),
 )
-def q_longest_event_streaks(spark, sf_dir):
-    """W-13 run-length islands: longest identical-event streak per
-    type across user sequences (rn-difference island trick — two
-    window passes sharing one user_id shuffle, no self-joins),
-    smallest-user tiebreak."""
-    return AN.longest_event_streaks(_events(spark, sf_dir))
 
 
-@register(
+register(
     "mmr_rerank",
     f"""
     WITH q AS (
@@ -8650,17 +7944,11 @@ def q_longest_event_streaks(spark, sf_dir):
     ORDER BY query_id, select_rank
     """,
     tags=("E-21",),
+    op=SIM.mmr_rerank, tables=("embeddings",),
 )
-def q_mmr_rerank(spark, sf_dir):
-    """E-21 MMR diversified re-rank (lambda=0.5): greedy
-    relevance-minus-max-similarity selection of 3 results from each
-    query's top-10 shortlist — the diversification pass for the
-    redundancy E-20 measures; fixed-k unrolled greedy steps, all on
-    rounded cosines with id tiebreaks, shortlist^2-bounded work."""
-    return SIM.mmr_rerank(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "nearest_event_join",
     """
     WITH l AS (
@@ -8691,17 +7979,11 @@ def q_mmr_rerank(spark, sf_dir):
     GROUP BY 1 ORDER BY 1
     """,
     tags=("J-17",),
+    op=J.nearest_event_join, tables=("events",),
 )
-def q_nearest_event_join(spark, sf_dir):
-    """J-17 nearest-in-time join: each error matched to the same
-    user's closest purchase within ±1h in EITHER direction (J-8 looks
-    strictly backward), whole-second gaps, earlier-then-smaller-id
-    tiebreak, bucket-histogram output — user_id equi-join with an
-    in-partition residual range predicate."""
-    return J.nearest_event_join(_events(spark, sf_dir))
 
 
-@register(
+register(
     "weekly_pct_change",
     """
     WITH weekly AS (
@@ -8718,16 +8000,11 @@ def q_nearest_event_join(spark, sf_dir):
     ORDER BY event_type, week_idx
     """,
     tags=("W-14",),
+    op=AN.weekly_pct_change, tables=("events",),
 )
-def q_weekly_pct_change(spark, sf_dir):
-    """W-14 week-over-week growth: per-type weekly volumes with lag
-    percent change — Monday-aligned integer week indexes (the AGG-12
-    epoch arithmetic, never engine date_trunc) so boundaries can't
-    drift cross-engine."""
-    return AN.weekly_pct_change(_events(spark, sf_dir))
 
 
-@register(
+register(
     "behavioral_entropy",
     """
     WITH per AS (
@@ -8751,16 +8028,11 @@ def q_weekly_pct_change(spark, sf_dir):
     FROM pu GROUP BY 1 ORDER BY 1
     """,
     tags=("AGG-14",),
+    op=AN.behavioral_entropy, tables=("events",),
 )
-def q_behavioral_entropy(spark, sf_dir):
-    """AGG-14 behavioral diversity: Shannon entropy of each user's
-    event-type mix in exact integer micro-nats (quantize-each-ln
-    discipline), bucketed by integer division — the evenness signal
-    diversity_distribution's distinct-count misses."""
-    return AN.behavioral_entropy(_events(spark, sf_dir))
 
 
-@register(
+register(
     "top_value_days_with_ties",
     """
     WITH daily AS (
@@ -8777,15 +8049,11 @@ def q_behavioral_entropy(spark, sf_dir):
     FROM r WHERE rnk <= 3 ORDER BY event_type, rnk, date
     """,
     tags=("D-54",),
+    op=AN.top_value_days_with_ties, tables=("events",),
 )
-def q_top_value_days_with_ties(spark, sf_dir):
-    """D-54 ties-aware top-k: RANK() keeps every day tied at a kept
-    rank (row_number would pick arbitrary winners); DECIMAL-exact
-    daily sums make tie detection itself exact."""
-    return AN.top_value_days_with_ties(_events(spark, sf_dir))
 
 
-@register(
+register(
     "cumulative_unique_users",
     """
     WITH fs AS (
@@ -8801,15 +8069,11 @@ def q_top_value_days_with_ties(spark, sf_dir):
     FROM days d LEFT JOIN pd USING (first_date) ORDER BY date
     """,
     tags=("W-15",),
+    op=AN.cumulative_unique_users, tables=("events",),
 )
-def q_cumulative_unique_users(spark, sf_dir):
-    """W-15 user-growth curve: cumulative distinct users by day via
-    the linear first-seen rewrite (count each user once on their min
-    day + running sum) — COUNT(DISTINCT) OVER would be quadratic."""
-    return AN.cumulative_unique_users(_events(spark, sf_dir))
 
 
-@register(
+register(
     "trimmed_mean_value",
     """
     WITH ranked AS (
@@ -8828,15 +8092,11 @@ def q_cumulative_unique_users(spark, sf_dir):
     FROM kept GROUP BY 1 ORDER BY 1
     """,
     tags=("AGG-15",),
+    op=AN.trimmed_mean_value, tables=("events",),
 )
-def q_trimmed_mean_value(spark, sf_dir):
-    """AGG-15 trimmed mean: per-type mean with the top/bottom 5% of
-    ranked rows discarded — integer-rank trim boundaries,
-    DECIMAL-exact surviving sum, one division at the end."""
-    return AN.trimmed_mean_value(_events(spark, sf_dir))
 
 
-@register(
+register(
     "epoch_shuffle_shards",
     TOKS_CTE
     + """
@@ -8853,16 +8113,11 @@ def q_trimmed_mean_value(spark, sf_dir):
     FROM keyed GROUP BY 1 ORDER BY 1
     """,
     tags=("PL-21",),
+    op=PL.epoch_shuffle_shards, tables=("documents",),
 )
-def q_epoch_shuffle_shards(spark, sf_dir):
-    """PL-21 deterministic epoch shuffle: seeded md5 positions split
-    the corpus into shards with per-shard doc/token mass and
-    hash-order boundary docs — reseeding reshuffles reproducibly,
-    the auditability property a resumable training run needs."""
-    return PL.epoch_shuffle_shards(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "value_gini",
     """
     WITH ranked AS (
@@ -8882,15 +8137,11 @@ def q_epoch_shuffle_shards(spark, sf_dir):
     FROM agg ORDER BY event_type
     """,
     tags=("AGG-16",),
+    op=AN.value_gini, tables=("events",),
 )
-def q_value_gini(spark, sf_dir):
-    """AGG-16 Gini concentration of value per type (Sen 1973 rank
-    form): integer-cent rank-weighted sums in DECIMAL(38,0), one
-    DOUBLE division — the inequality index beside AGG-13's quartiles."""
-    return AN.value_gini(_events(spark, sf_dir))
 
 
-@register(
+register(
     "value_lorenz_deciles",
     """
     WITH per_user AS (
@@ -8918,15 +8169,11 @@ def q_value_gini(spark, sf_dir):
     FROM dec ORDER BY decile
     """,
     tags=("AGG-18",),
+    op=AN.value_lorenz_deciles, tables=("events",),
 )
-def q_value_lorenz_deciles(spark, sf_dir):
-    """AGG-18 Lorenz deciles: users ranked by exact-cent total value
-    (scale-safe two-pass rank), decile value masses and cumulative
-    shares — the curve behind AGG-16's Gini scalar."""
-    return AN.value_lorenz_deciles(_events(spark, sf_dir))
 
 
-@register(
+register(
     "rolling_active_users",
     """
     WITH pres AS (
@@ -8952,17 +8199,11 @@ def q_value_lorenz_deciles(spark, sf_dir):
     ORDER BY date
     """,
     tags=("W-16",),
+    op=AN.rolling_active_users, tables=("events",),
 )
-def q_rolling_active_users(spark, sf_dir):
-    """W-16 DAU / trailing-7-day WAU / stickiness: the linear
-    interval-union rewrite of a moving COUNT(DISTINCT) — per-presence
-    coverage intervals clipped at the next presence, exploded <=7x,
-    counted once per user per day; all calendar math on epoch-day
-    integers."""
-    return AN.rolling_active_users(_events(spark, sf_dir))
 
 
-@register(
+register(
     "association_rules",
     """
     WITH baskets AS (
@@ -8990,16 +8231,11 @@ def q_rolling_active_users(spark, sf_dir):
     ORDER BY antecedent, consequent
     """,
     tags=("AGG-17",),
+    op=AN.association_rules, tables=("events",),
 )
-def q_association_rules(spark, sf_dir):
-    """AGG-17 one-level association rules (Agrawal 1993) over user
-    event-type baskets: support / confidence / lift as single IEEE
-    divisions of exact BIGINT counts; pair fan-out is a co-partitioned
-    self-join on user_id bounded by types-per-user."""
-    return AN.association_rules(_events(spark, sf_dir))
 
 
-@register(
+register(
     "markov_stationary",
     """
     WITH seq AS (
@@ -9061,17 +8297,11 @@ def q_association_rules(spark, sf_dir):
     FROM m5, tot ORDER BY mass_scaled DESC, event_type
     """,
     tags=("G-7",),
+    op=G.markov_stationary, tables=("events",),
 )
-def q_markov_stationary(spark, sf_dir):
-    """G-7 quasi-stationary mass of the event-type Markov chain: 5
-    unrolled fixed-point power-iteration steps over the k x k
-    transition table (flows floored to BIGINT before every incoming
-    sum — the G-1 exactness discipline); the corpus collapses to the
-    transition counts in one user-partitioned window pass."""
-    return G.markov_stationary(_events(spark, sf_dir))
 
 
-@register(
+register(
     "two_proportion_drift",
     """
     WITH keyed AS (
@@ -9115,17 +8345,11 @@ def q_markov_stationary(spark, sf_dir):
     FROM wide ORDER BY event_type
     """,
     tags=("AD-11",),
+    op=AD.two_proportion_drift, tables=("events",),
 )
-def q_two_proportion_drift(spark, sf_dir):
-    """AD-11 two-proportion z-test of per-type traffic-share drift
-    between the period halves: exact integer counts, then the same
-    IEEE operation sequence on both engines (divisions, one sqrt) —
-    the per-type direction+significance companion to AD-4's global
-    chi-square."""
-    return AD.two_proportion_drift(_events(spark, sf_dir))
 
 
-@register(
+register(
     "embedding_drift",
     """
     WITH comps AS (
@@ -9153,16 +8377,11 @@ def q_two_proportion_drift(spark, sf_dir):
     LIMIT 10
     """,
     tags=("E-22",),
+    op=SIM.embedding_drift, tables=("embeddings",),
 )
-def q_embedding_drift(spark, sf_dir):
-    """E-22 per-dimension embedding drift between the vec_id-parity
-    cohorts: micro-unit integer quantization at the scan, exact
-    integer cohort sums, one double division per mean — the cheap
-    encoder-change monitor in front of E-7's recall check."""
-    return SIM.embedding_drift(load_table(spark, sf_dir, "embeddings"))
 
 
-@register(
+register(
     "ks_drift",
     """
     WITH keyed AS (
@@ -9213,16 +8432,11 @@ def q_embedding_drift(spark, sf_dir):
     FROM agg ORDER BY event_type
     """,
     tags=("AD-12",),
+    op=AD.ks_drift, tables=("events",),
 )
-def q_ks_drift(spark, sf_dir):
-    """AD-12 two-sample KS drift of the value distribution per type:
-    cross-multiplied DECIMAL(38,0) sup-distance over the distinct-cent
-    cumulative table, one division + one sqrt at the end (Smirnov
-    1948 asymptotic bar at alpha = 0.05)."""
-    return AD.ks_drift(_events(spark, sf_dir))
 
 
-@register(
+register(
     "structural_breaks",
     """
     WITH base AS (
@@ -9273,15 +8487,11 @@ def q_ks_drift(spark, sf_dir):
     FROM best WHERE rk = 1 ORDER BY event_type
     """,
     tags=("AD-13",),
+    op=AD.structural_breaks, tables=("events",),
 )
-def q_structural_breaks(spark, sf_dir):
-    """AD-13 per-type structural break: best SSE-gain split of the
-    zero-filled daily count series (binseg depth 1), exact BIGINT
-    cumulative sums, one IEEE division per SSE term."""
-    return AD.structural_breaks(_events(spark, sf_dir))
 
 
-@register(
+register(
     "daily_acf",
     """
     WITH base AS (
@@ -9315,15 +8525,11 @@ def q_structural_breaks(spark, sf_dir):
     FROM agg ORDER BY lag
     """,
     tags=("W-17",),
+    op=AN.daily_acf, tables=("events",),
 )
-def q_daily_acf(spark, sf_dir):
-    """W-17 lag-1..7 autocorrelation of the zero-filled daily count
-    series: integer co-moment Pearson (the AGG-7 discipline), three
-    mirrored IEEE ops per lag."""
-    return AN.daily_acf(_events(spark, sf_dir))
 
 
-@register(
+register(
     "histogram_quantiles",
     """
     WITH vals AS (
@@ -9360,15 +8566,11 @@ def q_daily_acf(spark, sf_dir):
     FROM fst WHERE rk = 1 ORDER BY p
     """,
     tags=("SK-7",),
+    op=SK.histogram_quantiles, tables=("events",),
 )
-def q_histogram_quantiles(spark, sf_dir):
-    """SK-7 mergeable 256-bin histogram quantiles (p50/90/95/99) of
-    event value: integer bin math + within-bin interpolation; the
-    certifiable counterpart of AGG-2b's engine approx_percentile."""
-    return SK.histogram_quantiles(_events(spark, sf_dir))
 
 
-@register(
+register(
     "centroid_silhouette",
     """
     WITH comps AS (
@@ -9410,15 +8612,11 @@ def q_histogram_quantiles(spark, sf_dir):
     FROM scored GROUP BY 1 ORDER BY label
     """,
     tags=("E-26",),
+    op=SIM.centroid_silhouette, tables=("embeddings",),
 )
-def q_centroid_silhouette(spark, sf_dir):
-    """E-26 simplified (centroid) silhouette per label: integer
-    micro-unit geometry, min-on-integer-d2 nearest rival, per-point
-    score re-quantized before the order-free label mean."""
-    return SIM.centroid_silhouette(_emb(spark, sf_dir))
 
 
-@register(
+register(
     "rake_keyphrases",
     r"""
     WITH cleaned AS (
@@ -9461,15 +8659,11 @@ def q_centroid_silhouette(spark, sf_dir):
     ORDER BY rake_score DESC, phrase LIMIT 15
     """,
     tags=("T-27",),
+    op=TX.rake_keyphrases, tables=("documents",),
 )
-def q_rake_keyphrases(spark, sf_dir):
-    """T-27 RAKE keyphrases: stopword/punctuation-delimited candidate
-    phrases, integer micro degree/freq word scores, order-free BIGINT
-    phrase sums, total-ordered top-15."""
-    return TX.rake_keyphrases(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "readability_profile",
     r"""
     WITH per AS (
@@ -9509,15 +8703,11 @@ def q_rake_keyphrases(spark, sf_dir):
     FROM agg ORDER BY source
     """,
     tags=("T-28",),
+    op=TX.readability_profile, tables=("documents",),
 )
-def q_readability_profile(spark, sf_dir):
-    """T-28 Flesch / Flesch-Kincaid per source: vowel-group syllable
-    heuristic and sentence runs as regex length differences, exact
-    BIGINT count sums, six mirrored IEEE ops per formula."""
-    return TX.readability_profile(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "weighted_sample",
     """
     WITH keyed AS (
@@ -9537,29 +8727,14 @@ def q_readability_profile(spark, sf_dir):
     FROM top WHERE sample_rank <= 100 ORDER BY sample_rank
     """,
     tags=("PL-22",),
+    op=PL.weighted_sample, tables=("documents",),
 )
-def q_weighted_sample(spark, sf_dir):
-    """PL-22 Efraimidis-Spirakis weighted sample (k=100, w=n_chars):
-    seeded 52-bit hash uniforms, ln(u)/w keys (two mirrored IEEE
-    ops), TakeOrderedAndProject top-k."""
-    return PL.weighted_sample(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "seasonal_decomposition",
-    """
-    WITH base AS (
-      SELECT (ts::DATE - DATE '1970-01-01')::BIGINT AS d,
-             COUNT(*)::BIGINT AS x
-      FROM events GROUP BY 1
-    ), rngt AS (
-      SELECT MIN(d) AS lo, MAX(d) AS hi FROM base
-    ), cal AS (
-      SELECT unnest(range(lo, hi + 1)) AS d FROM rngt
-    ), series AS (
-      SELECT c.d, COALESCE(b.x, 0)::BIGINT AS x
-      FROM cal c LEFT JOIN base b USING (d)
-    ), ma AS (
+    DAILY_SERIES_CTES
+    + """, ma AS (
       SELECT d, x, (SUM(x) OVER w7)::BIGINT AS s7,
              (COUNT(*) OVER w7)::BIGINT AS n7
       FROM series
@@ -9587,18 +8762,11 @@ def q_weighted_sample(spark, sf_dir):
     FROM seas s JOIN mar m USING (dow) ORDER BY dow
     """,
     tags=("W-18",),
+    op=AN.seasonal_decomposition, tables=("events",),
 )
-def q_seasonal_decomposition(spark, sf_dir):
-    """W-18 additive seasonal decomposition of the zero-filled daily
-    count series: centered 7-day MA trend, per-dow seasonal means of
-    the one-step-quantized detrended series (round((7x - S7)*1e6/7)
-    BIGINT micros), mean absolute residual per dow. Day-of-week is
-    (epoch_day + 4) % 7 — pure integer, immune to the engines'
-    dayofweek numbering mismatch."""
-    return AN.seasonal_decomposition(_events(spark, sf_dir))
 
 
-@register(
+register(
     "spearman_value_time",
     """
     WITH rows_ AS (
@@ -9646,17 +8814,11 @@ def q_seasonal_decomposition(spark, sf_dir):
     FROM m ORDER BY event_type
     """,
     tags=("AGG-19",),
+    op=AN.spearman_value_time, tables=("events",),
 )
-def q_spearman_value_time(spark, sf_dir):
-    """AGG-19 Spearman rank correlation of value against epoch day per
-    event type: tied ranks handled analytically on the distinct-value
-    tables (doubled average rank = 2*cum_before + cnt + 1, an exact
-    BIGINT), co-moments in DECIMAL(38,0), closed form in mirrored
-    doubles."""
-    return AN.spearman_value_time(_events(spark, sf_dir))
 
 
-@register(
+register(
     "session_concurrency",
     """
     WITH secs AS (
@@ -9706,17 +8868,11 @@ def q_spearman_value_time(spark, sf_dir):
     FROM best WHERE rk = 1 ORDER BY day
     """,
     tags=("W-19",),
+    op=AN.session_concurrency, tables=("events",),
 )
-def q_session_concurrency(spark, sf_dir):
-    """W-19 peak concurrent sessions per day by day-partitioned
-    sweep-line over W-4's half-open session intervals: midnight-
-    spanning sessions clip into each covered day, same-second deltas
-    net BEFORE the cumulative pass, peaks tie-break to the earliest
-    second — all integer arithmetic."""
-    return AN.session_concurrency(_events(spark, sf_dir))
 
 
-@register(
+register(
     "heaps_law",
     TOKS_CTE
     + """
@@ -9774,17 +8930,11 @@ def q_session_concurrency(spark, sf_dir):
     FROM pts, fit ORDER BY checkpoint
     """,
     tags=("T-29",),
+    op=TX.heaps_law, tables=("documents",),
 )
-def q_heaps_law(spark, sf_dir):
-    """T-29 Heaps'-law vocabulary growth: V and N at ten integer-cut
-    doc-id checkpoints via broadcast-threshold aggregation (no global
-    running window), log-log OLS in T-17's quantized-ln co-moment
-    discipline; ln k reported instead of exp(ln k) because only ln's
-    cross-engine rounding is pinned."""
-    return TX.heaps_law(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "slo_burn_alerts",
     """
     WITH base AS (
@@ -9825,13 +8975,8 @@ def q_heaps_law(spark, sf_dir):
     FROM roll ORDER BY day
     """,
     tags=("OPS-3",),
+    op=AD.slo_burn_alerts, tables=("events",),
 )
-def q_slo_burn_alerts(spark, sf_dir):
-    """OPS-3 multi-window error-budget burn (SRE Workbook ch.5 scaled
-    to daily granularity): exact BIGINT numerators/denominators over
-    the zero-filled calendar, one division + one comparison per burn,
-    NULL on empty windows."""
-    return AD.slo_burn_alerts(_events(spark, sf_dir))
 
 
 @register(
@@ -9869,14 +9014,17 @@ def q_slo_burn_alerts(spark, sf_dir):
 )
 def q_streaming_line_length_quantiles(spark, sf_dir):
     """ST-17 streaming message-length quantiles: the engine drains the
-    SSH file stream in multi-file micro-batches while foreachBatch
+    SSH file stream while foreachBatch
     SUM-merges fixed-bin (width 4, domain [0, 1024)) length histograms
     into a <=256-row parquet state (``streaming_length_histogram_state``
     — SK-7's mergeable histogram with the data-independent bin domain
     streaming forces), then reads p50/90/95/99 off the drained state
     with SK-7's integer-rank extraction. Counter merge is SUM, so the
     drained state is bit-identical under any micro-batch split — the
-    fifth streaming query with a full hash-match oracle."""
+    fifth streaming query with a full hash-match oracle. The source
+    here is one file, so it drains in one micro-batch; multi-batch
+    drains are covered by
+    ``test_streaming_length_histogram_split_invariant``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -9886,7 +9034,7 @@ def q_streaming_line_length_quantiles(spark, sf_dir):
     )
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src, max_files_per_trigger=2)
+    stream = read_ssh_stream(spark, src)
     state = _scratch_path("bls_lenq_state", sf_dir)
     streaming_length_histogram_state(stream, state)
     hist = spark.read.parquet(state)
@@ -9937,21 +9085,10 @@ def q_streaming_line_length_quantiles(spark, sf_dir):
     return est.orderBy("p")
 
 
-@register(
+register(
     "seasonal_adjusted_anomalies",
-    """
-    WITH base AS (
-      SELECT (ts::DATE - DATE '1970-01-01')::BIGINT AS d,
-             COUNT(*)::BIGINT AS x
-      FROM events GROUP BY 1
-    ), rngt AS (
-      SELECT MIN(d) AS lo, MAX(d) AS hi FROM base
-    ), cal AS (
-      SELECT unnest(range(lo, hi + 1)) AS d FROM rngt
-    ), series AS (
-      SELECT c.d, COALESCE(b.x, 0)::BIGINT AS x
-      FROM cal c LEFT JOIN base b USING (d)
-    ), ma AS (
+    DAILY_SERIES_CTES
+    + """, ma AS (
       SELECT d, x, (SUM(x) OVER w7)::BIGINT AS s7,
              (COUNT(*) OVER w7)::BIGINT AS n7
       FROM series
@@ -9987,16 +9124,11 @@ def q_streaming_line_length_quantiles(spark, sf_dir):
     ORDER BY day
     """,
     tags=("AD-14",),
+    op=AD.seasonal_adjusted_anomalies, tables=("events",),
 )
-def q_seasonal_adjusted_anomalies(spark, sf_dir):
-    """AD-14 seasonally-adjusted daily anomalies: W-18's decomposition
-    as a pre-whitening step, then an exact-co-moment z-score on the
-    integer residuals; |z| > 1.5 reports. The decompose-then-test
-    half of seasonal-hybrid ESD."""
-    return AD.seasonal_adjusted_anomalies(_events(spark, sf_dir))
 
 
-@register(
+register(
     "kendall_tau_daily",
     """
     WITH base AS (
@@ -10041,26 +9173,14 @@ def q_seasonal_adjusted_anomalies(spark, sf_dir):
     ORDER BY event_type
     """,
     tags=("AGG-20",),
+    op=AN.kendall_tau_daily, tables=("events",),
 )
-def q_kendall_tau_daily(spark, sf_dir):
-    """AGG-20 Kendall tau-b of daily count against day per type: exact
-    BIGINT concordant/discordant pair counts over the zero-filled
-    day-granular series (quadratic in days, never in events), tie
-    correction on the count axis, one mirrored sqrt/division."""
-    return AN.kendall_tau_daily(_events(spark, sf_dir))
 
 
-@register(
+register(
     "degree_assortativity",
-    TOKS_CTE
-    + """
-    , pairs AS (
-      SELECT unnest(tokens[:len(tokens)-1]) AS a, unnest(tokens[2:]) AS b
-      FROM toks WHERE len(tokens) >= 2
-    ), dir AS (
-      SELECT a AS src, b AS dst FROM pairs
-      UNION ALL SELECT b AS src, a AS dst FROM pairs
-    ), edges AS (
+    TOKEN_DIR_CTES
+    + """, edges AS (
       SELECT src, dst FROM dir GROUP BY 1, 2
     ), deg AS (
       SELECT src, COUNT(*)::BIGINT AS deg FROM edges GROUP BY 1
@@ -10092,16 +9212,11 @@ def q_kendall_tau_daily(spark, sf_dir):
     FROM m
     """,
     tags=("G-8",),
+    op=G.degree_assortativity, tables=("documents",),
 )
-def q_degree_assortativity(spark, sf_dir):
-    """G-8 Newman degree assortativity of the token-adjacency graph:
-    Pearson correlation of endpoint degrees over the symmetric
-    directed edge list, DECIMAL(38,0) co-moments, mirrored closed
-    form; co-occurrence graphs are canonically disassortative."""
-    return G.degree_assortativity(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "hopkins_statistic",
     f"""
     WITH comps AS (
@@ -10155,13 +9270,8 @@ def q_degree_assortativity(spark, sf_dir):
     FROM ws, us
     """,
     tags=("E-27",),
+    op=SIM.hopkins_statistic, tables=("embeddings",),
 )
-def q_hopkins_statistic(spark, sf_dir):
-    """E-27 Hopkins clusterability: NN distances of 32 hash-picked
-    real probes vs 32 integer-lattice uniform probes in the per-dim
-    bounding box, H = sum(u)/(sum(u)+sum(w)); micro-BIGINT geometry,
-    distributed top-k probe pick, broadcast probe joins."""
-    return SIM.hopkins_statistic(_emb(spark, sf_dir))
 
 
 @register(
@@ -10207,7 +9317,7 @@ def q_hopkins_statistic(spark, sf_dir):
 )
 def q_streaming_bloom_filter(spark, sf_dir):
     """ST-18 streaming Bloom filter: the engine drains the SSH file
-    stream in multi-file micro-batches while foreachBatch
+    stream while foreachBatch
     union-DISTINCT-merges each batch's set-bit positions into a
     <=1024-row parquet state (``streaming_bloom_state``). Bit-set
     union is associative, commutative AND idempotent — ST-16's
@@ -10217,7 +9327,9 @@ def q_streaming_bloom_filter(spark, sf_dir):
     fill-rate cardinality estimate -(m/k)*ln(1 - X/m) (Papapetrou et
     al.'s standard inversion; ln is cross-engine bit-identical) off
     the drained bits beside the exact distinct-IP count — the sixth
-    streaming query with a full hash-match oracle."""
+    streaming query with a full hash-match oracle. The source here is
+    one file, so it drains in one micro-batch; multi-batch drains are
+    covered by ``test_streaming_bloom_split_and_replay_invariant``."""
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.operators.sketches import BLOOM_M
@@ -10227,7 +9339,7 @@ def q_streaming_bloom_filter(spark, sf_dir):
     )
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src, max_files_per_trigger=2)
+    stream = read_ssh_stream(spark, src)
     state = _scratch_path("bls_bloom_state", sf_dir)
     streaming_bloom_state(stream, state)
     bits = spark.read.parquet(state)
@@ -10258,7 +9370,7 @@ def q_streaming_bloom_filter(spark, sf_dir):
     )
 
 
-@register(
+register(
     "tokenizer_fertility",
     r"""
     WITH per_doc AS (
@@ -10285,30 +9397,14 @@ def q_streaming_bloom_filter(spark, sf_dir):
     FROM agg ORDER BY lang
     """,
     tags=("T-30",),
+    op=TX.tokenizer_fertility, tables=("documents",),
 )
-def q_tokenizer_fertility(spark, sf_dir):
-    """T-30 tokenizer fertility per language: BPE-ish pre-tokenization
-    (letter runs, digit runs, single punctuation) vs whitespace words
-    — subtokens-per-word and chars-per-subtoken, the two numbers
-    multilingual tokenizer papers publish per language."""
-    return TX.tokenizer_fertility(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "capacity_forecast",
-    """
-    WITH base AS (
-      SELECT (ts::DATE - DATE '1970-01-01')::BIGINT AS d,
-             COUNT(*)::BIGINT AS x
-      FROM events GROUP BY 1
-    ), rngt AS (
-      SELECT MIN(d) AS lo, MAX(d) AS hi FROM base
-    ), cal AS (
-      SELECT unnest(range(lo, hi + 1)) AS d FROM rngt
-    ), series AS (
-      SELECT c.d, COALESCE(b.x, 0)::BIGINT AS x
-      FROM cal c LEFT JOIN base b USING (d)
-    ), m AS (
+    DAILY_SERIES_CTES
+    + """, m AS (
       SELECT COUNT(*)::BIGINT AS n, MAX(d)::BIGINT AS hi,
              MAX(x)::BIGINT AS peak, SUM(d)::BIGINT AS sd,
              SUM(x)::BIGINT AS sx, SUM(d * x)::BIGINT AS sdx,
@@ -10342,15 +9438,11 @@ def q_tokenizer_fertility(spark, sf_dir):
     FROM g
     """,
     tags=("OPS-4",),
+    op=AN.capacity_forecast, tables=("events",),
 )
-def q_capacity_forecast(spark, sf_dir):
-    """OPS-4 linear capacity forecast: exact-co-moment OLS on the
-    zero-filled daily series, 7-day projection, days-to-headroom
-    against 1.5x the observed peak; NULL when flat or declining."""
-    return AN.capacity_forecast(_events(spark, sf_dir))
 
 
-@register(
+register(
     "rank_movers",
     """
     WITH base AS (
@@ -10373,15 +9465,11 @@ def q_capacity_forecast(spark, sf_dir):
     FROM ranked ORDER BY week_start, rank
     """,
     tags=("D-55",),
+    op=AN.rank_movers, tables=("events",),
 )
-def q_rank_movers(spark, sf_dir):
-    """D-55 week-over-week rank movers: integer epoch-day-div-7 week
-    buckets (no engine week numbering), volume ranks with name
-    tiebreaks, lag against the previous week."""
-    return AN.rank_movers(_events(spark, sf_dir))
 
 
-@register(
+register(
     "char_class_profile_arrow",
     r"""
     SELECT doc_id, length(text)::BIGINT AS n_chars,
@@ -10401,27 +9489,14 @@ def q_rank_movers(spark, sf_dir):
     FROM documents ORDER BY doc_id
     """,
     tags=("U-7",),
+    op=TX.char_class_profile_arrow, tables=("documents",),
 )
-def q_char_class_profile_arrow(spark, sf_dir):
-    """U-7 mapInArrow char-class profile: pyarrow.compute kernels over
-    raw RecordBatches (no pandas materialization), hash-matched
-    against a pure-SQL oracle — the lowest-overhead certified Python
-    escape hatch."""
-    return TX.char_class_profile_arrow(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "weekday_effect_anova",
-    """
-    WITH base AS (
-      SELECT (ts::DATE - DATE '1970-01-01')::BIGINT AS d,
-             COUNT(*)::BIGINT AS x
-      FROM events GROUP BY 1
-    ), rngt AS (
-      SELECT MIN(d) AS lo, MAX(d) AS hi FROM base
-    ), cal AS (
-      SELECT unnest(range(lo, hi + 1)) AS d FROM rngt
-    ), series AS (
+    DAILY_CAL_CTES
+    + """, series AS (
       SELECT ((c.d + 4) % 7)::BIGINT AS dow, COALESCE(b.x, 0)::BIGINT AS x
       FROM cal c LEFT JOIN base b USING (d)
     ), grp AS (
@@ -10449,17 +9524,11 @@ def q_char_class_profile_arrow(spark, sf_dir):
     FROM m
     """,
     tags=("AD-15",),
+    op=AD.weekday_effect_anova, tables=("events",),
 )
-def q_weekday_effect_anova(spark, sf_dir):
-    """AD-15 one-way ANOVA of daily counts by day-of-week: F statistic
-    and eta-squared from exact integer group sums (per-group terms
-    quantized to micros before summing — float sums across groups
-    would be order-dependent); decides whether AD-14's seasonal
-    adjustment is signal or noise."""
-    return AD.weekday_effect_anova(_events(spark, sf_dir))
 
 
-@register(
+register(
     "survival_churn_curve",
     """
     WITH spans AS (
@@ -10500,18 +9569,11 @@ def q_weekday_effect_anova(spark, sf_dir):
     ORDER BY t_days
     """,
     tags=("AGG-21",),
+    op=AN.survival_churn_curve, tables=("events",),
 )
-def q_survival_churn_curve(spark, sf_dir):
-    """AGG-21 Kaplan-Meier / Nelson-Aalen user-churn curve with right
-    censoring (active within 7 days of horizon = censored): per-t
-    hazard and ln-survival terms quantize to BIGINT micros before the
-    running sums, so both order-dependent textbook reductions become
-    exact integer window reductions; at-risk set is a reversed
-    cumulative sum, never a self-join."""
-    return AN.survival_churn_curve(_events(spark, sf_dir))
 
 
-@register(
+register(
     "burrows_delta",
     TOKS_CTE
     + """
@@ -10556,17 +9618,11 @@ def q_survival_churn_curve(spark, sf_dir):
     GROUP BY 1, 2 ORDER BY source_a, source_b
     """,
     tags=("T-31",),
+    op=TX.burrows_delta, tables=("documents",),
 )
-def q_burrows_delta(spark, sf_dir):
-    """T-31 Burrows' Delta stylometric distance between sources:
-    micro-quantized marker-token rates, integer co-moment z-scores
-    (one sqrt + one division each, re-quantized), exact integer mean
-    absolute difference per source pair — the style-redundancy
-    profile of the training mixture."""
-    return TX.burrows_delta(_docs(spark, sf_dir))
 
 
-@register(
+register(
     "user_resurrections",
     """
     WITH ud AS (
@@ -10588,16 +9644,11 @@ def q_burrows_delta(spark, sf_dir):
     FROM flagged GROUP BY d ORDER BY day
     """,
     tags=("W-20",),
+    op=AN.user_resurrections, tables=("events",),
 )
-def q_user_resurrections(spark, sf_dir):
-    """W-20 resurrection/winback report: distinct user-days, integer
-    lag gaps per user (>= 14 silent days then active = resurrected),
-    day-granular counts and share — growth accounting's third bucket
-    beside new and retained."""
-    return AN.user_resurrections(_events(spark, sf_dir))
 
 
-@register(
+register(
     "dedup_tier_agreement",
     NDP_PAIRS_CTES
     + SIMHASH_SQL
@@ -10658,13 +9709,8 @@ def q_user_resurrections(spark, sf_dir):
     ORDER BY tpx.tier_a, tpx.tier_b
     """,
     tags=("DD-17",),
+    op=DD.dedup_tier_agreement, tables=("documents",),
 )
-def q_dedup_tier_agreement(spark, sf_dir):
-    """DD-17 dedup-tier agreement matrix: pair-set Jaccard between the
-    exact (capped clone groups), MinHash-LSH (verified J >= 0.5), and
-    SimHash (H <= 3) tiers — do the tiers fire on the same duplicate
-    population, or does each leave the others' duplicates behind?"""
-    return DD.dedup_tier_agreement(_docs(spark, sf_dir))
 
 
 @register(
@@ -10702,7 +9748,7 @@ def q_media_byte_entropy(spark, sf_dir):
     return MM.media_byte_entropy(media)
 
 
-@register(
+register(
     "mann_whitney_value",
     """
     WITH rows_ AS (
@@ -10773,13 +9819,8 @@ def q_media_byte_entropy(spark, sf_dir):
     FROM m
     """,
     tags=("AGG-22",),
+    op=AN.mann_whitney_value, tables=("events",),
 )
-def q_mann_whitney_value(spark, sf_dir):
-    """AGG-22 Mann-Whitney U (purchase vs view values): doubled
-    mid-ranks on the combined distinct-cent table, exact half-integer
-    U, tie-corrected normal z in mirrored doubles — the nonparametric
-    location test beside AD-12's shape test."""
-    return AN.mann_whitney_value(_events(spark, sf_dir))
 
 
 @register(

@@ -423,14 +423,14 @@ def test_embedding_near_dup_arrow_engine_bit_identical_to_fold(spark, sf_dir):
 
 def test_scoped_verify_path_equals_full_explode(docs, monkeypatch):
     """The candidate-scoped Jaccard verify (the 100 TB physical plan,
-    normally gated behind BLS_SCOPE_VERIFY_MIN_BYTES) must emit
+    normally gated behind SCOPE_VERIFY_MIN_BYTES) must emit
     exactly the pairs the full-corpus explode emits — the adaptive
     switch is a plan choice, never a semantics choice."""
-    from bigdata_logs_spark.operators.dedup import near_dup_pairs
+    from bigdata_logs_spark.operators import dedup as DD
 
-    full = {tuple(r) for r in near_dup_pairs(docs).collect()}
-    monkeypatch.setenv("BLS_SCOPE_VERIFY_MIN_BYTES", "1")
-    scoped = {tuple(r) for r in near_dup_pairs(docs).collect()}
+    full = {tuple(r) for r in DD.near_dup_pairs(docs).collect()}
+    monkeypatch.setattr(DD, "SCOPE_VERIFY_MIN_BYTES", 1)
+    scoped = {tuple(r) for r in DD.near_dup_pairs(docs).collect()}
     assert scoped == full and full
 
 

@@ -295,18 +295,18 @@ def test_scoped_verify_gates_gram_explode_behind_semi_join(
     """Forced over the size threshold, near_dup_pairs' verify stage
     must read grams from a candidate-scoped semi join (the 100 TB
     plan: no second full-corpus explode); under it, no semi join."""
-    from bigdata_logs_spark.operators.dedup import near_dup_pairs
+    from bigdata_logs_spark.operators import dedup as DD
     from bigdata_logs_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
 
     def plan_of() -> str:
-        df = near_dup_pairs(docs)
+        df = DD.near_dup_pairs(docs)
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setenv("BLS_SCOPE_VERIFY_MIN_BYTES", "1")
+    monkeypatch.setattr(DD, "SCOPE_VERIFY_MIN_BYTES", 1)
     assert "LeftSemi" in plan_of()
-    monkeypatch.setenv("BLS_SCOPE_VERIFY_MIN_BYTES", str(1 << 40))
+    monkeypatch.setattr(DD, "SCOPE_VERIFY_MIN_BYTES", 1 << 40)
     assert "LeftSemi" not in plan_of()
 
 
@@ -372,7 +372,7 @@ def test_ssh_detector_filter_stays_above_the_spread_exchange(
 
     if spark.sparkContext.defaultParallelism < 4:
         pytest.skip("spread never fires on a near-single-slot session")
-    monkeypatch.setenv("BLS_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(C, "SPREAD_MIN_BYTES", 1)
     monkeypatch.setattr(C, "_SPREAD_MEMO", {})
     df = REGISTRY["brute_force_ips"].fn(spark, sf_dir)
     lines = (

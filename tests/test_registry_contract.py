@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-from bigdata_logs_spark.registry import REGISTRY, QuerySpec
+from bigdata_logs_spark.registry import REGISTRY, QuerySpec, register
 from tools.oracle_check import check_query, oracle_connection
 
 
@@ -83,6 +83,17 @@ def test_check_query_reports_each_planted_fault(spark, sf_dir, oracle_con):
             assert problems == [], name
         else:
             assert len(problems) == 1 and expected in problems[0], (name, problems)
+
+
+def test_register_rejects_a_duplicate_name():
+    """Re-registering a name raises, in both the ``op=`` and the
+    decorator form, and leaves the registered entry in place."""
+    before = list(REGISTRY.items())
+    with pytest.raises(ValueError, match="'global_metrics' is already registered"):
+        register("global_metrics", None, op=lambda events: events, tables=("events",))
+    with pytest.raises(ValueError, match="'global_metrics' is already registered"):
+        register("global_metrics", None)
+    assert list(REGISTRY.items()) == before
 
 
 def test_survey_ids_and_registry_tags_stay_in_lockstep():
