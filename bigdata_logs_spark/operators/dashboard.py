@@ -24,7 +24,6 @@ Hash-compare conventions (shared with the DuckDB oracles in
 from __future__ import annotations
 
 from functools import reduce
-from operator import add
 
 import pandas  # noqa: F401  (resolves stringified pandas_udf type hints)
 from pyspark.sql import Column, DataFrame
@@ -416,12 +415,6 @@ def profile_percentages_long(profile: DataFrame) -> DataFrame:
             "'Authorized', authorized_pct) as (category, probability)"
         ),
     ).orderBy("user_id", "category")
-
-
-def row_wise_total(df: DataFrame, cols: list[str], alias: str = "row_total") -> DataFrame:
-    """Row-wise sum across pivoted columns (D-26;
-    src/stats_dashboard.py:104)."""
-    return df.withColumn(alias, reduce(add, [F.col(c) for c in cols]))
 
 
 def column_profile(events: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ once at ingest and carried as a proper TIMESTAMP.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Classic syslog omits the year; the reference hard-codes 2024
@@ -34,11 +34,3 @@ def with_event_time(parsed: DataFrame, year: int = DEFAULT_YEAR) -> DataFrame:
         ),
     )
 
-
-def suspicious_label(event: Column, suspicious: tuple[str, ...]) -> Column:
-    """D-13: binary Suspicious/Normal label — native when/otherwise,
-    no UDF (the reference uses a Python lambda,
-    src/stats_dashboard.py:83)."""
-    return F.when(event.isin(*suspicious), F.lit("Suspicious")).otherwise(
-        F.lit("Normal")
-    )

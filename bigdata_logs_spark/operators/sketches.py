@@ -25,11 +25,16 @@ the corpus, and the counter table is small enough to broadcast back
 for the estimate join. In a true streaming deployment the same
 counters drop out of ``groupBy(row, bucket).sum(cnt)`` over micro-
 batches; the batch shape here is the calibration harness.
+
+Each sketch's register, sketch and readout code is defined once here:
+the streaming folds in ``streaming.ingest`` and the registry's
+streaming sketch reports call the same functions as the batch SK
+operators, so every estimate has one arithmetic definition.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdata_logs_spark.operators.textops import with_tokens
@@ -87,16 +92,26 @@ def cms_heavy_hitters(docs: DataFrame, top_n: int = 20) -> DataFrame:
     counters = cells.groupBy("row", "bucket").agg(
         F.sum("exact_count").alias("counter")
     )
-    estimates = (
-        cells.join(F.broadcast(counters), ["row", "bucket"])
-        .groupBy("token", "exact_count")
-        .agg(F.min("counter").alias("cms_estimate"))
-    )
+    return cms_estimates(cells, counters, "token", top_n)
+
+
+def cms_estimates(
+    cells: DataFrame, counters: DataFrame, key: str, top_n: int
+) -> DataFrame:
+    """The CMS readout shared by SK-1 and ST-15: each ``key``'s
+    estimate is the min over rows of its cells' counters (``cells``:
+    key, exact_count, row, bucket; ``counters``: row, bucket,
+    counter, small enough to broadcast). Output: (key, exact_count,
+    cms_estimate, overestimate), top_n by exact count desc / key
+    asc."""
     return (
-        estimates.orderBy(F.desc("exact_count"), "token")
+        cells.join(F.broadcast(counters), ["row", "bucket"])
+        .groupBy(key, "exact_count")
+        .agg(F.min("counter").alias("cms_estimate"))
+        .orderBy(F.desc("exact_count"), key)
         .limit(top_n)
         .select(
-            "token",
+            key,
             "exact_count",
             "cms_estimate",
             (F.col("cms_estimate") - F.col("exact_count")).alias("overestimate"),
@@ -108,7 +123,6 @@ def cms_heavy_hitters(docs: DataFrame, top_n: int = 20) -> DataFrame:
 # 52-bit hashes per group. 13 hex chars = 52 bits keeps every hash
 # exactly representable as a double in both engines.
 KMV_K = 16
-KMV_SPACE = float(1 << 52)
 # (k-1) * 2^52 as the one numerator literal every engine shares (15 has
 # 4 significant bits, so the product is an exactly-representable double).
 KMV_NUMERATOR = (KMV_K - 1) * (1 << 52)
@@ -123,6 +137,33 @@ def kmv_hash_expr(col: str) -> str:
         f"CAST(conv(substring(md5(CAST({col} AS STRING)), 1, 13), 16, 10)"
         " AS BIGINT)"
     )
+
+
+def kmv_smallest(hashed: DataFrame, group_col: str, k: int) -> DataFrame:
+    """The KMV sketch of ``hashed`` (``group_col``, ``h``): the k
+    smallest distinct hashes per group. Min-k union is also the
+    sketch's merge, so ST-13's streaming fold reuses it as is."""
+    rn = F.row_number().over(Window.partitionBy(group_col).orderBy("h"))
+    return hashed.distinct().withColumn("rn", rn).where(F.col("rn") <= k).drop("rn")
+
+
+def kmv_summary(sketch: DataFrame, group_col: str) -> DataFrame:
+    """Per group of a KMV sketch: the k-th smallest hash ``kth`` and
+    the sketch size ``n_in_sketch``, the two inputs of
+    ``kmv_estimate``."""
+    return sketch.groupBy(group_col).agg(
+        F.max("h").alias("kth"), F.count(F.lit(1)).alias("n_in_sketch")
+    )
+
+
+def kmv_estimate(k: int = KMV_K) -> Column:
+    """The KMV distinct estimate from columns ``kth`` and
+    ``n_in_sketch``: a sketch holding fewer than k hashes is the exact
+    distinct set (the small-range rule), otherwise (k-1) * 2^52 / kth
+    rounded to 4 places."""
+    return F.when(
+        F.col("n_in_sketch") < k, F.col("n_in_sketch").cast("double")
+    ).otherwise(F.round(F.lit(float((k - 1) * (1 << 52))) / F.col("kth"), 4))
 
 
 def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
@@ -152,15 +193,6 @@ def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
     hashed = keyed.select(
         "event_type",
         F.expr(kmv_hash_expr("user_id")).alias("h"),
-    ).distinct()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy("h")
-    sketch = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .groupBy("event_type")
-        .agg(F.max("h").alias("kth"), F.count(F.lit(1)).alias("n_in_sketch"))
     )
     exact = (
         keyed.select("event_type", "user_id")
@@ -168,17 +200,13 @@ def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_exact"))
     )
-    est = F.when(
-        F.col("n_in_sketch") < k, F.col("n_in_sketch").cast("double")
-    ).otherwise(
-        F.round(F.lit(float((k - 1) * (1 << 52))) / F.col("kth"), 4)
-    )
     return (
-        sketch.join(exact, "event_type")
+        kmv_summary(kmv_smallest(hashed, "event_type", k), "event_type")
+        .join(exact, "event_type")
         .select(
             "event_type",
             "n_exact",
-            est.alias("kmv_estimate"),
+            kmv_estimate(k).alias("kmv_estimate"),
         )
         .withColumn(
             "rel_error",
@@ -247,20 +275,56 @@ def hll_distinct(events: DataFrame, group_col: str = "event_type") -> DataFrame:
             F.expr(kmv_hash_expr("user_id")).alias("h"),
         )
     )
+    est = hll_estimate_from_registers(hll_registers(hashed, group_col), group_col)
+    exact = (
+        keyed.select(group_col, "user_id")
+        .distinct()
+        .groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("n_exact"))
+    )
+    return (
+        est.join(exact, group_col)
+        .select(group_col, "n_exact", "hll_estimate", "n_zero_registers")
+        .withColumn(
+            "rel_error",
+            F.round(
+                (F.col("hll_estimate") - F.col("n_exact")) / F.col("n_exact"),
+                4,
+            ),
+        )
+        .orderBy(group_col)
+    )
+
+
+def hll_registers(hashed: DataFrame, *group_cols: str) -> DataFrame:
+    """The HLL registers (``group_cols``, idx, r) of the 52-bit hash
+    column ``h``: the top 6 bits pick the register, rho is the
+    leading-zero count of the low 46-bit field plus one (``bin`` drops
+    leading zeros on both engines; a zero field is 47), and each
+    register keeps the MAX rho. Also each micro-batch's increment of
+    ST-16's streaming register state."""
     parts = hashed.select(
-        group_col,
+        *group_cols,
         F.expr(f"shiftright(h, {HLL_FIELD})").alias("idx"),
         F.expr(f"h & {HLL_FIELD_MASK}").alias("w"),
     )
     rho = F.when(F.col("w") == 0, F.lit(HLL_RHO_MAX)).otherwise(
         F.lit(HLL_RHO_MAX) - F.length(F.expr("bin(w)"))
     )
-    regs = (
-        parts.select(group_col, "idx", rho.alias("rho"))
-        .groupBy(group_col, "idx")
+    return (
+        parts.select(*group_cols, "idx", rho.alias("rho"))
+        .groupBy(*group_cols, "idx")
         .agg(F.max("rho").alias("r"))
     )
-    z = regs.groupBy(group_col).agg(
+
+
+def hll_estimate_from_registers(regs: DataFrame, *group_cols: str) -> DataFrame:
+    """Per group of an (``group_cols``, idx, r) register table — one
+    row when no group is given — the HLL estimate ``hll_estimate``
+    and ``n_zero_registers``: the fixed-point harmonic sum plus the
+    linear-counting correction. The one readout of SK-4 and of ST-16's
+    drained streaming state."""
+    z = regs.groupBy(*group_cols).agg(
         F.sum(
             F.expr(f"shiftleft(1L, cast({HLL_RHO_MAX} - r as int))")
         ).alias("z_present"),
@@ -279,28 +343,10 @@ def hll_distinct(events: DataFrame, group_col: str = "event_type") -> DataFrame:
         (raw <= F.lit(2.5 * HLL_M)) & (v > 0),
         F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
     ).otherwise(raw)
-    exact = (
-        keyed.select(group_col, "user_id")
-        .distinct()
-        .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    return (
-        z.join(exact, group_col)
-        .select(
-            group_col,
-            "n_exact",
-            F.round(corrected, 4).alias("hll_estimate"),
-            v.cast("bigint").alias("n_zero_registers"),
-        )
-        .withColumn(
-            "rel_error",
-            F.round(
-                (F.col("hll_estimate") - F.col("n_exact")) / F.col("n_exact"),
-                4,
-            ),
-        )
-        .orderBy(group_col)
+    return z.select(
+        *group_cols,
+        F.round(corrected, 4).alias("hll_estimate"),
+        v.cast("long").alias("n_zero_registers"),
     )
 
 
@@ -452,12 +498,9 @@ def kmv_set_ops(
         F.count(F.lit(1)).alias("n_union_exact"),
         F.sum(F.col("in_a") * F.col("in_b")).alias("n_inter_exact"),
     )
-    est_union = F.when(
-        F.col("n_in_sketch") < k, F.col("n_in_sketch").cast("double")
-    ).otherwise(F.round(F.lit(float(KMV_NUMERATOR)) / F.col("kth"), 4))
     return (
         exact.crossJoin(sk)
-        .withColumn("kmv_union", est_union)
+        .withColumn("kmv_union", kmv_estimate(k))
         .select(
             "n_a_exact",
             "n_b_exact",
@@ -521,8 +564,6 @@ def ams_f2_skew(events: DataFrame) -> DataFrame:
         .agg(F.sum(F.col("sign") * F.col("c")).alias("z"))
         .withColumn("est", F.col("z") * F.col("z"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("event_type").orderBy("est", "j")
     med = (
         est.withColumn("rn", F.row_number().over(w))
@@ -550,38 +591,37 @@ def ams_f2_skew(events: DataFrame) -> DataFrame:
     )
 
 
-def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
-    """One-row HLL estimate from a drained global (idx, r) register
-    table (the ST-16 streaming state) — the same fixed-point harmonic
-    sum + linear-counting correction as `hll_distinct`, factored out
-    so the batch build and the streaming drain certify against one
-    arithmetic definition."""
-    z = regs.agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, cast({HLL_RHO_MAX} - r as int))")
-        ).alias("z_present"),
-        F.count(F.lit(1)).alias("m_present"),
-    )
-    v = F.lit(HLL_M) - F.col("m_present")
-    z_int = F.col("z_present") + v * F.lit(HLL_ZSCALE)
-    raw = (
-        F.lit(HLL_ALPHA)
-        * F.lit(float(HLL_M * HLL_M))
-        * F.lit(float(HLL_ZSCALE))
-        / z_int
-    )
-    corrected = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
-    ).otherwise(raw)
-    return z.select(
-        F.round(corrected, 4).alias("hll_estimate"),
-        v.cast("long").alias("n_zero_registers"),
-    )
-
-
 HISTQ_BINS = 256
 HISTQ_PCTS = (50, 90, 95, 99)
+
+
+def histogram_rank_bins(hist: DataFrame) -> DataFrame:
+    """The rank search of a histogram's quantile readout, shared by
+    SK-7 and ST-17: for each p in ``HISTQ_PCTS``, the first bin whose
+    cumulative count ``cum`` reaches the integer rank
+    r = (n*p + 99) div 100. ``hist`` holds one row per non-empty
+    ``bin`` with its count ``cnt`` (other columns are carried along);
+    the output adds p, r, cum and the total n. Each caller
+    interpolates within its bin itself."""
+    w_cum = Window.orderBy("bin").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cum = hist.select(
+        "*",
+        F.sum("cnt").over(w_cum).alias("cum"),
+        F.sum("cnt").over(w_all).alias("n"),
+    )
+    pcts = hist.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(p) for p in HISTQ_PCTS])).alias("p")
+    )
+    hit = (
+        cum.crossJoin(F.broadcast(pcts))
+        .withColumn("r", F.expr("(n * p + 99) div 100"))
+        .where(F.col("cum") >= F.col("r"))
+    )
+    rk = F.row_number().over(Window.partitionBy("p").orderBy("bin"))
+    return hit.withColumn("rk", rk).where(F.col("rk") == 1).drop("rk")
 
 
 def histogram_quantiles(events: DataFrame) -> DataFrame:
@@ -606,8 +646,6 @@ def histogram_quantiles(events: DataFrame) -> DataFrame:
     combinable (bin) count — the corpus is scanned twice and nothing
     wider than a 256-row histogram survives; the percentile
     extraction windows run on <= 256 rows."""
-    from pyspark.sql import Window
-
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     vals = events.select(cents.alias("c"))
     rng = vals.agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
@@ -619,53 +657,21 @@ def histogram_quantiles(events: DataFrame) -> DataFrame:
     hist = binned.groupBy("lo", "hi", "bin").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w_cum = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "lo",
-        "hi",
+    est = histogram_rank_bins(hist).select(
+        "p",
+        "n",
         "bin",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
+        F.col("cnt").alias("bin_n"),
+        (
+            F.col("lo").cast("double")
+            + (
+                F.col("bin").cast("double")
+                + (F.col("r") - (F.col("cum") - F.col("cnt"))).cast("double")
+                / F.col("cnt").cast("double")
             )
-        ).alias("n"),
-    )
-    pcts = cum.sparkSession.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p) for p in HISTQ_PCTS])
-        ).alias("p")
-    )
-    hit = (
-        cum.crossJoin(F.broadcast(pcts))
-        .withColumn("r", F.expr("(n * p + 99) div 100"))
-        .where(F.col("cum") >= F.col("r"))
-    )
-    w_first = Window.partitionBy("p").orderBy("bin")
-    est = (
-        hit.withColumn("rk", F.row_number().over(w_first))
-        .where(F.col("rk") == 1)
-        .select(
-            "p",
-            "n",
-            "bin",
-            F.col("cnt").alias("bin_n"),
-            (
-                F.col("lo").cast("double")
-                + (
-                    F.col("bin").cast("double")
-                    + (F.col("r") - (F.col("cum") - F.col("cnt"))).cast(
-                        "double"
-                    )
-                    / F.col("cnt").cast("double")
-                )
-                * (F.col("hi") - F.col("lo") + 1).cast("double")
-                / F.lit(float(HISTQ_BINS))
-            ).alias("est_cents"),
-        )
+            * (F.col("hi") - F.col("lo") + 1).cast("double")
+            / F.lit(float(HISTQ_BINS))
+        ).alias("est_cents"),
     )
     return est.select(
         F.col("p").cast("long").alias("p"),

@@ -901,8 +901,6 @@ def q_ssh_parse_rejects(spark, sf_dir):
     lines the master regex rejects, exactly as a dead-letter sink
     would persist them. Oracle-checked value-by-value — proves the
     reject side is the precise complement of ssh_parse_full."""
-    from pyspark.sql import functions as F
-
     from bigdata_logs_spark.operators.parse import parse_with_rejects
 
     _, rejects = parse_with_rejects(_ssh_lines(spark, sf_dir))
@@ -1014,9 +1012,6 @@ def q_store_roundtrip(spark, sf_dir):
     insert_many) -> re-read -> aggregate. Partitioning by date gives
     the time-ranged dashboard queries partition pruning at scale;
     the oracle checks the hop was lossless."""
-    import os as _o
-    import tempfile as _t
-
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.sources import write_parquet
@@ -1109,9 +1104,6 @@ def q_csv_roundtrip(spark, sf_dir):
     re-infers types at this hop and corrupts null/int columns,
     src/insert_mongo.py:7) -> aggregate; the oracle computed from the
     pre-CSV rows proves the hop was lossless."""
-    import os as _o
-    import tempfile as _t
-
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.sources import read_csv, write_csv
@@ -2165,6 +2157,23 @@ def _stream_source_dir(spark, sf_dir) -> str:
     return out
 
 
+def _drained_state(spark, sf_dir, fold, prefix: str) -> DataFrame:
+    """Drain the SSH file stream through the streaming sketch ``fold``
+    (one of ``streaming.ingest``'s ``streaming_*_state``) into a
+    scratch state dir and return the drained state table."""
+    state = _scratch_path(prefix, sf_dir)
+    fold(read_ssh_stream(spark, _stream_source_dir(spark, sf_dir)), state)
+    return spark.read.parquet(state)
+
+
+def _ssh_ips(spark, sf_dir) -> DataFrame:
+    """The batch-parsed SSH lines that carry a source IP: the exact
+    leg beside each streaming sketch's estimate."""
+    from pyspark.sql import functions as F
+
+    return parse_ssh_lines(_ssh_lines(spark, sf_dir)).where(F.col("ip").isNotNull())
+
+
 @register(
     "streaming_hourly_counts",
     SSH_PARSE_CTE
@@ -2592,9 +2601,6 @@ def q_json_roundtrip(spark, sf_dir):
     documents are JSON with drifted types, src/insert_mongo.py:14-15):
     write JSON -> re-read with the EXPLICIT parse schema -> aggregate;
     oracle computed from the pre-JSON rows proves losslessness."""
-    import os as _o
-    import tempfile as _t
-
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.sources import read_json, write_json
@@ -2629,9 +2635,6 @@ def q_orc_roundtrip(spark, sf_dir):
     """ORC interchange fidelity: second columnar format beside the
     canonical Parquet store (schema in footer, pushdown + pruning
     intact); oracle from the pre-ORC rows proves losslessness."""
-    import os as _o
-    import tempfile as _t
-
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.sources import read_orc, write_orc
@@ -5622,28 +5625,14 @@ def q_streaming_kmv_distinct(spark, sf_dir):
     the trigger-timing-dependent windowed entries). The source here is
     one file, so it drains in one micro-batch; multi-batch drains are
     covered by ``test_streaming_kmv_state_batch_split_invariant``."""
-    from pyspark.sql import functions as F
+    from bigdata_logs_spark.streaming.ingest import streaming_kmv_state
 
-    from bigdata_logs_spark.streaming.ingest import (
-        read_ssh_stream,
-        streaming_kmv_state,
+    state = _drained_state(spark, sf_dir, streaming_kmv_state, "bls_kmv_state")
+    return (
+        SK.kmv_summary(state, "event")
+        .select("event", "n_in_sketch", SK.kmv_estimate().alias("kmv_estimate"))
+        .orderBy("event")
     )
-
-    src = _stream_source_dir(spark, sf_dir)
-    parsed = read_ssh_stream(spark, src)
-    state = _scratch_path("bls_kmv_state", sf_dir)
-    streaming_kmv_state(parsed, state, k=16)
-    rep = (
-        spark.read.parquet(state)
-        .groupBy("event")
-        .agg(F.max("h").alias("kth"), F.count(F.lit(1)).alias("n_in_sketch"))
-    )
-    est = F.when(
-        F.col("n_in_sketch") < 16, F.col("n_in_sketch").cast("double")
-    ).otherwise(F.round(F.lit(15.0 * float(1 << 52)) / F.col("kth"), 4))
-    return rep.select(
-        "event", "n_in_sketch", est.alias("kmv_estimate")
-    ).orderBy("event")
 
 
 # The parse stage of SSH_PARSE_CTE, detached from its generator so the
@@ -7581,42 +7570,16 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     ``TestStreamingCms::test_batch_split_invariant_and_bounded``."""
     from pyspark.sql import functions as F
 
-    from bigdata_logs_spark.operators.sketches import _poly_hash_expr, cms_cells
-    from bigdata_logs_spark.streaming.ingest import (
-        read_ssh_stream,
-        streaming_cms_state,
-    )
+    from bigdata_logs_spark.streaming.ingest import streaming_cms_state
 
-    src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src)
-    state = _scratch_path("bls_cms_state", sf_dir)
-    streaming_cms_state(stream, state)
-    counters = spark.read.parquet(state)
-
-    exact = (
-        parse_ssh_lines(_ssh_lines(spark, sf_dir))
-        .where(F.col("ip").isNotNull())
-        .groupBy("ip")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
+    counters = _drained_state(spark, sf_dir, streaming_cms_state, "bls_cms_state")
+    exact = _ssh_ips(spark, sf_dir).groupBy("ip").agg(
+        F.count(F.lit(1)).alias("exact_count")
     )
-    cells = exact.withColumn("h", F.expr(_poly_hash_expr("ip"))).select(
-        "ip", "exact_count", cms_cells(F.col("h"))
+    cells = exact.withColumn("h", F.expr(SK._poly_hash_expr("ip"))).select(
+        "ip", "exact_count", SK.cms_cells(F.col("h"))
     )
-    return (
-        cells.join(F.broadcast(counters), ["row", "bucket"])
-        .groupBy("ip", "exact_count")
-        .agg(F.min("counter").alias("cms_estimate"))
-        .select(
-            "ip",
-            "exact_count",
-            "cms_estimate",
-            (F.col("cms_estimate") - F.col("exact_count")).alias(
-                "overestimate"
-            ),
-        )
-        .orderBy(F.desc("exact_count"), "ip")
-        .limit(10)
-    )
+    return SK.cms_estimates(cells, counters, "ip", 10)
 
 
 @register(
@@ -7674,51 +7637,11 @@ def q_streaming_hll_distinct(spark, sf_dir):
     ``test_streaming_hll_state_split_and_replay_invariant``."""
     from pyspark.sql import functions as F
 
-    from bigdata_logs_spark.operators.sketches import (
-        HLL_ALPHA,
-        HLL_M,
-        HLL_RHO_MAX,
-        HLL_ZSCALE,
-    )
-    from bigdata_logs_spark.streaming.ingest import (
-        read_ssh_stream,
-        streaming_hll_state,
-    )
+    from bigdata_logs_spark.streaming.ingest import streaming_hll_state
 
-    src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src)
-    state = _scratch_path("bls_hll_state", sf_dir)
-    streaming_hll_state(stream, state)
-    regs = spark.read.parquet(state)
-
-    z = regs.agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, cast({HLL_RHO_MAX} - r as int))")
-        ).alias("z_present"),
-        F.count(F.lit(1)).alias("m_present"),
-    )
-    v = F.lit(HLL_M) - F.col("m_present")
-    z_int = F.col("z_present") + v * F.lit(HLL_ZSCALE)
-    raw = (
-        F.lit(HLL_ALPHA)
-        * F.lit(float(HLL_M * HLL_M))
-        * F.lit(float(HLL_ZSCALE))
-        / z_int
-    )
-    corrected = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
-    ).otherwise(raw)
-    est = z.select(
-        v.alias("n_zero_registers"),
-        F.round(corrected, 4).alias("hll_estimate"),
-    )
-    exact = (
-        parse_ssh_lines(_ssh_lines(spark, sf_dir))
-        .where(F.col("ip").isNotNull())
-        .agg(F.countDistinct("ip").alias("n_exact"))
-    )
-    return est.crossJoin(F.broadcast(exact)).select(
+    regs = _drained_state(spark, sf_dir, streaming_hll_state, "bls_hll_state")
+    exact = _ssh_ips(spark, sf_dir).agg(F.countDistinct("ip").alias("n_exact"))
+    return SK.hll_estimate_from_registers(regs).crossJoin(F.broadcast(exact)).select(
         "n_exact",
         "hll_estimate",
         "n_zero_registers",
@@ -9025,62 +8948,27 @@ def q_streaming_line_length_quantiles(spark, sf_dir):
     here is one file, so it drains in one micro-batch; multi-batch
     drains are covered by
     ``test_streaming_length_histogram_split_invariant``."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from bigdata_logs_spark.streaming.ingest import (
-        read_ssh_stream,
-        streaming_length_histogram_state,
-    )
+    from bigdata_logs_spark.streaming.ingest import streaming_length_histogram_state
 
-    src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src)
-    state = _scratch_path("bls_lenq_state", sf_dir)
-    streaming_length_histogram_state(stream, state)
-    hist = spark.read.parquet(state)
-
-    w_cum = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    hist = _drained_state(
+        spark, sf_dir, streaming_length_histogram_state, "bls_lenq_state"
     )
-    cum = hist.select(
+    est = SK.histogram_rank_bins(hist).select(
+        F.col("p").cast("long").alias("p"),
+        "n",
         "bin",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt")
-        .over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
+        F.col("cnt").alias("bin_n"),
+        F.round(
+            (F.col("bin") * 4).cast("double")
+            + (
+                (F.col("r") - (F.col("cum") - F.col("cnt"))).cast("double")
+                / F.col("cnt").cast("double")
             )
-        )
-        .alias("n"),
-    )
-    pcts = spark.range(1).select(
-        F.explode(F.array(*[F.lit(p) for p in (50, 90, 95, 99)])).alias("p")
-    )
-    hit = (
-        cum.crossJoin(F.broadcast(pcts))
-        .withColumn("r", F.expr("(n * p + 99) div 100"))
-        .where(F.col("cum") >= F.col("r"))
-    )
-    w_first = Window.partitionBy("p").orderBy("bin")
-    est = (
-        hit.withColumn("rk", F.row_number().over(w_first))
-        .where(F.col("rk") == 1)
-        .select(
-            F.col("p").cast("long").alias("p"),
-            "n",
-            "bin",
-            F.col("cnt").alias("bin_n"),
-            F.round(
-                (F.col("bin") * 4).cast("double")
-                + (
-                    (F.col("r") - (F.col("cum") - F.col("cnt"))).cast("double")
-                    / F.col("cnt").cast("double")
-                )
-                * F.lit(4.0),
-                4,
-            ).alias("est_len"),
-        )
+            * F.lit(4.0),
+            4,
+        ).alias("est_len"),
     )
     return est.orderBy("p")
 
@@ -9333,23 +9221,11 @@ def q_streaming_bloom_filter(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from bigdata_logs_spark.operators.sketches import BLOOM_M
-    from bigdata_logs_spark.streaming.ingest import (
-        read_ssh_stream,
-        streaming_bloom_state,
-    )
+    from bigdata_logs_spark.streaming.ingest import streaming_bloom_state
 
-    src = _stream_source_dir(spark, sf_dir)
-    stream = read_ssh_stream(spark, src)
-    state = _scratch_path("bls_bloom_state", sf_dir)
-    streaming_bloom_state(stream, state)
-    bits = spark.read.parquet(state)
-
+    bits = _drained_state(spark, sf_dir, streaming_bloom_state, "bls_bloom_state")
     agg = bits.agg(F.count(F.lit(1)).alias("n_set_bits"))
-    exact = (
-        parse_ssh_lines(_ssh_lines(spark, sf_dir))
-        .where(F.col("ip").isNotNull())
-        .agg(F.countDistinct("ip").alias("n_exact"))
-    )
+    exact = _ssh_ips(spark, sf_dir).agg(F.countDistinct("ip").alias("n_exact"))
     x = F.col("n_set_bits").cast("double")
     est = -(F.lit(float(BLOOM_M)) / F.lit(4.0)) * F.log(
         F.lit(1.0) - x / F.lit(float(BLOOM_M))
@@ -9857,8 +9733,6 @@ def q_binary_file_roundtrip(spark, sf_dir):
     the executors) rather than silently — on a real cluster BOTH
     legs would point at shared storage (HDFS/object store) and keep
     the distributed ``foreach`` + distributed read."""
-    import os as _o
-
     from pyspark.sql import functions as F
 
     media = MM.media_from_documents(_docs(spark, sf_dir))

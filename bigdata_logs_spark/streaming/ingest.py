@@ -549,24 +549,18 @@ def streaming_kmv_state(parsed: DataFrame, state_dir: str, k: int = 16) -> list:
     (event, h) pairs with the current state, dedups, and keeps the k
     smallest per event (``_fold_into_state``).
     """
-    from pyspark.sql import Window
-
-    from bigdata_logs_spark.operators.sketches import kmv_hash_expr
+    from bigdata_logs_spark.operators.sketches import kmv_hash_expr, kmv_smallest
 
     hashed = (
         parsed.where(F.col("ip").isNotNull())
         .select("event", F.expr(kmv_hash_expr("ip")).alias("h"))
     )
-    rn = F.row_number().over(Window.partitionBy("event").orderBy("h"))
     # one dedup AFTER the union subsumes a per-batch pre-dedup
     return _fold_into_state(
         hashed,
         state_dir,
         lambda batch: batch,
-        lambda upd: upd.dropDuplicates(["event", "h"])
-        .withColumn("rn", rn)
-        .where(F.col("rn") <= k)
-        .drop("rn"),
+        lambda upd: kmv_smallest(upd, "event", k),
     )
 
 
@@ -841,27 +835,15 @@ def streaming_hll_state(parsed: DataFrame, state_dir: str) -> list:
     State is <= m = 64 BIGINT rows regardless of key cardinality or
     feed length. Merge discipline is the S-10 swap of
     ``_fold_into_state``."""
-    from bigdata_logs_spark.operators.sketches import (
-        HLL_FIELD,
-        HLL_FIELD_MASK,
-        HLL_RHO_MAX,
-        kmv_hash_expr,
-    )
+    from bigdata_logs_spark.operators.sketches import hll_registers, kmv_hash_expr
 
     hashed = parsed.where(F.col("ip").isNotNull()).select(
         F.expr(kmv_hash_expr("ip")).alias("h")
     )
-    rho = F.when(F.col("w") == 0, F.lit(HLL_RHO_MAX)).otherwise(
-        F.lit(HLL_RHO_MAX) - F.length(F.expr("bin(w)"))
-    )
-    obs = hashed.select(
-        F.expr(f"shiftright(h, {HLL_FIELD})").alias("idx"),
-        F.expr(f"h & {HLL_FIELD_MASK}").alias("w"),
-    ).select("idx", rho.alias("rho"))
     return _fold_into_state(
-        obs,
+        hashed,
         state_dir,
-        lambda batch: batch.groupBy("idx").agg(F.max("rho").alias("r")),
+        hll_registers,
         lambda upd: upd.groupBy("idx").agg(F.max("r").alias("r")),
     )
 

@@ -8,6 +8,11 @@ oracled queries the DuckDB differential — every Spark column named in
 the oracle SQL, matching row count, column set and order-insensitive
 value hash, and oracle dtypes that survive pandas. The negative
 control below keeps a green sweep from being vacuous.
+
+The whole module runs under a hostile re-plan (``HOSTILE``), so an
+answer that depends on the physical partitioning fails its value
+hash: order-dependent float accumulation, window ties broken by
+arrival order, partition-seeded logic.
 """
 
 from __future__ import annotations
@@ -16,6 +21,30 @@ import pytest
 
 from bigdata_logs_spark.registry import REGISTRY, QuerySpec, register
 from tools.oracle_check import check_query, oracle_connection
+
+# Seven shuffle partitions, AQE off, 64 KiB scan splits. The split
+# size cuts the text stream source (one ~95 KB file at sf0.001) into
+# several scan tasks; the sf0.001 and sf0.01 parquet tables are one
+# row group each, which no split size can divide.
+HOSTILE = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.files.maxPartitionBytes": "65536",
+}
+
+
+@pytest.fixture(scope="module", autouse=True)
+def hostile_conf(spark):
+    """Run the module under ``HOSTILE``; yields the session's previous
+    values, which are restored afterwards."""
+    before = {k: spark.conf.get(k) for k in HOSTILE}
+    try:
+        for k, v in HOSTILE.items():
+            spark.conf.set(k, v)
+        yield before
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="module")
@@ -30,13 +59,39 @@ def test_query_meets_registry_contract(spark, sf_dir, oracle_con, name):
     assert check_query(spark, oracle_con, name, REGISTRY[name], sf_dir) == []
 
 
-def test_check_query_reports_each_planted_fault(spark, sf_dir, oracle_con):
+def test_check_query_reports_each_planted_fault(
+    spark, sf_dir, oracle_con, hostile_conf
+):
     """Negative control: each fake spec plants one fault and must
-    report exactly that problem; a well-behaved spec reports none."""
+    report exactly that problem; a well-behaved spec reports none.
+    The ``partitioned`` canary's answer leaks the shuffle partition
+    count: its oracle is its answer at the session's own conf, which
+    the hostile re-plan must break."""
     from pyspark.sql import functions as F
 
     def ks(s):
         return s.range(3).select(F.col("id").alias("k"))
+
+    def canary(s, _sf_dir):
+        df = s.range(1000).withColumn("k", F.col("id") % 50)
+        return (
+            df.repartition("k")
+            .select(F.spark_partition_id().alias("pid"))
+            .agg(F.max("pid").alias("max_pid"))
+        )
+
+    # Margin: the canary's answer really differs between the two
+    # confs (AQE may coalesce the default shuffle, so the default
+    # answer is plan-dependent).
+    try:
+        for k, v in hostile_conf.items():
+            spark.conf.set(k, v)
+        default_pid = canary(spark, sf_dir).collect()[0][0]
+    finally:
+        for k, v in HOSTILE.items():
+            spark.conf.set(k, v)
+    assert canary(spark, sf_dir).collect()[0][0] == 6  # 7 partitions, AQE off
+    assert default_pid != 6, "canary margin collapsed; pick a new canary"
 
     def cartesian(s, _sf_dir):
         right = s.range(4).select(F.col("id").alias("j"))
@@ -75,6 +130,11 @@ def test_check_query_reports_each_planted_fault(spark, sf_dir, oracle_con):
             lambda s, _: ks(s).agg(F.sum("k").alias("total")),
             "SELECT SUM(range) AS total FROM range(3)",
             "oracle dtype total: float64",
+        ),
+        "partitioned": (
+            canary,
+            f"SELECT {default_pid} AS max_pid",
+            "value-hash mismatch",
         ),
     }
     for name, (fn, oracle, expected) in cases.items():

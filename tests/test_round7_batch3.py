@@ -301,14 +301,16 @@ def test_streaming_length_histogram_split_invariant(spark, sf_dir, tmp_path):
 
     lines = synthesize_ssh_lines(load_table(spark, sf_dir, "events"))
     src = str(tmp_path / "src")
-    lines.coalesce(4).write.mode("overwrite").text(src)
+    lines.repartition(4).write.mode("overwrite").text(src)
 
     states = {}
     for label, mfpt in (("one_batch", None), ("per_file", 1)):
         state = str(tmp_path / f"state_{label}")
-        streaming_length_histogram_state(
+        progress = streaming_length_histogram_state(
             read_ssh_stream(spark, src, max_files_per_trigger=mfpt), state
         )
+        if mfpt:  # the split leg really summed bins across batches
+            assert sum(p["numInputRows"] > 0 for p in progress) >= 2
         df = spark.read.parquet(state)
         assert df.count() <= 256
         states[label] = sorted(map(tuple, df.collect()))

@@ -161,7 +161,7 @@ def test_streaming_bloom_split_and_replay_invariant(spark, sf_dir, tmp_path):
 
     lines = synthesize_ssh_lines(load_table(spark, sf_dir, "events"))
     src = str(tmp_path / "src")
-    lines.coalesce(4).write.mode("overwrite").text(src)
+    lines.repartition(4).write.mode("overwrite").text(src)
     src_replay = str(tmp_path / "src_replay")
     lines.unionAll(lines).coalesce(3).write.mode("overwrite").text(src_replay)
 
@@ -172,9 +172,11 @@ def test_streaming_bloom_split_and_replay_invariant(spark, sf_dir, tmp_path):
         ("replayed", src_replay, 1),
     ):
         state = str(tmp_path / f"state_{label}")
-        streaming_bloom_state(
+        progress = streaming_bloom_state(
             read_ssh_stream(spark, source, max_files_per_trigger=mfpt), state
         )
+        if mfpt:  # the split and replayed legs really merged across batches
+            assert sum(p["numInputRows"] > 0 for p in progress) >= 2
         df = spark.read.parquet(state)
         assert df.count() <= BLOOM_M
         states[label] = sorted(r.bit for r in df.collect())

@@ -435,16 +435,18 @@ def test_streaming_kmv_state_batch_split_invariant(spark, sf_dir, tmp_path):
     )
 
     src = str(tmp_path / "src")
-    synthesize_ssh_lines(load_table(spark, sf_dir, "events")).coalesce(
+    synthesize_ssh_lines(load_table(spark, sf_dir, "events")).repartition(
         4
     ).write.mode("overwrite").text(src)
 
     states = {}
     for label, mfpt in (("one_batch", None), ("per_file", 1)):
         state = str(tmp_path / f"state_{label}")
-        streaming_kmv_state(
+        progress = streaming_kmv_state(
             read_ssh_stream(spark, src, max_files_per_trigger=mfpt), state, k=16
         )
+        if mfpt:  # the split leg really merged state across batches
+            assert sum(p["numInputRows"] > 0 for p in progress) >= 2
         df = spark.read.parquet(state)
         per_group = df.groupBy("event").count().collect()
         assert all(r["count"] <= 16 for r in per_group)
