@@ -1,58 +1,30 @@
-"""Registry-wide partitioning-invariance sweep (env-gated).
+"""Partitioning invariance: the hostile re-plan must catch a canary.
 
-The default suite checks partition/row-order invariance on
-representative queries; this module runs the EXHAUSTIVE A/B sweep
-from ``tools/invariance_sweep.py`` — every registry query re-executed
-under a hostile re-plan (7 shuffle partitions, AQE off, 1 MiB scan
-splits) must hash-match its engine-default answer. Catches
-order-dependent float accumulation, window ties broken by arrival
-order, and partition-seeded logic that a cluster re-tune would
-surface.
-
-Running every query twice takes ~30-60 min, so the sweep is opt-in:
-
-    INVARIANCE_SWEEP=1 python -m pytest tests/test_invariance_sweep.py -q
-
-Run it (or `python tools/invariance_sweep.py`) at round close, next
-to the oracle and plan sweeps.
+``tests/test_registry_contract.py`` runs every registry query's
+contract check under ``HOSTILE`` (7 shuffle partitions, AQE off,
+64 KiB scan splits). The oracle does not depend on Spark's plan, so a
+query whose answer leaks the physical partitioning fails its value
+hash there. This module is the standalone negative control of that
+sweep: a partition-dependent canary must fail, and a well-behaved
+sibling on the same data must pass.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
-
-@pytest.mark.skipif(
-    not os.environ.get("INVARIANCE_SWEEP"),
-    reason="exhaustive two-pass sweep; set INVARIANCE_SWEEP=1 (tools/invariance_sweep.py is the CLI form)",
-)
-def test_answers_invariant_to_partitioning_registry_wide(spark, sf_dir):
-    from tools.invariance_sweep import sweep
-
-    checked, failures = sweep(spark, sf_dir)
-    assert checked > 0
-    assert not failures, f"partitioning-dependent answers: {failures}"
+from bigdata_logs_spark.registry import QuerySpec
+from tools.oracle_check import HOSTILE, check_query, oracle_connection
 
 
 def test_sweep_detects_partition_dependent_canary(spark, sf_dir):
-    """Negative control (always on — it's two tiny jobs): a query
-    whose answer leaks the physical partitioning MUST fail the sweep,
-    or a green registry run proves nothing. The canary shuffles to
-    ``spark.sql.shuffle.partitions`` tasks and returns the max
-    ``spark_partition_id`` it saw. Under the hostile re-plan (AQE
-    off) that is exactly 6; under defaults AQE may coalesce the tiny
-    shuffle to fewer than the configured 32 partitions, so the test
-    only relies on the two answers DIFFERING — asserted explicitly
-    below — while a well-behaved sibling on the same data passes."""
+    """The canary shuffles to ``spark.sql.shuffle.partitions`` tasks
+    and returns the max ``spark_partition_id`` it saw. Its oracle is
+    its answer at the session's own conf; under ``HOSTILE`` (AQE off)
+    the answer is exactly 6, so ``check_query`` must report a
+    value-hash mismatch. The two answers must really differ (asserted
+    below: AQE may coalesce the default shuffle, so the default answer
+    is plan-dependent). The sibling's grouped sum has the same answer
+    under any plan and must pass."""
     from pyspark.sql import functions as F
-
-    from tools.invariance_sweep import sweep
-
-    class _Spec:
-        def __init__(self, fn):
-            self.fn = fn
 
     def canary(spark_, _sf_dir):
         df = spark_.range(1000).withColumn("k", F.col("id") % 50)
@@ -66,27 +38,31 @@ def test_sweep_detects_partition_dependent_canary(spark, sf_dir):
         df = spark_.range(1000).withColumn("k", F.col("id") % 50)
         return df.groupBy("k").agg(F.sum("id").alias("s")).orderBy("k")
 
-    from tools.invariance_sweep import HOSTILE
-
-    # Explicit margin check: the canary's answer really does differ
-    # between the two configs (don't rely on docstring arithmetic —
-    # AQE coalescing makes the pass-A value plan-dependent).
     defaults = {k: spark.conf.get(k) for k in HOSTILE}
+    con = oracle_connection(sf_dir)
     try:
         a_pid = canary(spark, sf_dir).collect()[0][0]
+        specs = {
+            "canary": QuerySpec(canary, f"SELECT {a_pid} AS max_pid"),
+            "ok": QuerySpec(
+                wellbehaved,
+                "SELECT range % 50 AS k, CAST(SUM(range) AS BIGINT) AS s "
+                "FROM range(1000) GROUP BY 1",
+            ),
+        }
         for k, v in HOSTILE.items():
             spark.conf.set(k, v)
         b_pid = canary(spark, sf_dir).collect()[0][0]
+        problems = {
+            name: check_query(spark, con, name, spec, sf_dir)
+            for name, spec in specs.items()
+        }
     finally:
         for k, v in defaults.items():
             spark.conf.set(k, v)
+        con.close()
     assert b_pid == 6  # 7 hostile shuffle partitions, AQE off
     assert a_pid != b_pid, "canary margin collapsed; pick a new canary"
-
-    checked, failures = sweep(
-        spark,
-        sf_dir,
-        registry={"canary": _Spec(canary), "ok": _Spec(wellbehaved)},
-    )
-    assert checked == 2
-    assert [n for n, _ in failures] == ["canary"]
+    assert problems["ok"] == []
+    assert len(problems["canary"]) == 1, problems
+    assert "value-hash mismatch" in problems["canary"][0]

@@ -20,17 +20,7 @@ from __future__ import annotations
 import pytest
 
 from bigdata_logs_spark.registry import REGISTRY, QuerySpec, register
-from tools.oracle_check import check_query, oracle_connection
-
-# Seven shuffle partitions, AQE off, 64 KiB scan splits. The split
-# size cuts the text stream source (one ~95 KB file at sf0.001) into
-# several scan tasks; the sf0.001 and sf0.01 parquet tables are one
-# row group each, which no split size can divide.
-HOSTILE = {
-    "spark.sql.shuffle.partitions": "7",
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.files.maxPartitionBytes": "65536",
-}
+from tools.oracle_check import HOSTILE, check_query, oracle_connection
 
 
 @pytest.fixture(scope="module", autouse=True)

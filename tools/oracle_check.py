@@ -45,6 +45,17 @@ from bigdata_logs_spark.sources import TABLES  # noqa: E402
 # bounded input in the registry.
 ROW_UDF_ALLOWED = {"doc_ngrams_udtf"}
 
+# The hostile re-plan the registry contract tests run under: seven
+# shuffle partitions, AQE off, 64 KiB scan splits. The split size cuts
+# the text stream source (one ~95 KB file at sf0.001) into several
+# scan tasks; the sf0.001 and sf0.01 parquet tables are one row group
+# each, which no split size can divide.
+HOSTILE = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.files.maxPartitionBytes": "65536",
+}
+
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 _OBJECT_OK = (StringType, BinaryType, DateType)
 
