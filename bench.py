@@ -99,13 +99,22 @@ def _stage_totals(sc, first_job: int, end_job: int) -> dict[str, int]:
     return out
 
 
+def _compile_count(spark) -> int:
+    """Generated classes the JVM has compiled so far: a miss in Spark's
+    codegen cache compiles one and records its time in this histogram."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def measure(spark, sf_dir: str, name: str) -> dict:
     """One rep of registry query ``name``: construction, planning
     (``executedPlan()``) and a ``noop`` write, then the rep's jobs (of
-    them ``construct_jobs`` ran during construction) and stage
-    counters. Caches are released even when the query fails."""
+    them ``construct_jobs`` ran during construction), generated classes
+    compiled (``compiles``) and stage counters. Caches are released
+    even when the query fails."""
     sc = spark.sparkContext._jsc.sc()
     first_job = sc.dagScheduler().nextJobId()
+    first_compile = _compile_count(spark)
     try:
         t0 = time.perf_counter()
         df = REGISTRY[name].fn(spark, sf_dir)
@@ -124,6 +133,7 @@ def measure(spark, sf_dir: str, name: str) -> dict:
         "plan_ms": round((t2 - t1) * 1e3, 1),
         "exec_ms": round((t3 - t2) * 1e3, 1),
         "construct_jobs": construct_end_job - first_job,
+        "compiles": _compile_count(spark) - first_compile,
         **_stage_totals(sc, first_job, sc.dagScheduler().nextJobId()),
     }
 

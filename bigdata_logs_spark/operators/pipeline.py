@@ -796,32 +796,32 @@ def corpus_dedup_funnel(docs: DataFrame) -> DataFrame:
     # returns so cache-release discipline sees a quiesced query.
     from pyspark import InheritableThread
 
-    spark = docs.sparkSession
+    sc = docs.sparkSession.sparkContext
     errors: list[BaseException] = []
 
-    def _force(df: DataFrame, desc: str) -> None:
-        # InheritableThread (not a bare pool thread): local properties
-        # — job group/tags for harness cancellation, and a per-thread
-        # description slot even under non-pinned py4j mode — are
-        # inherited and cleaned up the documented way (guide §2.6)
+    def _force(df: DataFrame) -> None:
         try:
-            spark.sparkContext.setJobDescription(desc)
             df.count()
         except BaseException as e:  # noqa: BLE001 — re-raised below
             errors.append(e)
-        finally:
-            spark.sparkContext.setJobDescription(None)
 
-    workers = [
-        InheritableThread(
-            target=_force, args=(toks, "funnel: token-count cache")
-        ),
-        InheritableThread(
-            target=_force, args=(hashes, "funnel: digest cache")
-        ),
-    ]
-    for w in workers:
-        w.start()
+    # InheritableThread (not a bare pool thread): its local properties
+    # (job group/tags for harness cancellation, the job description)
+    # are a copy of this thread's taken at start(). So each worker's
+    # description is set here just before its start, and this thread's
+    # own description is restored once, after both have started; no
+    # thread sets a property another thread reads.
+    main_desc = sc.getLocalProperty("spark.job.description")
+    workers = []
+    for df, desc in (
+        (toks, "funnel: token-count cache"),
+        (hashes, "funnel: digest cache"),
+    ):
+        sc.setJobDescription(desc)
+        worker = InheritableThread(target=_force, args=(df,))
+        worker.start()
+        workers.append(worker)
+    sc.setJobDescription(main_desc)
     try:
         comp = DD.near_dup_components(docs, threshold=0.5).select(
             "doc_id", "component"

@@ -20,6 +20,23 @@ Defaults are chosen for correctness-at-scale first:
   session took 1374 round trips with it on and 462 with it off.
   What is lost is the Python line in a ``DataFrameQueryContext``, which
   appears only in ANSI runtime errors, and ANSI is off here.
+- A codegen cache of 8192 entries
+  (``spark.sql.codegen.cache.maxEntries``, also static). Spark keeps
+  compiled whole-stage classes in an LRU of that many entries, 100 by
+  default. One ``corpus_dedup_funnel`` run generates about 160, and an
+  LRU smaller than a cyclic working set misses on every access, so at
+  100 the funnel recompiled all of them on every run (about 0.8 s of
+  its 3.7 s in perfbench ``curation``) and evicted the other queries'
+  classes. Run back to back at 100, 13 registry queries recompiled
+  21-157 classes on every repeat run. One round-robin ``bench.py``
+  sweep of the registry at sf0.01 on 4 cores compiled 3,887 distinct
+  classes in its first pass, and its two timed passes then compiled
+  250 instead of 13,392. 8192 is about twice that union, for larger
+  plans at higher scale factors; the cap bounds memory only past the
+  real working set. At the end of that sweep, 100 vs 8192: Metaspace
+  220 vs 251 MiB, compressed class space 28 vs 32 MiB, non-profiled
+  code heap 59 vs 87 MiB. ``bench.py`` records each rep's
+  ``compiles``.
 """
 
 from __future__ import annotations
@@ -43,6 +60,9 @@ _DEFAULT_CONF: dict[str, str] = {
     # Call-site capture costs py4j round trips on every Column call;
     # see the module docstring.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Room for every registry query's generated classes (at the stock
+    # 100 large plans recompile on every run); see the module docstring.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 # In local mode the driver JVM *is* the executor: its heap is the

@@ -408,6 +408,35 @@ class TestCorpusDedupFunnel:
         toks = [out[s].n_tokens for s in sorted(out)]
         assert toks == sorted(toks, reverse=True)
 
+    def test_job_descriptions_label_the_workers_only(self, spark):
+        """Each cache-force worker's jobs carry its own description, and
+        the caller's description is the same after the funnel as before."""
+        from bigdata_logs_spark.caching import release_caches
+        from bigdata_logs_spark.operators import pipeline as PL
+
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()
+        docs = _docs(spark, ["one two three", "one two three", "four five"])
+        first_job = jsc.dagScheduler().nextJobId()
+        sc.setJobDescription("caller")
+        try:
+            PL.corpus_dedup_funnel(docs)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+            release_caches()
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        store = jsc.statusStore()
+        descs = set()
+        for jid in range(first_job, jsc.dagScheduler().nextJobId()):
+            d = store.job(jid).description()
+            descs.add(d.get() if d.isDefined() else None)
+        assert descs == {
+            "caller",
+            "funnel: token-count cache",
+            "funnel: digest cache",
+        }
+
     def test_every_failure_surfaces(self, spark):
         """The main path and both cache-force threads read one poisoned
         text column: all three errors are raised together, none is

@@ -5,7 +5,8 @@ Pins the local-mode driver-heap sizing logic, with no SparkSession:
 (cgroup-v2 cap first, else /proc/meminfo MemTotal) so a smaller or
 container-limited host isn't OOM-killed, with $SPARK_GRAFT_DRIVER_MEM
 overriding unclamped. Also pins that the engine session runs with
-PySpark's per-Column call-site capture off.
+PySpark's per-Column call-site capture off and with a codegen cache
+that holds the registry's generated classes.
 """
 
 from __future__ import annotations
@@ -100,3 +101,10 @@ def test_call_site_capture_is_off(spark):
     conf = "spark.python.sql.dataFrameDebugging.enabled"
     assert spark.conf.get(conf) == "false"
     assert is_debugging_enabled() is False
+
+
+def test_codegen_cache_holds_the_registry(spark):
+    # At the stock 100 entries, large-plan registry queries recompile
+    # their generated classes on every run (session.py).
+    conf = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(conf) == "8192"
