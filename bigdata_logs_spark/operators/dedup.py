@@ -435,6 +435,16 @@ def near_dup_pairs(
     doc_id) triples shuffle, ONCE, into the bucket-membership groupBy
     (_bucket_pair_rows); pathological bucket occupancy is capped
     before any pair expansion."""
+    return _near_dup_pair_rows(docs, n_bands, threshold).orderBy(
+        "doc_a", "doc_b"
+    )
+
+
+def _near_dup_pair_rows(
+    docs: DataFrame, n_bands: int = N_BANDS, threshold: float = 0.05
+) -> DataFrame:
+    """``near_dup_pairs`` without its presentation sort: the
+    (doc_a, doc_b, jaccard) rows that consumers build on."""
     # One tokenize+shingle explode per query, not one per leg: below
     # the scope threshold the verify leg consumes the FULL distinct-
     # gram relation anyway, so the signature build shares the same
@@ -518,15 +528,11 @@ def near_dup_pairs(
         "doc_b",
     )
     union = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
-    return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("n_inter").cast("double") / union, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("doc_a", "doc_b")
-    )
+    return joined.select(
+        "doc_a",
+        "doc_b",
+        F.round(F.col("n_inter").cast("double") / union, 4).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def simhash_near_dup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -619,46 +625,25 @@ def near_dup_components(
     driver-side loop holds only a converged? flag per round — no
     data is collected.
 
-    Lineage control, checkpoint-block hygiene, and the
-    converge-or-raise contract live in the shared driver loop
-    (``iterate.propagate_min_labels``) — one implementation for every
-    iterative label algorithm in the engine.
+    The first round is seeded from the symmetric edge list itself
+    (``least(doc, min(neighbour))`` per endpoint), so the loop runs one
+    checkpointed round fewer; ``max_iter`` still bounds the
+    label-changing rounds, the seeded one included: a chain whose far
+    end is ``d`` hops from its minimum converges at ``max_iter=d`` and
+    raises at ``d - 1``. The edge list, seed, lineage control,
+    checkpoint-block hygiene and the converge-or-raise contract live
+    in ``iterate.pair_components`` — one implementation for every
+    pair-list component algorithm in the engine.
     """
+    from bigdata_logs_spark.operators.iterate import pair_components
 
-    from bigdata_logs_spark.operators.iterate import propagate_min_labels
-
-    pairs = (
-        near_dup_pairs(docs, threshold=threshold)
-        .select("doc_a", "doc_b")
-        .transform(tracked_cache)
+    labels = pair_components(
+        _near_dup_pair_rows(docs, threshold=threshold).select("doc_a", "doc_b"),
+        key="doc_id",
+        label="component",
+        max_iter=max_iter,
     )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).transform(tracked_cache)
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-    )
-
-    def neighbor_min(cur):
-        return (
-            edges.join(
-                cur.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("component").alias("nbr_component"),
-                ),
-                "doc_b",
-            )
-            .groupBy("doc_a")
-            .agg(F.min("nbr_component").alias("nbr_min"))
-            .withColumnRenamed("doc_a", "doc_id")
-        )
-
-    labels = propagate_min_labels(
-        labels, neighbor_min, key="doc_id", label="component", max_iter=max_iter
-    )
-    out = (
+    return (
         docs.select("doc_id")
         .join(labels, "doc_id", "left")
         .select(
@@ -667,7 +652,6 @@ def near_dup_components(
         )
         .orderBy("doc_id")
     )
-    return out
 
 
 def incremental_near_dup(
@@ -1233,7 +1217,7 @@ def dedup_tier_agreement(docs: DataFrame, max_group: int = 64) -> DataFrame:
             F.col("b.doc_id").alias("doc_b"),
         )
     )
-    mh_pairs = near_dup_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    mh_pairs = _near_dup_pair_rows(docs, threshold=0.5).select("doc_a", "doc_b")
     sh_pairs = simhash_near_dup(docs).select("doc_a", "doc_b")
     # cache: the 3-tier union feeds THREE consumers below (the size
     # aggregate and both sides of the intersection self-join); without

@@ -31,7 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_logs_spark.caching import track_checkpoint_rdd
+from bigdata_logs_spark.caching import track_checkpoint_rdd, tracked_cache
 
 
 def _checkpoint_rdd(ck: DataFrame):
@@ -48,7 +48,8 @@ def propagate_min_labels(
 ) -> DataFrame:
     """Run min-label propagation to a fixed point.
 
-    ``labels``: (key, label) — the initial assignment (label = key).
+    ``labels``: (key, label) — the initial assignment (label = key,
+    or an already propagated round such as ``pair_components``' seed).
     ``neighbor_min(labels)``: one propagation step — returns
     (key, nbr_min) with each key's minimum label over its neighbors;
     the graph shape (direct pair list, bipartite two-hop, ...) lives
@@ -97,3 +98,49 @@ def propagate_min_labels(
         f"min-label propagation did not converge in {max_iter} rounds "
         "(component diameter exceeds the iteration budget; raise max_iter)"
     )
+
+
+def pair_components(
+    pairs: DataFrame, key: str, label: str, max_iter: int
+) -> DataFrame:
+    """Connected components of the undirected graph whose edges are
+    the rows of ``pairs`` (two node columns): (key, label) for every
+    node in some pair, label = the minimum node of its component.
+
+    The symmetric edge list is one ``inline`` of (a, b), (b, a) per
+    pair and the only cached relation. The first propagation round is
+    seeded straight from it: a node's round-1 label is
+    ``least(node, min(neighbour))``, one aggregation that needs no
+    label relation to join against. The loop then starts from that
+    seed with ``max_iter - 1`` rounds, so ``max_iter`` still bounds
+    the label-changing rounds and one ``localCheckpoint`` + ``isEmpty``
+    round fewer runs.
+    """
+    a, b = pairs.columns
+    edges = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+                F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+            )
+        )
+    ).transform(tracked_cache)
+    seed = (
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias(label))
+        .withColumnRenamed("src", key)
+    )
+
+    def neighbor_min(cur: DataFrame) -> DataFrame:
+        return (
+            edges.join(
+                cur.select(
+                    F.col(key).alias("dst"), F.col(label).alias("nbr_label")
+                ),
+                "dst",
+            )
+            .groupBy(F.col("src").alias(key))
+            .agg(F.min("nbr_label").alias("nbr_min"))
+        )
+
+    return propagate_min_labels(seed, neighbor_min, key, label, max_iter - 1)

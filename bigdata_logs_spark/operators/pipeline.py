@@ -757,108 +757,60 @@ def corpus_dedup_funnel(docs: DataFrame) -> DataFrame:
     tier's survivors, so the funnel composes the already-certified
     DD-1/DD-16/DD-5 semantics rather than re-deriving them.
 
-    Scale shape: tiers 1-2 shuffle 128-bit digests only; tier 3 joins
-    the survivor id set against the component labels (both metadata-
-    sized); token counts ride as one integer per doc from a single
-    corpus scan. Four result rows.
+    Scale shape: one pass over narrow (doc_id, n_tok, raw_h, norm_h,
+    component) rows — the two 128-bit digests and the token count
+    come from a single corpus read, joined to the DD-8 component
+    labels. Each tier is a ``min(doc_id) OVER (PARTITION BY key)``
+    window restricted to the prior tier's keepers (keys raw_h, then
+    norm_h, then component), so nothing is cached and no survivor id
+    set is joined back. The trade-off is skew: one digest group (a
+    boilerplate page copied a million times) or one giant component
+    is one window partition, but of narrow rows, and the window
+    spills. One global aggregate of conditional counts and sums then
+    yields all four tiers, and ``inline`` turns it into the four
+    result rows.
     """
+    from pyspark.sql import Window
+
     from bigdata_logs_spark.operators import dedup as DD
     from bigdata_logs_spark.operators.textops import with_tokens
 
-    toks = tracked_cache(
-        with_tokens(docs).select("doc_id", F.size("tokens").alias("n_tok"))
-    )
-    hashes = tracked_cache(
-        docs.select(
+    comp = DD.near_dup_components(docs, threshold=0.5)
+    tiers = (
+        with_tokens(docs)
+        .select(
             "doc_id",
+            F.size("tokens").alias("n_tok"),
             F.md5(F.col("text")).alias("raw_h"),
             F.md5(DD.norm_text_col()).alias("norm_h"),
         )
+        .join(comp, "doc_id")
+        .withColumn("0_raw", F.lit(True))
     )
-    s1 = hashes.groupBy("raw_h").agg(F.min("doc_id").alias("doc_id")).select(
-        "doc_id"
-    )
-    s2 = (
-        hashes.join(s1, "doc_id")
-        .groupBy("norm_h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # Overlap independent jobs (guide §2.6): near_dup_components runs
-    # a blocking driver-side label-propagation loop over the TINY pair
-    # list, leaving most executor slots idle for its duration. The two
-    # corpus-scan caches above don't depend on it, so materialize them
-    # from a small thread pool while the loop runs — the final
-    # aggregation then reads warm blocks. Spark's scheduler interleaves
-    # the concurrent jobs' tasks (FIFO back-fill); results are
-    # unaffected because the threads only force caches the plan below
-    # consumes anyway, and both are joined before this function
-    # returns so cache-release discipline sees a quiesced query.
-    from pyspark import InheritableThread
-
-    sc = docs.sparkSession.sparkContext
-    errors: list[BaseException] = []
-
-    def _force(df: DataFrame) -> None:
-        try:
-            df.count()
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errors.append(e)
-
-    # InheritableThread (not a bare pool thread): its local properties
-    # (job group/tags for harness cancellation, the job description)
-    # are a copy of this thread's taken at start(). So each worker's
-    # description is set here just before its start, and this thread's
-    # own description is restored once, after both have started; no
-    # thread sets a property another thread reads.
-    main_desc = sc.getLocalProperty("spark.job.description")
-    workers = []
-    for df, desc in (
-        (toks, "funnel: token-count cache"),
-        (hashes, "funnel: digest cache"),
+    prev = "0_raw"
+    for stage, key in (
+        ("1_exact", "raw_h"),
+        ("2_normalized", "norm_h"),
+        ("3_near_dup", "component"),
     ):
-        sc.setJobDescription(desc)
-        worker = InheritableThread(target=_force, args=(df,))
-        worker.start()
-        workers.append(worker)
-    sc.setJobDescription(main_desc)
-    try:
-        comp = DD.near_dup_components(docs, threshold=0.5).select(
-            "doc_id", "component"
+        first = F.min(F.when(F.col(prev), F.col("doc_id"))).over(
+            Window.partitionBy(key)
         )
-    except BaseException as e:  # noqa: BLE001 — re-raised below
-        errors.insert(0, e)
-    finally:
-        for w in workers:
-            w.join()
-    # every failure surfaces: the main path's first, then the workers'
-    if len(errors) > 1:
-        raise BaseExceptionGroup("corpus_dedup_funnel failed", errors)
-    if errors:
-        raise errors[0]
-    s3 = (
-        s2.join(comp, "doc_id")
-        .groupBy("component")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-
-    def leg(stage: str, ids: DataFrame | None) -> DataFrame:
-        base = toks if ids is None else toks.join(ids, "doc_id")
-        return base.agg(
+        tiers = tiers.withColumn(stage, F.col(prev) & (F.col("doc_id") == first))
+        prev = stage
+    rows = [
+        F.struct(
             F.lit(stage).alias("stage"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
+            F.count(F.when(F.col(stage), 1)).alias("n_docs"),
+            F.sum(F.when(F.col(stage), F.col("n_tok"))).alias("n_tokens"),
         )
-
-    out = leg("0_raw", None)
-    for stage, ids in (
-        ("1_exact", s1),
-        ("2_normalized", s2),
-        ("3_near_dup", s3),
-    ):
-        out = out.unionByName(leg(stage, ids))
-    return out.orderBy("stage")
+        for stage in ("0_raw", "1_exact", "2_normalized", "3_near_dup")
+    ]
+    return (
+        tiers.agg(F.array(*rows).alias("rows"))
+        .select(F.inline("rows"))
+        .orderBy("stage")
+    )
 
 
 def epoch_shuffle_shards(

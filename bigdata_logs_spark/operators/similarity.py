@@ -1265,12 +1265,12 @@ def semantic_dedup(
     the cell id — no cross-cell candidates by construction, the
     SemDeDup design point that keeps a billion-vector corpus
     tractable); components run through the shared
-    ``iterate.propagate_min_labels`` loop ON THE PAIR LIST ONLY;
+    ``iterate.pair_components`` loop ON THE PAIR LIST ONLY;
     centroids collapse to one broadcast row set. The final left join
     attaching singleton labels is the only corpus-wide pass.
     """
     from bigdata_logs_spark.caching import tracked_cache
-    from bigdata_logs_spark.operators.iterate import propagate_min_labels
+    from bigdata_logs_spark.operators.iterate import pair_components
 
     n = emb.select(
         "vec_id",
@@ -1304,41 +1304,18 @@ def semantic_dedup(
         a.join(b, "cell")
         .filter(F.col("u") < F.col("v"))
         .filter(
-            # stays on the fold _dot: the pair table is cached, so
-            # the filter executes once per session while the unrolled
-            # form would tax every RE-construction with its plan-size
-            # analysis cost (measured flat-to-worse here)
+            # stays on the fold _dot: the edge list built from the
+            # pairs is cached, so the filter executes once per session
+            # while the unrolled form would tax every RE-construction
+            # with its plan-size analysis cost (measured flat-to-worse
+            # here)
             F.round(_dot("e_u", "e_v") / (F.col("n_u") * F.col("n_v")), 6)
             >= threshold
         )
         .select("u", "v")
-        .transform(tracked_cache)
     )
-    edges = pairs.union(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(tracked_cache)
-    labels = (
-        edges.select(F.col("u").alias("vec_id"))
-        .distinct()
-        .withColumn("component", F.col("vec_id"))
-    )
-
-    def neighbor_min(cur):
-        return (
-            edges.join(
-                cur.select(
-                    F.col("vec_id").alias("v"),
-                    F.col("component").alias("nbr_component"),
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("nbr_component").alias("nbr_min"))
-            .withColumnRenamed("u", "vec_id")
-        )
-
-    comp = propagate_min_labels(
-        labels, neighbor_min, key="vec_id", label="component", max_iter=max_iter
+    comp = pair_components(
+        pairs, key="vec_id", label="component", max_iter=max_iter
     )
     labeled = withc.join(comp, "vec_id", "left").select(
         "vec_id",

@@ -61,10 +61,13 @@ def test_every_rep_runs_jobs_and_releases_caches(spark, sf_dir, monkeypatch):
 
 
 def test_repeated_funnel_reuses_its_generated_classes(spark, sf_dir):
-    # The funnel generates about 160 classes, more than Spark's stock
-    # codegen cache holds, so there every rep recompiled all of them.
-    # A repeat rep may still compile a few plan variants (10-18 seen).
+    # The funnel generates about 120 classes, more than Spark's stock
+    # codegen cache holds, so there every rep recompiles all of them.
+    # A repeat rep may still compile a few plan variants that AQE's
+    # re-planning picks (0-6 seen). A warm rep runs 26 jobs; before
+    # the one-pass tiers and the seeded components it ran 55.
     first, second = (
         bench.measure(spark, sf_dir, "corpus_dedup_funnel") for _ in range(2)
     )
     assert second["compiles"] <= 40, (first, second)
+    assert second["jobs"] <= 30, (first, second)

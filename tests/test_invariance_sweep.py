@@ -11,7 +11,7 @@ sibling on the same data must pass.
 
 from __future__ import annotations
 
-from bigdata_logs_spark.registry import QuerySpec
+from bigdata_logs_spark.registry import REGISTRY, QuerySpec
 from tools.oracle_check import HOSTILE, check_query, oracle_connection
 
 
@@ -66,3 +66,25 @@ def test_sweep_detects_partition_dependent_canary(spark, sf_dir):
     assert problems["ok"] == []
     assert len(problems["canary"]) == 1, problems
     assert "value-hash mismatch" in problems["canary"][0]
+
+
+def test_approx_distinct_counts_ignore_the_plan(spark, sf_dir):
+    """``global_metrics_approx`` is rows-only in the contract (Spark's
+    HLL++ has no DuckDB twin), so the hostile contract run checks only
+    its row count. Its sketches merge by register max, which does not
+    depend on how rows are partitioned or in which order partial
+    aggregates combine: the rows must be identical at the session's
+    defaults and under ``HOSTILE``, and the conf is restored after."""
+    fn = REGISTRY["global_metrics_approx"].fn
+    defaults = {k: spark.conf.get(k) for k in HOSTILE}
+    at_defaults = fn(spark, sf_dir).collect()
+    try:
+        for k, v in HOSTILE.items():
+            spark.conf.set(k, v)
+        hostile = fn(spark, sf_dir).collect()
+    finally:
+        for k, v in defaults.items():
+            spark.conf.set(k, v)
+    assert {k: spark.conf.get(k) for k in HOSTILE} == defaults
+    assert hostile == at_defaults
+    assert at_defaults[0]["total_records"] > 0

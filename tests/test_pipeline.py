@@ -134,6 +134,43 @@ def test_components_merge_chains(docs):
     assert all(comp[d] == d for d in comp if d not in paired)
 
 
+def test_components_iteration_budget_counts_the_seeded_round(spark):
+    """A chain 0-1-2-3-4 of 10-word windows shifted by 2 words: next
+    neighbours share 6 of 10 distinct 3-word shingles (Jaccard 0.6),
+    documents two apart 4 of 12 (0.33), so the near-dup graph is the
+    path itself and its far end is 4 hops from its minimum. The seeded
+    first round counts against ``max_iter``: 4 rounds converge to one
+    component labelled 0, 3 raise."""
+    from pyspark.sql import Row
+
+    from bigdata_logs_spark.caching import release_caches
+    from bigdata_logs_spark.operators.dedup import near_dup_components
+
+    hops = 4
+    words = [f"w{i}" for i in range(2 * hops + 10)]
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=i, text=" ".join(words[2 * i : 2 * i + 10]))
+            for i in range(hops + 1)
+        ]
+        + [Row(doc_id=hops + 1, text="an unrelated singleton document")]
+    )
+    pairs = {
+        (r.doc_a, r.doc_b) for r in near_dup_pairs(docs, threshold=0.5).collect()
+    }
+    assert pairs == {(i, i + 1) for i in range(hops)}
+    try:
+        comp = near_dup_components(docs, max_iter=hops).collect()
+        assert {(r.doc_id, r.component) for r in comp} == {
+            *((i, 0) for i in range(hops + 1)),
+            (hops + 1, hops + 1),
+        }
+        with pytest.raises(RuntimeError, match="did not converge"):
+            near_dup_components(docs, max_iter=hops - 1)
+    finally:
+        release_caches()
+
+
 def test_compact_parquet_preserves_data_and_reduces_files(
     spark, events, tmp_path
 ):
