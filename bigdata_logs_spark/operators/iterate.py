@@ -96,7 +96,8 @@ def propagate_min_labels(
     prev_snapshot.unpersist(False)
     raise RuntimeError(
         f"min-label propagation did not converge in {max_iter} rounds "
-        "(component diameter exceeds the iteration budget; raise max_iter)"
+        "after the initial labels (component diameter exceeds the "
+        "iteration budget; raise max_iter)"
     )
 
 

@@ -24,11 +24,10 @@ Defaults are chosen for correctness-at-scale first:
   (``spark.sql.codegen.cache.maxEntries``, also static). Spark keeps
   compiled whole-stage classes in an LRU of that many entries, 100 by
   default. One ``corpus_dedup_funnel`` run generates about 120 (117-127
-  at sf0.001; 161-168 before its one-pass rewrite), and an LRU smaller
-  than a cyclic working set misses on every access, so at 100 the
-  funnel recompiles all of them on every run (about 0.8 s of its 3.7 s
-  in perfbench ``curation`` before that rewrite) and evicts the other
-  queries' classes. Run back to back at 100, 13 registry queries recompiled
+  at sf0.001), and an LRU smaller than a cyclic working set misses on
+  every access, so at 100 the funnel recompiles all of them on every
+  run and evicts the other queries' classes. Run back to back at 100,
+  13 registry queries recompiled
   21-157 classes on every repeat run. One round-robin ``bench.py``
   sweep of the registry at sf0.01 on 4 cores compiled 3,887 distinct
   classes in its first pass, and its two timed passes then compiled

@@ -64,8 +64,7 @@ def test_repeated_funnel_reuses_its_generated_classes(spark, sf_dir):
     # The funnel generates about 120 classes, more than Spark's stock
     # codegen cache holds, so there every rep recompiles all of them.
     # A repeat rep may still compile a few plan variants that AQE's
-    # re-planning picks (0-6 seen). A warm rep runs 26 jobs; before
-    # the one-pass tiers and the seeded components it ran 55.
+    # re-planning picks (0-6 seen). A warm rep runs 26 jobs.
     first, second = (
         bench.measure(spark, sf_dir, "corpus_dedup_funnel") for _ in range(2)
     )
